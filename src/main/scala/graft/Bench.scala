@@ -48,36 +48,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "180").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalesces shuffles by INPUT size and cannot see that the next
-      // stage multiplies rows (ANN bucket joins emit ~bucket×nprobe rows
-      // per query row, posexplode emits k rows per user): a few-MB
-      // shuffle would collapse to 1 partition and run the multiplied
-      // stage on one core. 64k floors keep small-but-explosive shuffles
-      // parallel; at real scale partitions dwarf 64k and this is a no-op.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // TypedImperativeAggregates (the bounded-heap top-k) fall back to
-      // SORT-BASED aggregation beyond 128 distinct keys per partition by
-      // default — an external sort of every pair row. 128k keys × ~2 KB
-      // heap buffer ≈ 256 MB worst case per partition, well within the
-      // executor budget, and keeps top-k hash-aggregated. Measured 3× on
-      // the flagship pipeline (61 s → 21 s cold at sf0.1/local[16]).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the in-memory app-status store grows with every job/stage/SQL
-      // execution of a 112-query run even with the UI off; trimming the
-      // retained history keeps late-alphabet queries' per-job scheduling
-      // latency flat instead of drifting up with accumulated state
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
 
     // warmup: JVM/codegen/FS metadata, not counted (events needs the
     // dtype-aware loader). Per-table try/catch: a broken loader must cost
@@ -401,5 +372,43 @@ object Bench {
     } else System.err.println(
       s"[bench] selective run — skipped writing $artPath")
     spark.stop()
+  }
+
+  /** The benchmark's session on `local[cpus]`: its planner settings
+    * (AQE floors, top-k aggregation threshold) are the ones the board
+    * times, so every entry point that serves the same plans builds its
+    * session here. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      // AQE coalesces shuffles by INPUT size and cannot see that the next
+      // stage multiplies rows (ANN bucket joins emit ~bucket×nprobe rows
+      // per query row, posexplode emits k rows per user): a few-MB
+      // shuffle would collapse to 1 partition and run the multiplied
+      // stage on one core. 64k floors keep small-but-explosive shuffles
+      // parallel; at real scale partitions dwarf 64k and this is a no-op.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      // TypedImperativeAggregates (the bounded-heap top-k) fall back to
+      // SORT-BASED aggregation beyond 128 distinct keys per partition by
+      // default — an external sort of every pair row. 128k keys × ~2 KB
+      // heap buffer ≈ 256 MB worst case per partition, well within the
+      // executor budget, and keeps top-k hash-aggregated. Measured 3× on
+      // the flagship pipeline (61 s → 21 s cold at sf0.1/local[16]).
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // the in-memory app-status store grows with every job/stage/SQL
+      // execution of a 112-query run even with the UI off; trimming the
+      // retained history keeps late-alphabet queries' per-job scheduling
+      // latency flat instead of drifting up with accumulated state
+      .config("spark.ui.retainedJobs", "200")
+      .config("spark.ui.retainedStages", "200")
+      .config("spark.ui.retainedTasks", "10000")
+      .config("spark.sql.ui.retainedExecutions", "16")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

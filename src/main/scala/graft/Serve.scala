@@ -28,14 +28,8 @@ object Serve {
 
   def main(args: Array[String]): Unit = {
     val Array(ensembleDir, requestsPath, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the benchmark's session, so a submitted job serves the plan it times
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     try score(spark, ensembleDir, requestsPath, outDir)
     finally spark.stop()
   }

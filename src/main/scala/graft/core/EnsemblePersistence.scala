@@ -6,6 +6,8 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.JsonDSL._
 import java.nio.file.{Files, Paths}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import graft.ops._
 
 /** Ensemble save/load — the analog of the reference's cloudpickle +
@@ -62,6 +64,19 @@ object EnsemblePersistence {
   def load(registry: ModelRegistry, spark: SparkSession): Ensemble =
     load(registry.artifactUri, spark)
 
+  /** Re-instantiate a saved graph. Serving ops keep their side tables
+    * resident for the life of the returned graph, like the reference
+    * server loading each model's artifacts once in `initialize`: a
+    * [[graft.ops.QueryFeatureStore]] view becomes a broadcast key → row
+    * table, an [[graft.ops.AnnLsh]] / [[graft.ops.AnnIvf]] catalog a
+    * broadcast list → items table built once with the persisted center
+    * or centroids — one collect job each, here. A local request with
+    * distinct ids then runs as one narrow job (no join, no exchange).
+    * Each table is bounded by `spark.sql.autoBroadcastJoinThreshold`
+    * (the size at which Spark stops broadcasting a join side); a larger
+    * one, like every other side artifact, stays a lazy parquet read
+    * served by the relational plan. Spark's ContextCleaner releases
+    * the broadcasts once the graph is unreachable. */
   def load(dir: String, spark: SparkSession): Ensemble = {
     implicit val fmts: Formats = DefaultFormats
     val meta = JsonMethods.parse(Files.readString(Paths.get(dir, "metadata.json")))
@@ -73,8 +88,25 @@ object EnsemblePersistence {
       System.err.println(s"[ensemble] WARNING: saved under Spark $sv, loading under ${spark.version}")
     val schema = org.apache.spark.sql.types.DataType.fromJson(
       (meta \ "input_schema_json").extract[String]).asInstanceOf[StructType]
-    val ops = (meta \ "ops").extract[List[JObject]].map(o => instantiate(o, spark))
+    // ops load concurrently: each serving op's artifact read and
+    // resident build (one collect job) overlaps the others'
+    val specs = (meta \ "ops").extract[List[JObject]]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, specs.size))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val ops = try specs.map(o => Future(withResidentTable(instantiate(o, spark))))
+      .map(Await.result(_, Duration.Inf))
+    finally pool.shutdown()
     Ensemble(ops, schema)
+  }
+
+  /** A serving op with its side table made resident; nested graphs
+    * recurse. */
+  private def withResidentTable(op: EnsembleOp): EnsembleOp = op match {
+    case q: QueryFeatureStore => q.withResidentTable
+    case a: AnnLsh => a.withResidentTable
+    case a: AnnIvf => a.withResidentTable
+    case e: Ensemble => e.copy(ops = e.ops.map(withResidentTable))
+    case other => other
   }
 
   // ---- per-op (de)serialization ---------------------------------------

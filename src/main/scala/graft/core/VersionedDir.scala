@@ -32,6 +32,17 @@ object VersionedDir {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** `fs.rename` that fails loudly: Hadoop's `FileSystem.rename` reports
+    * some failures (missing source, existing destination, an object
+    * store's partial move) by returning false instead of throwing. A
+    * commit that ignored the result would go on to publish a manifest
+    * naming a delta that never landed; throwing here stops the commit
+    * before any manifest, txn marker or pointer is written. */
+  def renameOrFail(fs: org.apache.hadoop.fs.FileSystem,
+      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"rename $src -> $dst returned false")
+
   /** All lines of `<dir>/_LATEST` (empty if the pointer is missing):
     * line 0 is the live version name; any further lines are an opaque
     * TRAILER a committer may attach ([[writePointer]]'s `trailer`) —

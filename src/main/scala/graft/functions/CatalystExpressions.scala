@@ -3,8 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -1288,6 +1290,148 @@ case class BpeTokens(child: Expression, merges: Seq[(String, String)])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
+/** Keyed lookup into a resident [[KeyedTable]]: field `ordinal` of the
+  * row stored under `key`, NULL for a null key, a key with no row, or a
+  * null field — a broadcast left join's per-row result, with no join in
+  * the plan. Tasks reach the table only through the broadcast handle,
+  * resolved once per deserialized expression. */
+case class KeyedLookup(key: Expression, table: Broadcast[KeyedTable], ordinal: Int,
+    dataType: DataType) extends UnaryExpression {
+
+  override def child: Expression = key
+  override def nullable: Boolean = true
+  override def prettyName: String = "keyed_lookup"
+
+  @transient private lazy val resident = table.value
+
+  def row(k: AnyRef): InternalRow = resident.row(k)
+
+  override def nullSafeEval(k: Any): Any = {
+    val r = row(KeyedTable.key(k))
+    if (r == null || r.isNullAt(ordinal)) null else r.get(ordinal, dataType)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("keyedLookup", this)
+    nullSafeCodeGen(ctx, ev, k => {
+      val boxed =
+        if (KeyedTable.integral(key.dataType)) s"java.lang.Long.valueOf((long) $k)"
+        else if (CodeGenerator.isPrimitiveType(key.dataType))
+          s"${CodeGenerator.boxedType(key.dataType)}.valueOf($k)"
+        else k
+      val r = ctx.freshName("row")
+      s"""
+         |InternalRow $r = $ref.row($boxed);
+         |if ($r == null || $r.isNullAt($ordinal)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = ${CodeGenerator.getValue(r, dataType, ordinal.toString)};
+         |}
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(c: Expression) = copy(key = c)
+}
+
+/** Probe-and-top-k against a resident [[AnnTable]]: route the query
+  * vector with the table's [[LshBucket]] / [[NearestCids]] kernel, score
+  * every item of the probed lists with [[ArrayDotProduct]]'s arithmetic
+  * (or cosine over it), and keep the best `k` through
+  * [[TopKAggregator]]'s own `reduce` (score desc, id asc, NaN dropped):
+  * the per-row equivalent of the relational probe join + top-k groupBy
+  * for a request whose ids are distinct.
+  *
+  * Returns an array of zero or one `(candidate_ids, candidate_scores)`
+  * structs, for `inline`: zero for a null vector, and — unless
+  * `keepEmpty` — when the probed lists hold no item (the inner probe
+  * join's dropped row); otherwise one, with empty arrays when nothing
+  * scored. */
+case class AnnProbeTopK(child: Expression, table: Broadcast[AnnTable], k: Int,
+    keepEmpty: Boolean) extends UnaryExpression {
+
+  require(k >= 1, "ann_probe_topk: k >= 1")
+
+  override def dataType: DataType = AnnProbeTopK.dataType
+  override def nullable: Boolean = false
+  override def prettyName: String = "ann_probe_topk"
+
+  @transient private lazy val resident = table.value
+  @transient private lazy val route = resident.routing.router(child.dataType)
+  @transient private lazy val topk = new TopKAggregator(k)
+  @transient private lazy val elemType = child.dataType match {
+    case ArrayType(t, _) => t
+    case t => t
+  }
+
+  def compute(v: ArrayData): ArrayData = {
+    if (v == null) return AnnProbeTopK.noRow
+    val probes = route(v)
+    if (probes == null) return if (keepEmpty) AnnProbeTopK.emptyRow else AnnProbeTopK.noRow
+    val q = AnnTable.doubles(v, elemType)
+    val cosine = resident.metric == "cosine"
+    val qn = if (cosine && q != null) math.sqrt(AnnTable.dot(q, q)) else 0.0
+    var buf = topk.zero
+    var joined = 0
+    var p = 0
+    while (p < probes.length) {
+      val l = resident.list(probes(p))
+      if (l != null) {
+        joined += l.ids.length
+        var j = 0
+        while (q != null && j < l.ids.length) {
+          val it = l.vecs(j)
+          // VectorFunctions.cosine: 0 for a zero denominator, else dot/denom
+          val s =
+            if (!cosine) AnnTable.dot(q, it)
+            else if (it == null) Double.NaN
+            else {
+              val denom = qn * l.norms(j)
+              if (denom == 0.0) 0.0 else AnnTable.dot(q, it) / denom
+            }
+          buf = topk.reduce(buf, (l.ids(j), s))
+          j += 1
+        }
+      }
+      p += 1
+    }
+    if (joined == 0 && !keepEmpty) AnnProbeTopK.noRow
+    else {
+      val top = topk.finish(buf)
+      AnnProbeTopK.oneRow(top.ids, top.scores)
+    }
+  }
+
+  override def eval(input: InternalRow): Any =
+    compute(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("annProbe", this)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  $ref.compute(${c.isNull} ? null : ${c.value});""".stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+object AnnProbeTopK {
+  val dataType: DataType = ArrayType(StructType(Seq(
+    StructField("candidate_ids", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("candidate_scores", ArrayType(DoubleType, containsNull = false), nullable = false))),
+    containsNull = false)
+
+  private def oneRow(ids: Array[Long], scores: Array[Double]): ArrayData =
+    new GenericArrayData(Array[Any](InternalRow(
+      UnsafeArrayData.fromPrimitiveArray(ids), UnsafeArrayData.fromPrimitiveArray(scores))))
+
+  private val noRow: ArrayData = new GenericArrayData(Array.empty[Any])
+  private val emptyRow: ArrayData = oneRow(Array.empty, Array.empty)
+}
+
 /** Column wrappers (Spark 4: Column↔Expression bridge lives in
   * sql.classic.ExpressionUtils). */
 object FastExpressions {
@@ -1331,4 +1475,10 @@ object FastExpressions {
     column(NearestCids(expression(c), centers, n))
   def bpeTokens(c: Column, merges: Seq[(String, String)]): Column =
     column(BpeTokens(expression(c), merges))
+  def keyedLookup(key: Column, table: Broadcast[KeyedTable], ordinal: Int): Column =
+    column(KeyedLookup(expression(key), table, ordinal,
+      table.value.schema(ordinal).dataType))
+  def annProbeTopK(vec: Column, table: Broadcast[AnnTable], k: Int,
+      keepEmpty: Boolean): Column =
+    column(AnnProbeTopK(expression(vec), table, k, keepEmpty))
 }

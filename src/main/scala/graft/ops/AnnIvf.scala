@@ -3,8 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.broadcast.Broadcast
 import graft.core.EnsembleOp
-import graft.functions.{TopKAggregator, VectorFunctions}
+import graft.functions.{AnnTable, IvfRouting, TopKAggregator, VectorFunctions}
 
 /** IVF approximate nearest neighbour — the literal analog of the
   * reference's `IVF32,Flat` FAISS index with `nprobe` probing
@@ -22,6 +23,18 @@ import graft.functions.{TopKAggregator, VectorFunctions}
   * global sort). Versus [[AnnLsh]]: trained centroids adapt to the data
   * distribution (clustered catalogs get balanced lists where fixed
   * hyperplanes need centering), at the price of a k-means fit.
+  *
+  * Resident serving: [[withResidentTable]] (called by
+  * [[graft.core.EnsemblePersistence.load]]) assigns the catalog once,
+  * through [[AnnIvf.index]] with the persisted centroids, into a
+  * broadcast list → (ids, vectors) [[graft.functions.AnnTable]]. A
+  * request whose query ids are provably distinct and non-null (a local
+  * request, see [[Resident.annProbe]]) is then answered by one
+  * narrow [[graft.functions.AnnProbeTopK]] projection: same probes,
+  * scores and top-k order, empty arrays when the probed lists are empty,
+  * null-vector rows dropped. Any other input, an index above
+  * `spark.sql.autoBroadcastJoinThreshold`, and every in-memory op take
+  * the probe join below.
   */
 case class AnnIvf(
     items: DataFrame,
@@ -32,7 +45,8 @@ case class AnnIvf(
     itemVecCol: String = "embedding",
     k: Int = 10,
     nprobe: Int = 8,
-    metric: String = "dot") extends EnsembleOp {
+    metric: String = "dot",
+    resident: Option[Broadcast[AnnTable]] = None) extends EnsembleOp {
 
   require(centers.nonEmpty, s"$name: need at least one centroid")
   require(nprobe >= 1 && nprobe <= centers.size, s"$name: nprobe in [1, nlist]")
@@ -59,8 +73,18 @@ case class AnnIvf(
       StructField("candidate_scores", ArrayType(DoubleType))))
   }
 
+  private def routing = IvfRouting(centers, nprobe)
+
+  /** This op with its inverted lists held resident (see the class doc);
+    * itself when the index does not qualify. One collect job. */
+  def withResidentTable: AnnIvf =
+    Resident.annTable(AnnIvf.index(items, centers, itemIdCol, itemVecCol),
+      "__cid", routing, metric).fold(this)(t => copy(resident = Some(t)))
+
   override def transform(df: DataFrame): DataFrame =
-    transformIndexed(df, AnnIvf.index(items, centers, itemIdCol, itemVecCol))
+    Resident.annProbe(df, resident, routing, metric, queryIdCol, queryVecCol, k,
+      keepEmpty = true).getOrElse(
+        transformIndexed(df, AnnIvf.index(items, centers, itemIdCol, itemVecCol)))
 
   /** Probe a PREBUILT index table (the `(__item_id, __cid, __item_vec)`
     * shape [[AnnIvf.index]] emits, typically persisted parquet bucketed

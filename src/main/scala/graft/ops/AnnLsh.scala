@@ -3,8 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.broadcast.Broadcast
 import graft.core.EnsembleOp
-import graft.functions.{TopKAggregator, VectorFunctions}
+import graft.functions.{AnnTable, LshRouting, TopKAggregator, VectorFunctions}
 
 /** Approximate nearest neighbour via sign-random-projection LSH — the
   * scale path for [[TopKRetrieval]] when the item set cannot be broadcast
@@ -19,6 +20,18 @@ import graft.functions.{TopKAggregator, VectorFunctions}
   * shuffle-join on bucket id (items partition by bucket — co-located,
   * never all-pairs), then bounded-heap top-k per query. Recall rises with
   * `nprobe`; cost per query is |bucket|·nprobe instead of |items|.
+  *
+  * Resident serving: [[withResidentTable]] (called by
+  * [[graft.core.EnsemblePersistence.load]]) buckets the catalog once,
+  * through [[AnnLsh.index]] with the persisted center, into a broadcast
+  * bucket → (ids, vectors) [[graft.functions.AnnTable]]. A request whose
+  * query ids are provably distinct and non-null (a local request, see
+  * [[Resident.annProbe]]) is then answered by one narrow
+  * [[graft.functions.AnnProbeTopK]] projection: same probes, same
+  * scores, same top-k order, and a query whose probed buckets are empty
+  * still drops out. Any other input, an index above
+  * `spark.sql.autoBroadcastJoinThreshold`, and every in-memory op take
+  * the probe join below, which also merges duplicate query ids.
   */
 case class AnnLsh(
     items: DataFrame,
@@ -30,7 +43,8 @@ case class AnnLsh(
     numBits: Int = 8,
     nprobe: Int = 4,
     metric: String = "cosine",
-    center: Option[Seq[Double]] = None) extends EnsembleOp {
+    center: Option[Seq[Double]] = None,
+    resident: Option[Broadcast[AnnTable]] = None) extends EnsembleOp {
 
   require(nprobe >= 1 && nprobe <= numBits + 1, s"$name: nprobe in [1, numBits+1]")
 
@@ -68,9 +82,18 @@ case class AnnLsh(
   @transient lazy val resolvedCenter: Seq[Double] =
     center.getOrElse(VectorFunctions.meanVector(items, itemVecCol).toSeq)
 
+  private def routing = LshRouting(resolvedCenter, numBits, nprobe)
+
+  /** This op with its bucketed catalog held resident (see the class
+    * doc); itself when the index does not qualify. One collect job. */
+  def withResidentTable: AnnLsh =
+    Resident.annTable(AnnLsh.index(items, resolvedCenter, numBits, itemIdCol, itemVecCol),
+      "__bucket", routing, metric).fold(this)(t => copy(resident = Some(t)))
+
   override def transform(df: DataFrame): DataFrame =
-    transformIndexed(df,
-      AnnLsh.index(items, resolvedCenter, numBits, itemIdCol, itemVecCol))
+    Resident.annProbe(df, resident, routing, metric, queryIdCol, queryVecCol, k,
+      keepEmpty = false).getOrElse(transformIndexed(df,
+        AnnLsh.index(items, resolvedCenter, numBits, itemIdCol, itemVecCol)))
 
   /** Probe a PREBUILT bucket table (the `(__item_id, __item_vec,
     * __bucket)` shape [[AnnLsh.index]] emits — persisted parquet

@@ -3,7 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.broadcast.Broadcast
 import graft.core.{EnsembleOp, Tags}
+import graft.functions.{FastExpressions, KeyedTable}
 
 /** Point-lookup equi-join against a feature table — the Spark-native
   * `QueryFeast` (/root/reference/merlin/systems/dag/ops/feast.py:196-279):
@@ -14,6 +16,17 @@ import graft.core.{EnsembleOp, Tags}
   * The feature view is broadcast: at 100 TB the request side streams
   * map-side with zero shuffle as long as the dim table fits in executors;
   * for giant feature tables drop the hint and let AQE pick shuffle-hash.
+  *
+  * Resident serving: [[withResidentTable]] (called by
+  * [[graft.core.EnsemblePersistence.load]]) collects the view once into
+  * a broadcast key → row [[graft.functions.KeyedTable]]; `transform`
+  * then fetches each feature with a per-row
+  * [[graft.functions.KeyedLookup]] — a projection, no join, and the
+  * feature parquet is never re-read per request. Only with
+  * `broadcastDim`, a join-exact key type, unique non-null-keyed rows
+  * (a duplicated key would make the join emit one row per match) and a
+  * view within `spark.sql.autoBroadcastJoinThreshold`; otherwise, and
+  * for in-memory graphs, the join below serves.
   *
   * Edge semantics (EdgeCaseSpec pins these): an EMPTY request batch yields
   * an empty result with the declared schema — the reference raises here
@@ -28,7 +41,8 @@ case class QueryFeatureStore(
     featureCols: Seq[String] = Seq.empty,
     includeId: Boolean = false,
     outputPrefix: String = "",
-    broadcastDim: Boolean = true) extends EnsembleOp {
+    broadcastDim: Boolean = true,
+    resident: Option[Broadcast[KeyedTable]] = None) extends EnsembleOp {
 
   private def feats: Seq[String] =
     if (featureCols.nonEmpty) featureCols
@@ -62,11 +76,35 @@ case class QueryFeatureStore(
     if (includeId) joined else StructType(joined.filterNot(_.name == entityCol))
   }
 
+  /** This op with its view held resident (see the class doc); itself
+    * when the view does not qualify. One collect job. */
+  def withResidentTable: QueryFeatureStore =
+    if (!broadcastDim) this
+    else Resident.keyedTable(view).fold(this)(t => copy(resident = Some(t)))
+
   override def transform(df: DataFrame): DataFrame = {
-    val v = if (broadcastDim) broadcast(view) else view
-    val joined = df.join(v, Seq(entityCol), "left")
+    val joined = resident.filter(t => servesResident(t.value, df)) match {
+      case Some(t) =>
+        // the USING join's column order: key, other request columns, features
+        val in = Resident.boundary(df)
+        in.select((col(entityCol) +:
+          in.columns.filterNot(_ == entityCol).map(c => col("`" + c.replace("`", "``") + "`"))) ++
+          feats.zipWithIndex.map { case (c, i) =>
+            FastExpressions.keyedLookup(col(entityCol), t, i + 1)
+              .as(outputPrefix + c, featField(c).metadata)
+          }: _*)
+      case None =>
+        val v = if (broadcastDim) broadcast(view) else view
+        df.join(v, Seq(entityCol), "left")
+    }
     if (includeId) joined else joined.drop(entityCol)
   }
+
+  /** The table was built for this op's view, and request keys compare
+    * with its keys the way the join's coerced keys would. */
+  private def servesResident(t: KeyedTable, df: DataFrame): Boolean =
+    t.schema.fieldNames.toSeq == (entityCol +: feats.map(outputPrefix + _)) &&
+      KeyedTable.compatible(df.schema(entityCol).dataType, t.schema.head.dataType)
 }
 
 /** Point-in-time (as-of) feature join — the OFFLINE twin of

@@ -1184,7 +1184,7 @@ object StreamingOps {
         val delta = "d" + v.drop(1)
         // delta + metadata all materialize BEFORE the pointer moves;
         // deltas are write-once, so the write never overlaps any reader
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
+        graft.core.VersionedDir.renameOrFail(fs, new org.apache.hadoop.fs.Path(tmp),
           new org.apache.hadoop.fs.Path(s"$indexDir/deltas/$delta"))
         // the dfreq delta derives from the postings JUST WRITTEN — a
         // per-term count over the small on-disk delta — instead of the
@@ -1357,7 +1357,7 @@ object StreamingOps {
     val live = latestVersion(spark, indexDir)
     val v = graft.core.VersionedDir.reserveNextVersion(spark, indexDir)
     val delta = "d" + v.drop(1)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp),
+    graft.core.VersionedDir.renameOrFail(fs, new org.apache.hadoop.fs.Path(tmp),
       new org.apache.hadoop.fs.Path(s"$indexDir/deltas/$delta"))
     // per-delta bucket histogram (O(min(batch, buckets)) rows — counted
     // from the batch alone, never the accumulated index)
@@ -2525,7 +2525,7 @@ object StreamingOps {
           else {
             val v = graft.core.VersionedDir.reserveNextVersion(spark, stateDir)
             val delta = "d" + v.drop(1)
-            fs.rename(new org.apache.hadoop.fs.Path(tmp),
+            graft.core.VersionedDir.renameOrFail(fs, new org.apache.hadoop.fs.Path(tmp),
               new org.apache.hadoop.fs.Path(s"$stateDir/deltas/$delta"))
             val written = spark.read.schema(keepers.schema)
               .parquet(s"$stateDir/deltas/$delta")

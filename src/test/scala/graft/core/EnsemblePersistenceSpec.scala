@@ -9,11 +9,23 @@ import graft.ops._
 class EnsemblePersistenceSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A reloaded op served from its resident table: one narrow plan —
+    * no join, no exchange. */
+  private def assertNarrow(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("Exchange"),
+      s"resident serving must not join or shuffle:\n$plan")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame, by: String*) =
+    df.orderBy(by.map(col): _*).collect().toSeq
+
   test("save/load round-trip reproduces identical outputs") {
     val features = Seq((10L, "A", 1.5), (11L, "B", 2.5), (12L, "C", 3.5))
       .toDF("item_id", "brand", "price")
+    // 99 has no feature row; 12 repeats across requests
     val input = Seq(
-      (1, Seq(10L, 11L, 12L), Seq(11L)),
+      (1, Seq(10L, 11L, 12L, 99L), Seq(11L)),
       (2, Seq(12L, 10L), Seq.empty[Long])
     ).toDF("requestId", "candidate_ids", "seen_ids")
 
@@ -27,6 +39,8 @@ class EnsemblePersistenceSpec extends SparkSpec {
     val dir = Files.tmp("ens_roundtrip")
     EnsemblePersistence.save(ens, dir, spark)
     val loaded = EnsemblePersistence.load(dir, spark)
+    assert(loaded.ops(2).asInstanceOf[QueryFeatureStore].resident.isDefined,
+      "a reloaded feature view within the broadcast threshold is resident")
 
     // parquet/DDL round-trips legitimately relax nullability; the schema
     // contract is names + types
@@ -34,9 +48,39 @@ class EnsemblePersistenceSpec extends SparkSpec {
       s.fields.map(f => (f.name, f.dataType.sql)).toSeq
     assert(shape(loaded.inputSchema) == shape(ens.inputSchema))
     assert(shape(loaded.outputSchema) == shape(ens.outputSchema))
-    val a = ens.transform(input).orderBy("requestId", "item_id").collect().toSeq
-    val b = loaded.transform(input).orderBy("requestId", "item_id").collect().toSeq
+    val served = loaded.transform(input)
+    assertNarrow(served)
+    assert(served.columns.toSeq == ens.transform(input).columns.toSeq)
+    val a = rows(ens.transform(input), "requestId", "item_id")
+    val b = rows(served, "requestId", "item_id")
     assert(a == b, "reloaded ensemble must produce identical rows")
+    assert(b.exists(r => r.getAs[Long]("item_id") == 99L && r.isNullAt(r.fieldIndex("brand_nvt"))),
+      "a key with no feature row keeps its row with null features")
+
+    // a null key, and a request read from parquet (not local): the
+    // resident lookup serves both
+    val keyed = Seq((Some(10L), 1), (None, 2), (Some(99L), 3)).toDF("item_id", "n")
+    val qfs = QueryFeatureStore(features, "item_id", Seq("brand", "price"))
+    val dq = Files.tmp("ens_qfs")
+    EnsemblePersistence.save(Ensemble(Seq(qfs), keyed.schema), dq, spark)
+    val lq = EnsemblePersistence.load(dq, spark)
+    assert(rows(lq.transform(keyed), "n") == rows(qfs.transform(keyed), "n"))
+    val pq = Files.tmp("ens_qfs_req")
+    keyed.write.mode("overwrite").parquet(pq)
+    val fromParquet = spark.read.parquet(pq)
+    assertNarrow(lq.transform(fromParquet))
+    assert(rows(lq.transform(fromParquet), "n") == rows(qfs.transform(keyed), "n"))
+
+    // a duplicated entity key: the join emits one row per match, so the
+    // reloaded op stays relational and reproduces the duplication
+    val dupFeatures = features.union(Seq((10L, "Z", 9.5)).toDF("item_id", "brand", "price"))
+    val dupOp = QueryFeatureStore(dupFeatures, "item_id", Seq("brand", "price"))
+    val dd = Files.tmp("ens_qfs_dup")
+    EnsemblePersistence.save(Ensemble(Seq(dupOp), keyed.schema), dd, spark)
+    val ld = EnsemblePersistence.load(dd, spark)
+    assert(ld.ops.head.asInstanceOf[QueryFeatureStore].resident.isEmpty)
+    assert(rows(ld.transform(keyed), "n", "brand") == rows(dupOp.transform(keyed), "n", "brand"))
+    assert(ld.transform(keyed).count() == 4L)
   }
 
   test("save rejects non-persistable (unregistered custom) ops") {
@@ -333,7 +377,7 @@ class EnsemblePersistenceSpec extends SparkSpec {
   test("retrieval ops round-trip: identical top-k after reload") {
     val items = Seq(
       (1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.1)), (3L, Seq(0.0, 1.0)),
-      (4L, Seq(0.1, 0.9)), (5L, Seq(0.7, 0.7))
+      (4L, Seq(0.1, 0.9)), (5L, Seq(0.7, 0.7)), (6L, Seq(Double.NaN, 0.8))
     ).toDF("item_id", "embedding")
     val queries = Seq((100L, Seq(1.0, 0.05)), (200L, Seq(0.05, 1.0)))
       .toDF("qid", "qvec")
@@ -345,16 +389,59 @@ class EnsemblePersistenceSpec extends SparkSpec {
     assert(loadedTopK.transform(queries).orderBy("qid").collect().toSeq ==
       topk.transform(queries).orderBy("qid").collect().toSeq)
 
-    val ann = AnnLsh(items, "qid", "qvec", k = 3, numBits = 4, nprobe = 3,
-      metric = "dot", center = Some(Seq(0.54, 0.54)))
-    val dir2 = Files.tmp("ens_ann")
-    EnsemblePersistence.save(Ensemble(Seq(ann), queries.schema), dir2, spark)
-    val loadedAnn = EnsemblePersistence.load(dir2, spark)
-    val reloaded = loadedAnn.ops.head.asInstanceOf[AnnLsh]
-    assert(reloaded.center.contains(Seq(0.54, 0.54)),
-      "fit-time LSH center must persist as a parameter")
-    assert(loadedAnn.transform(queries).orderBy("qid").collect().toSeq ==
-      ann.transform(queries).orderBy("qid").collect().toSeq)
+    val center = Seq(0.54, 0.54)
+    val lsh = AnnLsh(items, "qid", "qvec", k = 3, numBits = 4, nprobe = 3,
+      metric = "dot", center = Some(center))
+    // a query whose home bucket holds no item: LSH (nprobe 1) drops its row
+    val homeOnly = lsh.copy(nprobe = 1, metric = "cosine")
+    val occupied = AnnLsh.index(items, center, 4).select("__bucket").as[Int].collect().toSet
+    val lonely = (0 until 72).map { i =>
+      val a = i * math.Pi / 36
+      Seq(center(0) + 5 * math.cos(a), center(1) + 5 * math.sin(a))
+    }.find { v =>
+      val home = Seq(v).toDF("v").select(graft.functions.FastExpressions.lshBucket(
+        col("v"), typedLit(center.toArray), 4)).as[Int].head()
+      !occupied(home)
+    }.getOrElse(fail("no query vector with an empty home bucket"))
+    // centroid 2 gets no item: IVF returns empty arrays for its query
+    val ivf = AnnIvf(items, Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(-1.0, -1.0)),
+      "qid", "qvec", k = 3, nprobe = 1, metric = "cosine")
+    val edge = Seq[(Long, Option[Seq[Double]])](
+      (100L, Some(Seq(1.0, 0.05))), (200L, Some(Seq(0.05, 1.0))),
+      (300L, None), // null query vector
+      (400L, Some(lonely)), (500L, Some(Seq(-5.0, -5.0))),
+      (600L, Some(Seq(Double.NaN, 1.0)))).toDF("qid", "qvec")
+    for (ann <- Seq[EnsembleOp](lsh, homeOnly, ivf)) {
+      val d = Files.tmp("ens_ann")
+      EnsemblePersistence.save(Ensemble(Seq(ann), queries.schema), d, spark)
+      val loaded = EnsemblePersistence.load(d, spark)
+      ann match {
+        case a: AnnLsh =>
+          val reloaded = loaded.ops.head.asInstanceOf[AnnLsh]
+          assert(reloaded.center.contains(center),
+            "fit-time LSH center must persist as a parameter")
+          assert(reloaded.resident.isDefined)
+        case _ => assert(loaded.ops.head.asInstanceOf[AnnIvf].resident.isDefined)
+      }
+      for (req <- Seq(queries, edge)) {
+        val served = loaded.transform(req)
+        assertNarrow(served)
+        assert(rows(served, "qid") == rows(ann.transform(req), "qid"), ann.name)
+      }
+      // duplicate request ids: the relational top-k groups them, so the
+      // reloaded op keeps the relational plan for such a request
+      val dup = edge.union(edge.filter(col("qid") === 100L))
+      assert(loaded.transform(dup).queryExecution.executedPlan.toString.contains("Join"))
+      assert(rows(loaded.transform(dup), "qid") == rows(ann.transform(dup), "qid"), ann.name)
+    }
+    // the edge cases do what the relational plans do
+    val lshOut = rows(homeOnly.transform(edge), "qid").map(_.getLong(0))
+    assert(!lshOut.contains(300L) && !lshOut.contains(400L) && lshOut.contains(100L))
+    val ivfOut = rows(ivf.transform(edge), "qid")
+    assert(!ivfOut.exists(_.getLong(0) == 300L))
+    assert(ivfOut.find(_.getLong(0) == 500L).exists(_.getSeq[Long](1).isEmpty))
+    assert(rows(lsh.transform(edge), "qid").forall(!_.getSeq[Long](1).contains(6L)),
+      "a NaN-scored item never ranks")
   }
 
   test("Bm25Index round-trips its postings and df tables as side artifacts") {

@@ -47,4 +47,42 @@ class CacheGrowthSpec extends SparkSpec {
       s"persistent RDDs grew across invocations: $after1 -> $afterN")
     settle()
   }
+
+  test("reloading a serving ensemble holds no storage and releases discarded broadcasts") {
+    import scala.jdk.CollectionConverters._
+    import graft.core.EnsemblePersistence
+    import graft.ops.{AnnIvf, AnnLsh, QueryFeatureStore}
+    val (ens, requests) = graft.Flagship.servingEnsemble(spark, d, retrievalK = 50)
+    val dir = java.nio.file.Files.createTempDirectory("cache_growth_serve").toString
+    EnsemblePersistence.save(ens, dir, spark)
+    val users = requests.limit(8).collect().toSeq
+    settle()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    // one load plus one request; only the broadcast ids outlive the call
+    def cycle(): Seq[Long] = {
+      val loaded = EnsemblePersistence.load(dir, spark)
+      loaded.transform(spark.createDataFrame(users.asJava, loaded.inputSchema)).collect()
+      val held = loaded.ops.flatMap {
+        case q: QueryFeatureStore => q.resident.map(_.id)
+        case a: AnnLsh => a.resident.map(_.id)
+        case a: AnnIvf => a.resident.map(_.id)
+        case _ => None
+      }
+      assert(held.forall(org.apache.spark.GraftTestProbes.broadcastStored))
+      held
+    }
+    val ids = (1 to 5).flatMap(_ => cycle())
+    assert(ids.size == 15, s"each load holds three resident tables: $ids")
+    val afterN = spark.sparkContext.getPersistentRDDs.size
+    assert(afterN == before, s"persistent RDDs grew across loads: $before -> $afterN")
+    // the ContextCleaner releases a broadcast once its handle is unreachable
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def stored = ids.filter(org.apache.spark.GraftTestProbes.broadcastStored)
+    while (stored.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(stored.isEmpty, s"discarded loads still hold broadcasts: $stored")
+    settle()
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -22,17 +21,7 @@ object Verify {
     graft.queries.OracleDir.artifactDir =
       Some(outDir.replaceAll("/+$", "") + "_artifacts")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same scale-safety floors as Bench (see Bench.scala): keep
-      // row-multiplying stages parallel, keep top-k heaps hash-aggregated
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     new java.io.File(outDir).mkdirs()
     // optional csv filter for selective local iteration (driver sets none)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.core.{DeltaLog, VersionedDir}
 
 /** Structured-Streaming layer. The reference serves request/response only
   * (SURVEY.md §2.6: no streams); this is the Spark-native serving analog —
@@ -52,8 +53,6 @@ object StreamingOps {
   // — the observe's bloom buffer is numBits-sized PER TASK, so the
   // "free" observed aggregate shipped ~1 MB per partition of every
   // digest write for a gate that small chains never engage.
-  // The '_' prefix keeps parquet readers away from the side file.
-  private val BloomSidecarFile = "_bloom"
   private val BloomFpp = 0.01
 
   private def bloomGateBytes(spark: org.apache.spark.sql.SparkSession): Long =
@@ -78,26 +77,6 @@ object StreamingOps {
       .toAggregateExpression())
   }
 
-  private def writeBloomSidecar(spark: org.apache.spark.sql.SparkSession,
-      deltaDir: String, bytes: Array[Byte]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$deltaDir/$BloomSidecarFile")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(bytes) finally out.close()
-  }
-
-  private def readBloomSidecar(spark: org.apache.spark.sql.SparkSession,
-      deltaDir: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val p = new org.apache.hadoop.fs.Path(s"$deltaDir/$BloomSidecarFile")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-      finally in.close()
-    }
-  }
-
   /** The chain's bloom sidecars, iff the gate should engage (the chain's
     * digest bytes exceed the gate threshold). A delta missing its
     * sidecar gets one built here — a bounded one-time catch-up aggregate,
@@ -107,56 +86,32 @@ object StreamingOps {
   private def chainBloomsIfLarge(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, version: String)
       : Option[Seq[org.apache.spark.util.sketch.BloomFilter]] = {
-    val names = readIndexManifest(spark, s"$stateDir/$version/index_manifest")
-    val (fs, p) = graft.core.VersionedDir.fsOf(spark, stateDir)
-    val bytes = names.map(n => fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(p, s"idxdeltas/$n")).getLength).sum
-    if (bytes < bloomGateBytes(spark)) None
+    val paths = DeltaLog.readIndexManifest(spark, stateDir, version)
+      .map(n => s"$stateDir/idxdeltas/$n")
+    if (DeltaLog.bytesOf(spark, paths) < bloomGateBytes(spark)) None
     else {
-      val all = names.map { n =>
-        val d = s"$stateDir/idxdeltas/$n"
-        readBloomSidecar(spark, d).orElse {
+      val all = paths.map { d =>
+        DeltaLog.readBloom(spark, d).orElse {
           rebuildBloomSidecar(spark, d)
-          readBloomSidecar(spark, d)
+          DeltaLog.readBloom(spark, d)
         }
       }
       if (all.forall(_.isDefined)) Some(all.flatten) else None
     }
   }
 
-  /** Exact row count from a parquet dir's footers (driver-side, no job)
-    * — sizes the rebuild-time blooms of purge/compact, whose delta row
-    * counts are not known before their write. */
-  private def parquetFooterRowCount(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[Long] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var n = 0L
-      fs.listStatus(p).filter(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet")).foreach { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            f.getPath, spark.sparkContext.hadoopConfiguration))
-        try {
-          import scala.jdk.CollectionConverters._
-          reader.getFooter.getBlocks.asScala.foreach(b => n += b.getRowCount)
-        } finally reader.close()
-      }
-      Some(n)
-    } catch { case _: Throwable => None }
-
   /** Rebuild a digest delta's bloom sidecar from its parquet (one small
-    * aggregate job) — the purge/compact path, where the delta's size is
-    * only known after the rewrite. */
+    * aggregate job, sized by the footers' exact row count) — the
+    * purge/compact path, where the delta's size is only known after the
+    * rewrite. */
   private def rebuildBloomSidecar(spark: org.apache.spark.sql.SparkSession,
       xdeltaDir: String): Unit =
-    parquetFooterRowCount(spark, xdeltaDir).filter(_ > 0).foreach { n =>
+    DeltaLog.footerRowCount(spark, xdeltaDir).filter(_ > 0).foreach { n =>
       val row = spark.read.schema(digestIndexSchema).parquet(xdeltaDir)
         .filter(col("content_hash").isNotNull)
         .agg(bloomAgg(col("content_hash"), n)).collect()(0)
       if (!row.isNullAt(0))
-        writeBloomSidecar(spark, xdeltaDir, row.getAs[Array[Byte]](0))
+        DeltaLog.writeBloom(spark, xdeltaDir, row.getAs[Array[Byte]](0))
     }
 
   /** Watermarked sliding-window event aggregation: counts and value sums
@@ -945,131 +900,23 @@ object StreamingOps {
   // assignment — all spec-pinned), so the stream twin inherits the
   // batch ops' determinism.
 
-  // Versioned-state plumbing (log-ordered v<n> dirs, atomically-renamed
-  // _LATEST pointer, explicit retention) is the shared commit protocol
-  // in graft.core.VersionedDir — the same object serves batch corpus
-  // republication (VersionedDir.publish/readLatest).
-  private def latestVersion(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[String] = graft.core.VersionedDir.latest(spark, dir)
+  // The log's layout, metadata formats and commit order live in
+  // graft.core.DeltaLog: every commit below supplies only its delta
+  // writer and its stamps to DeltaLog.commit, which reserves the
+  // version, writes manifest/stamps/txn, swaps the pointer through the
+  // lineage check and runs retention and auto-compaction.
 
-  // Pointer swaps go through the optimistic-concurrency LINEAGE check:
-  // every commit here derives its content (manifest chain, cumulative
-  // meta, retired index) from the base snapshot it read, so the base
-  // must still be live at swap time. The sinks' foreachBatch is
-  // single-writer per checkpoint, but the LOG is shared with
-  // purge/optimize jobs and fresh-checkpoint restarts — a double-fired
-  // one must lose loudly, never regress the pointer NOR silently drop
-  // an interleaved commit's delta from the manifest it republishes.
-  /** The one pointer swap every commit here goes through: lineage-checked
-    * ([[graft.core.VersionedDir.commitPointerFrom]]) AND carrying the
-    * retention-proof per-app transaction map as the pointer's trailer
-    * lines — `txn` upserts the committing app's latest batchId; a commit
-    * with no batch identity (purge, OPTIMIZE) carries the map forward
-    * UNCHANGED, so another writer's commit can never erase an ingest
-    * app's replay memory. One file, one rename: the version swap and the
-    * txn update are a single atomic operation, so no crash can separate
-    * "the batch's data went live" from "the batch is remembered as
-    * committed" — the residual double-commit window of a separate
-    * post-swap txn write (crash between the two + retention churning
-    * past the version before the retry) is closed by construction
-    * [spec-pinned]. */
-  /** Most app entries the pointer trailer retains, evicting the least
-    * recently COMMITTING app beyond it. A replay can only come from a
-    * checkpoint that carries its appId, and every live checkpointed app
-    * re-upserts its entry (moving to the recent end) each commit — so an
-    * evicted entry belongs to an app that has not committed across 256
-    * other apps' turnover: a retired fresh-checkpoint identity whose
-    * checkpoint (the only thing that could replay under that appId) is
-    * operationally gone. Bounds the pointer at ~KB forever even under
-    * nightly fresh-checkpoint restarts for years. */
-  private val MaxTxnTrailerApps = 256
+  /** A manifest row (see [[graft.core.DeltaLog.ManifestEntry]]). */
+  type ManifestEntry = DeltaLog.ManifestEntry
+  val ManifestEntry = DeltaLog.ManifestEntry
 
-  private def writePointer(spark: org.apache.spark.sql.SparkSession,
-      dir: String, version: String, basedOn: Option[String],
-      txn: Option[(String, Long)] = None): Unit = {
-    // trailer lines keep COMMIT order (oldest first); an upsert moves
-    // the app to the recent end, the cap evicts from the stale end
-    val prev = txnEntries(spark, dir)
-    val merged = txn.fold(prev) { case (app, b) =>
-      val kept = prev.filterNot(_._1 == app)
-      val hi = prev.collectFirst { case (a, x) if a == app => x }
-        .fold(b)(math.max(b, _))
-      val next = (kept :+ (app -> hi)).takeRight(MaxTxnTrailerApps)
-      // eviction must be OBSERVABLE: it closes the evicted app's replay
-      // window, which is only safe if that app's checkpoint is truly
-      // retired — an operator should see it happen, not discover it
-      (kept :+ (app -> hi)).dropRight(MaxTxnTrailerApps).foreach { case (a, _) =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"txn trailer cap ($MaxTxnTrailerApps apps) evicted '$a' from " +
-          s"$dir — its replay-dedup window is closed; if that app's " +
-          "checkpoint still exists, a replayed batch would recommit")
-      }
-      next
-    }
-    val trailer = merged.map { case (a, b) => s"txn:$a,$b" }
-    graft.core.VersionedDir.commitPointerFrom(
-      spark, dir, version, basedOn, Some(trailer))
-  }
-
-  /** The per-app committed-batch entries carried in the live pointer's
-    * trailer, in stored (commit) order — empty before the first commit.
-    * Split on the LAST comma so appIds containing commas cannot shift
-    * the batch field. */
-  private def txnEntries(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(String, Long)] =
-    graft.core.VersionedDir.pointerLines(spark, dir).drop(1)
-      .filter(_.startsWith("txn:"))
-      .map { line =>
-        val body = line.drop(4)
-        val i = body.lastIndexOf(',')
-        body.take(i) -> body.drop(i + 1).trim.toLong
-      }
-
-  private def txnMap(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Map[String, Long] = txnEntries(spark, dir).toMap
-
-  /** The latest batchId this `appId` committed into `dir`'s log, scanning
-    * POINTER-COMMITTED versions newest-first (lazy — the common case
-    * reads ONE txn parquet: the app's own previous commit). Only
-    * versions at or below the live pointer count: a txn marker in a
-    * higher-numbered unreferenced dir is a crash between writeTxn and
-    * writePointer — that batch never went live, and honoring its marker
-    * would skip the retry and silently lose the batch forever. Versions
-    * without a txn marker (pre-protocol dirs) are skipped; any OTHER
-    * failure reading a txn propagates — swallowing a transient IO error
-    * would read as "no txn" and recommit a committed batch, duplicating
-    * its rows. Shared by every versioned sink: checking only the live
-    * version would let a batch retry that arrives AFTER another writer's
-    * commit (purge, optimize, a second app) recommit an already-committed
-    * batch. Retention caveat: vacuuming ALL of an app's txns re-opens
-    * its retry window — keep must cover the crash-recovery horizon. */
-  private def latestTxn(spark: org.apache.spark.sql.SparkSession,
-      dir: String, appId: String): Option[Long] = {
-    val liveN = graft.core.VersionedDir.latest(spark, dir)
-      .flatMap(v => scala.util.Try(v.drop(1).toLong).toOption)
-    val scanned = graft.core.VersionedDir.versions(spark, dir).iterator
-      .filter(v => liveN.exists(v.drop(1).toLong <= _))
-      .flatMap { v =>
-        readSmallFile(spark, s"$dir/$v/txn").map { t =>
-          val i = t.lastIndexOf(',')
-          (t.take(i), t.drop(i + 1).trim.toLong)
-        }
-      }
-      .collectFirst { case (a, b) if a == appId => b }
-    // the pointer-trailer txn map remembers commits whose version dirs
-    // other writers' churn has vacuumed — retention-proof (the pointer
-    // itself is never vacuumed) and crash-proof (it swaps in the SAME
-    // rename as the version, see writePointer); within retention the
-    // version scan is redundant with it but kept as the auditable,
-    // time-travelable record
-    (scanned ++ txnMap(spark, dir).get(appId)).reduceOption(_ max _)
-  }
-
-  // `appId,batchId` one-liner; split on the LAST comma so appIds with
-  // commas cannot shift the batch field
-  private def writeTxn(spark: org.apache.spark.sql.SparkSession,
-      dir: String, version: String, appId: String, batchId: Long): Unit =
-    writeSmallFile(spark, s"$dir/$version/txn", s"$appId,$batchId")
+  /** Upkeep of the index logs: retention plus the size-tiered
+    * auto-OPTIMIZE ([[compactIndexState]] at [[AutoCompactTierFraction]]). */
+  private def indexUpkeep(retainVersions: Option[Int],
+      autoCompactDeltas: Option[Int]): DeltaLog.Upkeep =
+    DeltaLog.Upkeep(retainVersions, autoCompactDeltas, (spark, dir, keepers) =>
+      compactIndexState(spark, dir, tierFraction = Some(AutoCompactTierFraction),
+        maxKeepers = keepers))
 
   /** Load the live BM25 index from a sink-maintained directory (None
     * before the first non-empty batch): union the manifest's postings
@@ -1084,7 +931,7 @@ object StreamingOps {
       queryIdCol: String = "query_id", queryTextCol: String = "query_text",
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75)
       : Option[graft.ops.Bm25Index] =
-    latestVersion(spark, indexDir).flatMap(loadBm25IndexAt(
+    VersionedDir.latest(spark, indexDir).flatMap(loadBm25IndexAt(
       spark, indexDir, _, queryIdCol, queryTextCol, k, k1, b))
 
   /** A specific RETAINED version's BM25 index (time travel over the
@@ -1096,38 +943,27 @@ object StreamingOps {
       indexDir: String, version: String,
       queryIdCol: String = "query_id", queryTextCol: String = "query_text",
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75)
-      : Option[graft.ops.Bm25Index] = {
-    val (fs, p) = graft.core.VersionedDir.fsOf(spark, indexDir)
-    if (!isCommitted(spark, indexDir, version) ||
-        !fs.exists(new org.apache.hadoop.fs.Path(p, s"$version/manifest")))
-      None
-    else Some {
-      val deltas = readManifest(spark, s"$indexDir/$version/manifest")
-        .map(_.delta)
-      val postings = spark.read.schema(postingsSchema).parquet(
-        deltas.map(d => s"$indexDir/deltas/$d/postings"): _*)
-      val dfreq = spark.read.schema(dfreqSchema).parquet(
-        deltas.map(d => s"$indexDir/deltas/$d/dfreq"): _*)
+      : Option[graft.ops.Bm25Index] =
+    DeltaLog.committedManifest(spark, indexDir, version).map { m =>
+      val deltas = m.map(e => s"$indexDir/deltas/${e.delta}")
+      val postings = spark.read.schema(postingsSchema)
+        .parquet(deltas.map(_ + "/postings"): _*)
+      val dfreq = spark.read.schema(dfreqSchema)
+        .parquet(deltas.map(_ + "/dfreq"): _*)
         .groupBy(col("__term")).agg(sum(col("__df")).as("__df"))
-      val (n, sumDl) = readMeta(spark, s"$indexDir/$version/meta")
+      val (n, sumDl) = readMeta(spark, indexDir, version)
       graft.ops.Bm25Index(postings, dfreq,
         n, sumDl.toDouble / n,
         queryIdCol, queryTextCol, k, k1, b)
     }
-  }
 
-  // `docCount,sumDl` one-liner — the cumulative BM25 scale stats
+  // `docCount,sumDl` — the cumulative BM25 scale stats
   private def readMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Long, Long) = {
-    val t = readSmallFile(spark, path).getOrElse(
-      throw new IllegalStateException(s"missing meta: $path"))
-    val f = t.trim.split(",")
-    (f(0).toLong, f(1).toLong)
+      dir: String, version: String): (Long, Long) = {
+    val f = DeltaLog.readLongs(spark, dir, version, DeltaLog.Meta).getOrElse(
+      throw new IllegalStateException(s"missing meta: $dir/$version"))
+    (f(0), f(1))
   }
-
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, docCount: Long, sumDl: Long): Unit =
-    writeSmallFile(spark, path, s"$docCount,$sumDl")
 
   /** foreachBatch sink maintaining a persisted BM25 inverted index from a
     * document stream in the delta+manifest layout: each batch tokenizes
@@ -1149,14 +985,14 @@ object StreamingOps {
       appId: String = "bm25-ingest",
       retainVersions: Option[Int] = None,
       autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit = {
+    val upkeep = indexUpkeep(retainVersions, autoCompactDeltas)
     (batch: DataFrame, batchId: Long) =>
       // txn dedup first (driver-side file reads, no Spark job), THEN the
       // batch stats aggregate, whose n doubles as the emptiness gate — a
       // separate batch.isEmpty probe was one more scheduled job per
       // commit for information the stats pass already computes
-      if (!latestTxn(batch.sparkSession, indexDir, appId).exists(_ >= batchId)) {
+      if (!DeltaLog.latestTxn(batch.sparkSession, indexDir, appId).exists(_ >= batchId)) {
         val spark = batch.sparkSession
-        import spark.implicits._
         // ONE tokenize pass serves the whole commit: the postings land
         // in a tmp delta with the scale stats (n, Σdl) OBSERVED on the
         // tokenize stage — the previous separate stats job re-tokenized
@@ -1166,57 +1002,47 @@ object StreamingOps {
         // are unchanged; a crashed tmp dir is unreferenced garbage.
         val (bPostings, obs) =
           graft.ops.Bm25Index.statsObserved(batch, docIdCol, textCol)
-        val tmp = s"$indexDir/deltas/_tmp-$appId-$batchId"
-        bPostings.write.mode("overwrite").parquet(s"$tmp/postings")
+        bPostings.write.mode("overwrite")
+          .parquet(s"${DeltaLog.stagingDir(indexDir, appId, batchId)}/postings")
         val bN = obs.get("n").asInstanceOf[Long]
         val bSumDl = obs.get("sdl") match {
           case null => 0L
           case s => s.asInstanceOf[Long]
         }
-        val (fs, _) = graft.core.VersionedDir.fsOf(spark, indexDir)
-        if (bN == 0L)
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        if (bN == 0L) DeltaLog.dropStaging(spark, indexDir, appId, batchId)
         else {
-        val live = latestVersion(spark, indexDir)
-        val (n0, s0) = live.map(lv => readMeta(spark, s"$indexDir/$lv/meta"))
-          .getOrElse((0L, 0L))
-        val v = graft.core.VersionedDir.reserveNextVersion(spark, indexDir)
-        val delta = "d" + v.drop(1)
-        // delta + metadata all materialize BEFORE the pointer moves;
-        // deltas are write-once, so the write never overlaps any reader
-        graft.core.VersionedDir.renameOrFail(fs, new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(s"$indexDir/deltas/$delta"))
-        // the dfreq delta derives from the postings JUST WRITTEN — a
-        // per-term count over the small on-disk delta — instead of the
-        // lazy bDfreq plan, which would re-tokenize and re-aggregate the
-        // whole batch a second time (same rows by construction: bDfreq
-        // is defined as bPostings grouped by term)
-        spark.read.schema(postingsSchema)
-          .parquet(s"$indexDir/deltas/$delta/postings")
-          .groupBy(col("__term")).agg(count(lit(1)).as("__df"))
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/deltas/$delta/dfreq")
-        writeMeta(spark, s"$indexDir/$v/meta", n0 + bN, s0 + bSumDl)
-        val prevManifest = live
-          .map(lv => readManifest(spark, s"$indexDir/$lv/manifest"))
-          .getOrElse(Seq.empty)
-        // zone map from the delta just written (cheap footer-stats scan)
-        writeManifest(spark, s"$indexDir/$v/manifest", prevManifest :+
-          manifestEntryAt(spark, s"$indexDir/deltas/$delta/postings", delta,
-            "__doc_id",
-            spark.read.schema(postingsSchema)
-              .parquet(s"$indexDir/deltas/$delta/postings")))
-        writeBm25Occupancy(spark, indexDir, v,
-          prevManifest.map(_.delta) :+ delta)
-        writeTxn(spark, indexDir, v, appId, batchId)
-        writePointer(spark, indexDir, v, live, Some(appId -> batchId))
-        retainVersions.foreach(vacuumIndexVersions(spark, indexDir, _))
-        maybeCompact(spark, indexDir, autoCompactDeltas, retainVersions,
-          () => compactIndexState(spark, indexDir,
-            tierFraction = Some(AutoCompactTierFraction),
-            maxKeepers = autoCompactDeltas.get - 1))
+          val live = VersionedDir.latest(spark, indexDir)
+          val (n0, s0) = live.map(readMeta(spark, indexDir, _)).getOrElse((0L, 0L))
+          DeltaLog.commit(spark, indexDir, live, appId, Some(batchId),
+              staged = true, upkeep) { slot =>
+            // the dfreq delta derives from the postings JUST WRITTEN — a
+            // per-term count over the small on-disk delta — instead of the
+            // lazy bDfreq plan, which would re-tokenize and re-aggregate the
+            // whole batch a second time (same rows by construction: bDfreq
+            // is defined as bPostings grouped by term)
+            spark.read.schema(postingsSchema).parquet(s"${slot.deltaPath}/postings")
+              .groupBy(col("__term")).agg(count(lit(1)).as("__df"))
+              .write.mode("overwrite").parquet(s"${slot.deltaPath}/dfreq")
+            bm25Publication(spark, indexDir, slot,
+              live.map(DeltaLog.readManifest(spark, indexDir, _)).getOrElse(Nil),
+              n0 + bN, s0 + bSumDl)
+          }
         }
       }
+  }
+
+  /** A BM25 commit's publication: `prior` plus the slot's postings
+    * delta (zone map from its footers), the cumulative meta and the
+    * occupancy line over the resulting chain. */
+  private def bm25Publication(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, slot: DeltaLog.Slot, prior: Seq[ManifestEntry],
+      docCount: Long, sumDl: Long): DeltaLog.Publication = {
+    val postings = s"${slot.deltaPath}/postings"
+    val manifest = prior :+ DeltaLog.entryFor(spark, postings, slot.delta,
+      "__doc_id", spark.read.schema(postingsSchema).parquet(postings))
+    DeltaLog.Publication(manifest, stamps = Seq(
+      DeltaLog.Meta -> DeltaLog.longs(docCount, sumDl),
+      DeltaLog.Occupancy -> bm25Occupancy(spark, indexDir, manifest.map(_.delta))))
   }
 
   /** BM25's stamp for the shared occupancy protocol ([[occupancyLog]]),
@@ -1233,8 +1059,8 @@ object StreamingOps {
     * stopword-pruned version, the way the ANN line triggers
     * [[refitAnnIvfIndexIfSkewed]]'s quantizer refit. Compaction carries
     * the line forward verbatim like every sink ([[compactIndexState]]). */
-  private def writeBm25Occupancy(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, version: String, deltas: Seq[String]): Unit = {
+  private def bm25Occupancy(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, deltas: Seq[String]): String = {
     val s = deltas.map(d => spark.read.schema(dfreqSchema)
         .parquet(s"$indexDir/deltas/$d/dfreq"))
       .reduce(_ unionByName _)
@@ -1245,11 +1071,10 @@ object StreamingOps {
       // scheduled up to 3 jobs for this single-row aggregate per commit
       // (JobTraceProbe r15); collect is one job over the one partition
       .collect()(0)
-    writeSmallFile(spark, s"$indexDir/$version/occupancy",
-      s"${s.getLong(0)},${s.getLong(1)},${s.getLong(1)},${s.getLong(2)}")
+    DeltaLog.longs(s.getLong(0), s.getLong(1), s.getLong(1), s.getLong(2))
   }
 
-  /** The ACTION half of the BM25 occupancy stamp ([[writeBm25Occupancy]]
+  /** The ACTION half of the BM25 occupancy stamp ([[bm25Occupancy]]
     * is the trigger) — the lexical-index twin of
     * [[refitAnnIvfIndexIfSkewed]], completing the trigger→action symmetry
     * for every sink-maintained index family: when the LIVE version's
@@ -1277,42 +1102,31 @@ object StreamingOps {
       indexDir: String, boundBp: Long,
       appId: String = "bm25-prune"): Option[(Long, Seq[String], String)] =
     for {
-      lv <- latestVersion(spark, indexDir)
+      lv <- VersionedDir.latest(spark, indexDir)
       occ <- readIndexOccupancy(spark, indexDir, lv)
       if occ.skewBp > boundBp
     } yield {
-      val deltas = readManifest(spark, s"$indexDir/$lv/manifest").map(_.delta)
+      val deltas = DeltaLog.deltaPaths(spark, indexDir, lv)
       // persisted: the vocab-scale roll names the head terms AND becomes
       // the pruned dfreq delta — unpersisted, the chain's dfreq files
       // were re-read and re-aggregated once per use
-      val dfAll = spark.read.schema(dfreqSchema).parquet(
-        deltas.map(d => s"$indexDir/deltas/$d/dfreq"): _*)
+      val dfAll = spark.read.schema(dfreqSchema).parquet(deltas.map(_ + "/dfreq"): _*)
         .groupBy(col("__term")).agg(sum(col("__df")).as("__df"))
         .persist()
       try {
-      val head = dfAll
-        .filter(col("__df") * lit(10000L) / lit(occ.uniformCount) > lit(boundBp))
-        .select("__term").collect().map(_.getString(0)).sorted.toSeq
-      val pruned = dfAll.filter(!col("__term").isInCollection(head))
-      val postings = spark.read.schema(postingsSchema).parquet(
-        deltas.map(d => s"$indexDir/deltas/$d/postings"): _*)
-        .filter(!col("__term").isInCollection(head))
-      val v = graft.core.VersionedDir.reserveNextVersion(spark, indexDir)
-      val delta = "d" + v.drop(1)
-      postings.write.mode("overwrite")
-        .parquet(s"$indexDir/deltas/$delta/postings")
-      pruned.write.mode("overwrite")
-        .parquet(s"$indexDir/deltas/$delta/dfreq")
-      val (n0, s0) = readMeta(spark, s"$indexDir/$lv/meta")
-      writeMeta(spark, s"$indexDir/$v/meta", n0, s0)
-      writeManifest(spark, s"$indexDir/$v/manifest", Seq(manifestEntryAt(
-        spark, s"$indexDir/deltas/$delta/postings", delta, "__doc_id",
-        spark.read.schema(postingsSchema)
-          .parquet(s"$indexDir/deltas/$delta/postings"))))
-      writeBm25Occupancy(spark, indexDir, v, Seq(delta))
-      writeTxn(spark, indexDir, v, appId, -1L)
-      writePointer(spark, indexDir, v, Some(lv))
-      (occ.skewBp, head, v)
+        val head = dfAll
+          .filter(col("__df") * lit(10000L) / lit(occ.uniformCount) > lit(boundBp))
+          .select("__term").collect().map(_.getString(0)).sorted.toSeq
+        val (n0, s0) = readMeta(spark, indexDir, lv)
+        val v = DeltaLog.commit(spark, indexDir, Some(lv), appId) { slot =>
+          spark.read.schema(postingsSchema).parquet(deltas.map(_ + "/postings"): _*)
+            .filter(!col("__term").isInCollection(head))
+            .write.mode("overwrite").parquet(s"${slot.deltaPath}/postings")
+          dfAll.filter(!col("__term").isInCollection(head))
+            .write.mode("overwrite").parquet(s"${slot.deltaPath}/dfreq")
+          bm25Publication(spark, indexDir, slot, Nil, n0, s0)
+        }
+        (occ.skewBp, head, v)
       } finally dfAll.unpersist()
     }
 
@@ -1320,65 +1134,61 @@ object StreamingOps {
     * coded/assigned item table as one multi-path parquet scan (no
     * shuffle; ANN probes group by list id, so the union is plan-neutral). */
   private def loadIndexDeltas(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, version: String): DataFrame = {
-    val deltas = readManifest(spark, s"$indexDir/$version/manifest")
-      .map(_.delta)
-    spark.read.parquet(deltas.map(d => s"$indexDir/deltas/$d/index"): _*)
-  }
+      indexDir: String, version: String): DataFrame =
+    spark.read.parquet(DeltaLog.deltaPaths(spark, indexDir, version).map(_ + "/index"): _*)
 
   /** One delta-layout index commit: land the batch's own assigned rows
-    * as `deltas/d<n>/index`, publish manifest+txn as `v<n>`, move the
-    * pointer — the shared body of [[annIvfIndexSink]] /
-    * [[annSqIndexSink]] (both per-item row-local assignments against
-    * frozen quantizer literals, so a batch's rows ARE its delta). */
+    * as `deltas/d<n>/index` and commit them through
+    * [[graft.core.DeltaLog.commit]] — the shared body of the
+    * frozen-quantizer and eval sinks ([[indexDeltaSink]]: per-item
+    * row-local assignments, so a batch's rows ARE its delta). */
   private def commitIndexDelta(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batchIndex: DataFrame, idCol: String,
-      appId: String, batchId: Long, retainVersions: Option[Int],
-      occupancy: Option[(String, Long)] = None): Unit = {
+      appId: String, batchId: Long, upkeep: DeltaLog.Upkeep,
+      occupancy: Option[(String, Long)]): Unit = {
     // ONE action serves assignment AND the emptiness gate: the batch's
-    // index rows land in a tmp delta with an OBSERVED row count, and the
-    // dir is renamed into the reserved version only when rows exist —
+    // index rows land in the staging dir with an OBSERVED row count, and
+    // the dir is renamed into the reserved version only when rows exist —
     // the previous separate `batch.isEmpty` probe was up to two extra
     // scheduled take-jobs per commit (JobTraceProbe r15), on rows whose
-    // wall time is jobs × the per-job floor. A crashed tmp dir is
+    // wall time is jobs × the per-job floor. A crashed staging dir is
     // unreferenced garbage no manifest lists; the next vacuum reclaims
     // it. Version reservation still happens only for non-empty batches,
     // so the log's version/batch mapping is unchanged.
-    val tmp = s"$indexDir/deltas/_tmp-$appId-$batchId"
     val obs = org.apache.spark.sql.Observation()
-    batchIndex.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$tmp/index")
-    val n = obs.get("n").asInstanceOf[Long]
-    val (fs, _) = graft.core.VersionedDir.fsOf(spark, indexDir)
-    if (n == 0L) {
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      return
+    batchIndex.observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+      .parquet(s"${DeltaLog.stagingDir(indexDir, appId, batchId)}/index")
+    if (obs.get("n").asInstanceOf[Long] == 0L)
+      DeltaLog.dropStaging(spark, indexDir, appId, batchId)
+    else {
+      val live = VersionedDir.latest(spark, indexDir)
+      DeltaLog.commit(spark, indexDir, live, appId, Some(batchId),
+          staged = true, upkeep) { slot =>
+        indexPublication(spark, indexDir, slot,
+          live.map(DeltaLog.readManifest(spark, indexDir, _)).getOrElse(Nil),
+          idCol, Some(batchIndex.schema), occupancy)
+      }
     }
-    val live = latestVersion(spark, indexDir)
-    val v = graft.core.VersionedDir.reserveNextVersion(spark, indexDir)
-    val delta = "d" + v.drop(1)
-    graft.core.VersionedDir.renameOrFail(fs, new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(s"$indexDir/deltas/$delta"))
-    // per-delta bucket histogram (O(min(batch, buckets)) rows — counted
-    // from the batch alone, never the accumulated index)
+  }
+
+  /** An index commit's publication: `prior` plus the slot's `index`
+    * delta (zone map from its footers) and, for occupancy-tracked logs
+    * (`(bucketCol, nBuckets)`), the delta's bucket histogram plus the
+    * chain's occupancy line. `schema` is the delta's when in hand —
+    * supplying it skips a schema-inference job. */
+  private def indexPublication(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, slot: DeltaLog.Slot, prior: Seq[ManifestEntry],
+      idCol: String, schema: Option[StructType],
+      occupancy: Option[(String, Long)]): DeltaLog.Publication = {
+    val path = s"${slot.deltaPath}/index"
     occupancy.foreach { case (bucketCol, _) =>
-      writeDeltaBucketCounts(spark, s"$indexDir/deltas/$delta", bucketCol,
-        Some(batchIndex.schema))
+      writeDeltaBucketCounts(spark, slot.deltaPath, bucketCol, schema)
     }
-    val prevManifest = live
-      .map(lv => readManifest(spark, s"$indexDir/$lv/manifest"))
-      .getOrElse(Seq.empty)
-    val manifest = prevManifest :+
-      manifestEntryAt(spark, s"$indexDir/deltas/$delta/index", delta, idCol,
-        spark.read.parquet(s"$indexDir/deltas/$delta/index"))
-    writeManifest(spark, s"$indexDir/$v/manifest", manifest)
-    occupancy.foreach { case (bucketCol, nBuckets) =>
-      writeOccupancy(spark, indexDir, v, manifest.map(_.delta),
-        bucketCol, nBuckets)
-    }
-    writeTxn(spark, indexDir, v, appId, batchId)
-    writePointer(spark, indexDir, v, live, Some(appId -> batchId))
-    retainVersions.foreach(vacuumIndexVersions(spark, indexDir, _))
+    val manifest = prior :+
+      DeltaLog.entryFor(spark, path, slot.delta, idCol, spark.read.parquet(path))
+    DeltaLog.Publication(manifest, stamps = occupancy.toSeq.map { case (bucketCol, n) =>
+      DeltaLog.Occupancy -> occupancyLine(spark, indexDir, manifest.map(_.delta), bucketCol, n)
+    })
   }
 
   // ——— per-version occupancy monitoring (the drift-visibility record
@@ -1401,7 +1211,7 @@ object StreamingOps {
   private def writeDeltaBucketCounts(
       spark: org.apache.spark.sql.SparkSession,
       deltaDir: String, bucketCol: String,
-      indexSchema: Option[StructType] = None): Unit = {
+      indexSchema: Option[StructType]): Unit = {
     // the caller just WROTE the delta, so its schema is in hand —
     // supplying it skips the per-read schema-inference job
     val reader = indexSchema.fold(spark.read)(spark.read.schema)
@@ -1418,7 +1228,7 @@ object StreamingOps {
     * scan, after which compaction folds it into a counted delta. */
   private def chainBucketCounts(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, deltas: Seq[String], bucketCol: String): DataFrame = {
-    val (fs, p) = graft.core.VersionedDir.fsOf(spark, indexDir)
+    val (fs, p) = VersionedDir.fsOf(spark, indexDir)
     val per = deltas.map { d =>
       if (fs.exists(new org.apache.hadoop.fs.Path(p, s"deltas/$d/bcounts")))
         spark.read.schema(bcountsSchema)
@@ -1432,16 +1242,15 @@ object StreamingOps {
       .groupBy("__b").agg(sum(col("__c")).as("__c"))
   }
 
-  private def writeOccupancy(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, version: String, deltas: Seq[String],
-      bucketCol: String, nBuckets: Long): Unit = {
+  private def occupancyLine(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, deltas: Seq[String],
+      bucketCol: String, nBuckets: Long): String = {
     val s = chainBucketCounts(spark, indexDir, deltas, bucketCol)
       .agg(coalesce(sum(col("__c")), lit(0L)),
         count(lit(1)), coalesce(max(col("__c")), lit(0L)))
-      // collect, not head — see writeBm25Occupancy
+      // collect, not head — see bm25Occupancy
       .collect()(0)
-    writeSmallFile(spark, s"$indexDir/$version/occupancy",
-      s"${s.getLong(0)},$nBuckets,${s.getLong(1)},${s.getLong(2)}")
+    DeltaLog.longs(s.getLong(0), nBuckets, s.getLong(1), s.getLong(2))
   }
 
   /** One committed version's occupancy summary — the same integer
@@ -1458,22 +1267,20 @@ object StreamingOps {
   /** The occupancy summary stamped when `version` committed; None for
     * versions written without occupancy tracking (eval logs,
     * pre-occupancy revisions) or vacuumed metadata. BM25 versions stamp
-    * the line too ([[writeBm25Occupancy]]: term = bucket, n_buckets =
+    * the line too ([[bm25Occupancy]]: term = bucket, n_buckets =
     * n_occupied under open vocabulary). */
   def readIndexOccupancy(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, version: String): Option[IndexOccupancy] =
-    readSmallFile(spark, s"$indexDir/$version/occupancy").map { t =>
-      val f = t.trim.split(",")
-      IndexOccupancy(f(0).toLong, f(1).toLong, f(2).toLong, f(3).toLong)
-    }
+    DeltaLog.readLongs(spark, indexDir, version, DeltaLog.Occupancy)
+      .map(f => IndexOccupancy(f(0), f(1), f(2), f(3)))
 
   /** The retained occupancy history of a sink-maintained index, oldest
     * first — bucket-skew drift between refit decisions as data, read
     * from the one-line version metadata (no index scan). */
   def occupancyLog(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Seq[(String, IndexOccupancy)] =
-    graft.core.VersionedDir.versions(spark, indexDir)
-      .filter(isCommitted(spark, indexDir, _))
+    VersionedDir.versions(spark, indexDir)
+      .filter(DeltaLog.isCommitted(spark, indexDir, _))
       .flatMap(v => readIndexOccupancy(spark, indexDir, v).map(v -> _))
       .sortBy(_._1.drop(1).toLong)
 
@@ -1481,34 +1288,16 @@ object StreamingOps {
     * probe via `op.asRowsIndexed(queries, loadAnnIvfIndex(...).get)`. */
   def loadAnnIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[DataFrame] =
-    latestVersion(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
+    VersionedDir.latest(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
 
   /** A specific RETAINED version's ANN index frame (time travel over
     * the index log, IVF and SQ8 alike — the index-side analog of
     * [[loadCorpusAt]]: reproduce an evaluation against the snapshot
     * that served it). None once the version's manifest is vacuumed. */
   def loadAnnIndexAt(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, version: String): Option[DataFrame] = {
-    val (fs, p) = graft.core.VersionedDir.fsOf(spark, indexDir)
-    if (!isCommitted(spark, indexDir, version) ||
-        !fs.exists(new org.apache.hadoop.fs.Path(p, s"$version/manifest")))
-      None
-    else Some(loadIndexDeltas(spark, indexDir, version))
-  }
-
-  /** True iff `version` is POINTER-COMMITTED history (its number is at
-    * or below the live `_LATEST`'s). A reserved-but-never-committed dir
-    * — a crashed writer, or a lineage-conflict loser whose manifest
-    * silently omits the interleaved winner's delta — also carries a
-    * manifest, but its snapshot never went live; time travel must not
-    * serve it ("None if never committed" is the contract). */
-  private def isCommitted(spark: org.apache.spark.sql.SparkSession,
-      dir: String, version: String): Boolean = {
-    val mine = scala.util.Try(version.drop(1).toLong).toOption
-    val liveN = latestVersion(spark, dir)
-      .flatMap(v => scala.util.Try(v.drop(1).toLong).toOption)
-    mine.exists(m => liveN.exists(m <= _))
-  }
+      indexDir: String, version: String): Option[DataFrame] =
+    DeltaLog.committedManifest(spark, indexDir, version)
+      .map(_ => loadIndexDeltas(spark, indexDir, version))
 
   /** foreachBatch sink maintaining a persisted IVF index from an item
     * stream under `op`'s FROZEN coarse quantizer: each batch is assigned
@@ -1521,20 +1310,25 @@ object StreamingOps {
   def annIvfIndexSink(indexDir: String, op: graft.ops.AnnIvf,
       appId: String = "ivf-ingest",
       retainVersions: Option[Int] = None,
-      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit = {
+      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit =
+    indexDeltaSink(indexDir, appId, retainVersions, autoCompactDeltas,
+      "__item_id", Some(("__cid", op.centers.size.toLong))) { (batch, _) =>
+      graft.ops.AnnIvf.index(batch, op.centers, op.itemIdCol, op.itemVecCol)
+    }
+
+  /** The one sink of the frozen-quantizer and eval logs: txn dedup, then
+    * [[commitIndexDelta]] of the rows `index` derives from the batch,
+    * with retention and auto-compaction as the commit's upkeep (whose
+    * settings are checked here, when the sink is built). */
+  private def indexDeltaSink(indexDir: String, appId: String,
+      retainVersions: Option[Int], autoCompactDeltas: Option[Int],
+      idCol: String, occupancy: Option[(String, Long)])(
+      index: (DataFrame, Long) => DataFrame): (DataFrame, Long) => Unit = {
+    val upkeep = indexUpkeep(retainVersions, autoCompactDeltas)
     (batch: DataFrame, batchId: Long) =>
-      if (!latestTxn(batch.sparkSession, indexDir, appId).exists(_ >= batchId)) {
-        commitIndexDelta(batch.sparkSession, indexDir,
-          graft.ops.AnnIvf.index(batch, op.centers,
-            op.itemIdCol, op.itemVecCol),
-          "__item_id", appId, batchId, retainVersions,
-          occupancy = Some(("__cid", op.centers.size.toLong)))
-        maybeCompact(batch.sparkSession, indexDir, autoCompactDeltas,
-          retainVersions,
-          () => compactIndexState(batch.sparkSession, indexDir,
-            tierFraction = Some(AutoCompactTierFraction),
-            maxKeepers = autoCompactDeltas.get - 1))
-      }
+      if (!DeltaLog.latestTxn(batch.sparkSession, indexDir, appId).exists(_ >= batchId))
+        commitIndexDelta(batch.sparkSession, indexDir, index(batch, batchId),
+          idCol, appId, batchId, upkeep, occupancy)
   }
 
   /** Close the quantizer-staleness loop for a sink-maintained IVF index:
@@ -1557,7 +1351,7 @@ object StreamingOps {
       indexDir: String, nlist: Int = 32, maxIter: Int = 10,
       seed: Long = 42L, targetBytes: Long = 128L << 20)
       : Option[(Seq[Seq[Double]], String)] =
-    latestVersion(spark, indexDir).map { lv =>
+    VersionedDir.latest(spark, indexDir).map { lv =>
       val items = loadIndexDeltas(spark, indexDir, lv)
         .select(col("__item_id").as("item_id"),
           col("__item_vec").as("embedding"))
@@ -1565,29 +1359,28 @@ object StreamingOps {
       try {
         val centers = graft.functions.VectorFunctions.fitCenters(
           items, "embedding", nlist, maxIter, seed)
-        val assigned = graft.ops.AnnIvf.index(items, centers)
-        val (fs, p) = graft.core.VersionedDir.fsOf(spark, indexDir)
-        val oldBytes = readManifest(spark, s"$indexDir/$lv/manifest")
-          .map(e => fs.getContentSummary(
-            new org.apache.hadoop.fs.Path(p, s"deltas/${e.delta}")).getLength)
-          .sum
-        val nFiles =
-          math.max(1L, (oldBytes + targetBytes - 1) / targetBytes).toInt
-        val v = graft.core.VersionedDir.reserveNextVersion(spark, indexDir)
-        val delta = "d" + v.drop(1)
-        assigned.repartition(nFiles).write.mode("overwrite")
-          .parquet(s"$indexDir/deltas/$delta/index")
-        writeDeltaBucketCounts(spark, s"$indexDir/deltas/$delta", "__cid")
-        writeManifest(spark, s"$indexDir/$v/manifest", Seq(manifestEntryAt(
-          spark, s"$indexDir/deltas/$delta/index", delta, "__item_id",
-          spark.read.parquet(s"$indexDir/deltas/$delta/index"))))
-        writeOccupancy(spark, indexDir, v, Seq(delta), "__cid",
-          centers.size.toLong)
-        writeTxn(spark, indexDir, v, "ivf-refit", -1L)
-        writePointer(spark, indexDir, v, Some(lv))
-        (centers, v)
+        (centers, republishIndex(spark, indexDir, lv, "ivf-refit",
+          graft.ops.AnnIvf.index(items, centers), centers.size.toLong, targetBytes))
       } finally items.unpersist()
     }
+
+  /** Republish the live index `lv` as ONE delta of the re-assigned or
+    * re-encoded `rows` — the commit the refit/rebuild actions share:
+    * sized toward `targetBytes` per file from the chain it replaces,
+    * bucket-counted over `__cid` and stamped with the fresh occupancy
+    * line over `nBuckets`; the ingest txn map carries over unchanged. */
+  private def republishIndex(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, lv: String, app: String, rows: DataFrame,
+      nBuckets: Long, targetBytes: Long): String = {
+    val nFiles = DeltaLog.fileCount(spark,
+      DeltaLog.deltaPaths(spark, indexDir, lv), targetBytes)
+    DeltaLog.commit(spark, indexDir, Some(lv), app) { slot =>
+      rows.repartition(nFiles).write.mode("overwrite")
+        .parquet(s"${slot.deltaPath}/index")
+      indexPublication(spark, indexDir, slot, Nil, "__item_id", None,
+        Some(("__cid", nBuckets)))
+    }
+  }
 
   /** The trigger→action composition for inverted-list skew — the
     * k-means twin of [[graft.Flagship.chooseRetriever]]'s LSH remedy:
@@ -1606,7 +1399,7 @@ object StreamingOps {
       seed: Long = 42L, targetBytes: Long = 128L << 20)
       : Option[(Long, Seq[Seq[Double]], String)] =
     for {
-      lv <- latestVersion(spark, indexDir)
+      lv <- VersionedDir.latest(spark, indexDir)
       occ <- readIndexOccupancy(spark, indexDir, lv)
       if occ.skewBp > boundBp
       (centers, v) <- refitAnnIvfIndex(spark, indexDir, nlist, maxIter,
@@ -1627,31 +1420,12 @@ object StreamingOps {
       itemIdCol: String = "item_id", itemVecCol: String = "embedding",
       nlist: Int = 32, maxIter: Int = 10, seed: Long = 42L,
       targetBytes: Long = 128L << 20): Option[(graft.ops.AnnSq, String)] =
-    latestVersion(spark, indexDir).map { lv =>
+    VersionedDir.latest(spark, indexDir).map { lv =>
       val op = graft.ops.AnnSq.fit(items, "query_id", "query_vec",
         itemIdCol, itemVecCol, nlist = nlist, maxIter = maxIter, seed = seed)
-      val coded = graft.ops.AnnSq.index(items, op.centers, op.mins, op.maxs,
-        itemIdCol, itemVecCol)
-      val (fs, p) = graft.core.VersionedDir.fsOf(spark, indexDir)
-      val oldBytes = readManifest(spark, s"$indexDir/$lv/manifest")
-        .map(e => fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(p, s"deltas/${e.delta}")).getLength)
-        .sum
-      val nFiles =
-        math.max(1L, (oldBytes + targetBytes - 1) / targetBytes).toInt
-      val v = graft.core.VersionedDir.reserveNextVersion(spark, indexDir)
-      val delta = "d" + v.drop(1)
-      coded.repartition(nFiles).write.mode("overwrite")
-        .parquet(s"$indexDir/deltas/$delta/index")
-      writeDeltaBucketCounts(spark, s"$indexDir/deltas/$delta", "__cid")
-      writeManifest(spark, s"$indexDir/$v/manifest", Seq(manifestEntryAt(
-        spark, s"$indexDir/deltas/$delta/index", delta, "__item_id",
-        spark.read.parquet(s"$indexDir/deltas/$delta/index"))))
-      writeOccupancy(spark, indexDir, v, Seq(delta), "__cid",
-        op.centers.size.toLong)
-      writeTxn(spark, indexDir, v, "sq-rebuild", -1L)
-      writePointer(spark, indexDir, v, Some(lv))
-      (op, v)
+      (op, republishIndex(spark, indexDir, lv, "sq-rebuild",
+        graft.ops.AnnSq.index(items, op.centers, op.mins, op.maxs,
+          itemIdCol, itemVecCol), op.centers.size.toLong, targetBytes))
     }
 
   /** The PQ action of the drift→action table
@@ -1673,37 +1447,18 @@ object StreamingOps {
       indexDir: String, op: graft.ops.AnnIvfPq, items: DataFrame,
       maxIter: Int = 10, seed: Long = 42L,
       targetBytes: Long = 128L << 20): Option[(graft.ops.AnnIvfPq, String)] =
-    latestVersion(spark, indexDir).map { lv =>
+    VersionedDir.latest(spark, indexDir).map { lv =>
       val refit = graft.ops.AnnIvfPq.refitCodebooks(op, items, maxIter, seed)
-      val coded = graft.ops.AnnIvfPq.index(items, refit.centers,
-        refit.codebooks, op.itemIdCol, op.itemVecCol)
-      val (fs, p) = graft.core.VersionedDir.fsOf(spark, indexDir)
-      val oldBytes = readManifest(spark, s"$indexDir/$lv/manifest")
-        .map(e => fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(p, s"deltas/${e.delta}")).getLength)
-        .sum
-      val nFiles =
-        math.max(1L, (oldBytes + targetBytes - 1) / targetBytes).toInt
-      val v = graft.core.VersionedDir.reserveNextVersion(spark, indexDir)
-      val delta = "d" + v.drop(1)
-      coded.repartition(nFiles).write.mode("overwrite")
-        .parquet(s"$indexDir/deltas/$delta/index")
-      writeDeltaBucketCounts(spark, s"$indexDir/deltas/$delta", "__cid")
-      writeManifest(spark, s"$indexDir/$v/manifest", Seq(manifestEntryAt(
-        spark, s"$indexDir/deltas/$delta/index", delta, "__item_id",
-        spark.read.parquet(s"$indexDir/deltas/$delta/index"))))
-      writeOccupancy(spark, indexDir, v, Seq(delta), "__cid",
-        refit.centers.size.toLong)
-      writeTxn(spark, indexDir, v, "pq-rebuild", -1L)
-      writePointer(spark, indexDir, v, Some(lv))
-      (refit, v)
+      (refit, republishIndex(spark, indexDir, lv, "pq-rebuild",
+        graft.ops.AnnIvfPq.index(items, refit.centers, refit.codebooks,
+          op.itemIdCol, op.itemVecCol), refit.centers.size.toLong, targetBytes))
     }
 
   /** Load the live SQ8 coded index from a sink-maintained directory —
     * probe via `op.transformIndexed(queries, loadAnnSqIndex(...).get)`. */
   def loadAnnSqIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[DataFrame] =
-    latestVersion(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
+    VersionedDir.latest(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
 
   /** Online ranking-quality monitoring — the streaming twin of
     * [[graft.ops.EvalRanking]]: a served-candidates stream (query id,
@@ -1734,22 +1489,14 @@ object StreamingOps {
   def evalRankingSink(outDir: String, op: graft.ops.EvalRanking,
       appId: String = "eval-monitor",
       retainVersions: Option[Int] = None,
-      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      if (!latestTxn(batch.sparkSession, outDir, appId).exists(_ >= batchId)) {
-        val spark = batch.sparkSession
-        // metric rows are QUERY-scale (one per evaluated query in the
-        // batch) — coalesce to one file per delta so the log's physical
-        // listing tracks the delta count, not the shuffle partitioning
-        commitIndexDelta(spark, outDir,
-          op.transform(batch).withColumn("batch_id", lit(batchId)).coalesce(1),
-          "query_id", appId, batchId, retainVersions)
-        maybeCompact(spark, outDir, autoCompactDeltas, retainVersions,
-          () => compactIndexState(spark, outDir,
-            tierFraction = Some(AutoCompactTierFraction),
-            maxKeepers = autoCompactDeltas.get - 1))
-      }
-  }
+      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit =
+    indexDeltaSink(outDir, appId, retainVersions, autoCompactDeltas,
+      "query_id", None) { (batch, batchId) =>
+      // metric rows are QUERY-scale (one per evaluated query in the
+      // batch) — coalesce to one file per delta so the log's physical
+      // listing tracks the delta count, not the shuffle partitioning
+      op.transform(batch).withColumn("batch_id", lit(batchId)).coalesce(1)
+    }
 
   /** The accumulated monitoring log maintained by [[evalRankingSink]]
     * (None before the first non-empty batch): the union of the live
@@ -1757,7 +1504,7 @@ object StreamingOps {
     * when the sink compacts. */
   def loadEvalLog(spark: org.apache.spark.sql.SparkSession,
       outDir: String): Option[DataFrame] =
-    latestVersion(spark, outDir).map(loadIndexDeltas(spark, outDir, _))
+    VersionedDir.latest(spark, outDir).map(loadIndexDeltas(spark, outDir, _))
 
   /** Retention vacuum for a sink-maintained versioned index directory
     * (BM25 / IVF / SQ8, and the corpus log — same layout): deletes all
@@ -1776,7 +1523,7 @@ object StreamingOps {
     * dirs and the pointer, and the pointed version is never deleted. */
   def vacuumIndexVersions(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, keep: Int = 2): Seq[String] =
-    graft.core.VersionedDir.vacuum(spark, indexDir, keep)
+    VersionedDir.vacuum(spark, indexDir, keep)
 
   /** OPTIMIZE for a sink-maintained index log (BM25 / IVF / SQ8): after
     * N ingest batches the live manifest lists N small deltas and every
@@ -1808,133 +1555,59 @@ object StreamingOps {
       indexDir: String, targetBytes: Long = 128L << 20,
       tierFraction: Option[Double] = None,
       maxKeepers: Int = Int.MaxValue): Option[String] =
-    latestVersion(spark, indexDir).flatMap { lv =>
-      val (fs, p) = graft.core.VersionedDir.fsOf(spark, indexDir)
-      val entries = readManifest(spark, s"$indexDir/$lv/manifest")
-      val (keepers, merge) = tierSplit(
-        fs, p, "deltas", entries.map(_.delta), tierFraction, maxKeepers)
+    VersionedDir.latest(spark, indexDir).flatMap { lv =>
+      val (fs, p) = VersionedDir.fsOf(spark, indexDir)
+      val entries = DeltaLog.readManifest(spark, indexDir, lv)
+      val (keepers, merge) = DeltaLog.tierSplit(
+        spark, indexDir, "deltas", entries.map(_.delta), tierFraction, maxKeepers)
       if (merge.size < 2) None
       else Some {
-        val kept = entries.filter(e => keepers.contains(e.delta))
         // delta table names (postings+dfreq for BM25, index for ANN) from
         // the layout itself — one compaction serves every index family
         val tables = fs.listStatus(
           new org.apache.hadoop.fs.Path(p, s"deltas/${merge.head}"))
           .filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
-        val v = graft.core.VersionedDir.reserveNextVersion(spark, indexDir)
-        val delta = "d" + v.drop(1)
-        tables.foreach { t =>
-          val paths = merge.map(d => s"$indexDir/deltas/$d/$t")
-          // a delta written before occupancy tracking may lack the
-          // `bcounts` side histogram: merging a PARTIAL set would
-          // undercount, so bcounts only merges when every member has it
-          // (otherwise the occupancy roll-up derives the merged delta's
-          // counts from its index rows on the fly — exact, bounded)
-          val allPresent = paths.forall(pp =>
-            fs.exists(new org.apache.hadoop.fs.Path(pp)))
-          if (t != "bcounts" || allPresent) {
-            val bytes = paths.map(pp => fs.getContentSummary(
-              new org.apache.hadoop.fs.Path(pp)).getLength).sum
-            val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-            // protocol-owned tables read with their fixed schemas (no
-            // inference job); data tables (index) keep inference
-            val unioned = (t match {
-              case "dfreq" => spark.read.schema(dfreqSchema)
-              case "bcounts" => spark.read.schema(bcountsSchema)
-              case "postings" => spark.read.schema(postingsSchema)
-              case _ => spark.read
-            }).parquet(paths: _*)
-            // partial pre-roll is exact: the loader still sums per
-            // term/bucket across deltas, so rolling up WITHIN the merged
-            // set commutes
-            val df =
-              if (t == "dfreq")
-                unioned.groupBy(col("__term")).agg(sum(col("__df")).as("__df"))
-              else if (t == "bcounts")
-                unioned.groupBy(col("__b")).agg(sum(col("__c")).as("__c"))
-              else unioned
-            df.repartition(nFiles).write.mode("overwrite")
-              .parquet(s"$indexDir/deltas/$delta/$t")
+        DeltaLog.commit(spark, indexDir, Some(lv), "index-optimize") { slot =>
+          tables.foreach { t =>
+            val paths = merge.map(d => s"$indexDir/deltas/$d/$t")
+            // a delta written before occupancy tracking may lack the
+            // `bcounts` side histogram: merging a PARTIAL set would
+            // undercount, so bcounts only merges when every member has it
+            // (otherwise the occupancy roll-up derives the merged delta's
+            // counts from its index rows on the fly — exact, bounded)
+            val allPresent = paths.forall(pp =>
+              fs.exists(new org.apache.hadoop.fs.Path(pp)))
+            if (t != "bcounts" || allPresent) {
+              val nFiles = DeltaLog.fileCount(spark, paths, targetBytes)
+              // protocol-owned tables read with their fixed schemas (no
+              // inference job); data tables (index) keep inference
+              val unioned = (t match {
+                case "dfreq" => spark.read.schema(dfreqSchema)
+                case "bcounts" => spark.read.schema(bcountsSchema)
+                case "postings" => spark.read.schema(postingsSchema)
+                case _ => spark.read
+              }).parquet(paths: _*)
+              // partial pre-roll is exact: the loader still sums per
+              // term/bucket across deltas, so rolling up WITHIN the merged
+              // set commutes
+              val df =
+                if (t == "dfreq")
+                  unioned.groupBy(col("__term")).agg(sum(col("__df")).as("__df"))
+                else if (t == "bcounts")
+                  unioned.groupBy(col("__b")).agg(sum(col("__c")).as("__c"))
+                else unioned
+              df.repartition(nFiles).write.mode("overwrite")
+                .parquet(s"${slot.deltaPath}/$t")
+            }
           }
-        }
-        if (fs.exists(new org.apache.hadoop.fs.Path(p, s"$lv/meta"))) {
-          val (n0, s0) = readMeta(spark, s"$indexDir/$lv/meta")
-          writeMeta(spark, s"$indexDir/$v/meta", n0, s0)
-        }
-        // merged zone map from the OLD entries — no scan: min of mins /
-        // max of maxs, conservative None if any member had no stats
-        val mergedOld = entries.filter(e => merge.contains(e.delta))
-        val entry = ManifestEntry(delta,
-          if (mergedOld.forall(_.min_id.isDefined))
-            mergedOld.flatMap(_.min_id).minOption else None,
-          if (mergedOld.forall(_.max_id.isDefined))
-            mergedOld.flatMap(_.max_id).maxOption else None)
-        writeManifest(spark, s"$indexDir/$v/manifest", kept :+ entry)
-        // compaction rewrites files, never rows — the occupancy summary
-        // is invariant, so the stamped line carries forward verbatim
-        readSmallFile(spark, s"$indexDir/$lv/occupancy").foreach(
-          writeSmallFile(spark, s"$indexDir/$v/occupancy", _))
-        writeTxn(spark, indexDir, v, "index-optimize", -1L)
-        writePointer(spark, indexDir, v, Some(lv))
-        v
-      }
-    }
-
-  /** The size-tiered keeper/merge split over a delta chain: a delta is
-    * a KEEPER iff its bytes are at least `fraction` of the chain's total
-    * AND it ranks among the `maxKeepers` largest (the cap restores the
-    * read fan-in bound even over equal-sized deltas, where the fraction
-    * rule alone would exempt everything); fraction None = full rewrite,
-    * nothing kept. Returns (keepers, mergeSet) in chain order. */
-  private def tierSplit(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, sub: String, names: Seq[String],
-      fraction: Option[Double], maxKeepers: Int): (Seq[String], Seq[String]) =
-    fraction match {
-      case None => (Seq.empty, names)
-      case Some(f) =>
-        val sizes = names.map(n => n -> fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(root, s"$sub/$n")).getLength).toMap
-        val total = sizes.valuesIterator.sum
-        val keep = names.sortBy(n => -sizes(n)).take(math.max(0, maxKeepers))
-          .takeWhile(n => sizes(n) >= f * total).toSet
-        names.partition(keep)
-    }
-
-  /** Post-commit auto-OPTIMIZE for a delta+manifest log (the sinks'
-    * `autoCompactDeltas` hook): when the LIVE manifest chain exceeds
-    * `maxDeltas` entries, run the matching compaction as the next
-    * commit, then reclaim deltas no retained version references. Runs
-    * on the sink's own thread right after its commit (the table-format
-    * auto-OPTIMIZE shape), so the single-writer discipline holds and
-    * the lineage check never fires against ourselves. The cost model is
-    * the LSM one: each row is rewritten every ~maxDeltas commits —
-    * amortized write amplification 1/maxDeltas of the index per commit,
-    * bounding the read-side union fan-in at maxDeltas in exchange.
-    * The rewrite itself is SIZE-TIERED ([[compactIndexState]]'s
-    * `tierFraction` = [[AutoCompactTierFraction]]): deltas holding ≥ 1/8
-    * of the chain's bytes are kept untouched and only the small tail
-    * merges — so a mature index that accumulated many tiny late batches
-    * merges the megabytes of tail, never rewrites the base [spec-pinned];
-    * merged runs grow geometrically until they graduate to keepers (the
-    * LSM amortized O(log) bound). Pick maxDeltas ≈ tolerable read
-    * fan-in; probe plans are unchanged either way [lifecycle-spec
-    * pinned]. */
-  private def maybeCompact(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxDeltas: Option[Int], retainVersions: Option[Int],
-      compact: () => Option[String]): Unit =
-    maxDeltas.foreach { t =>
-      require(t >= 1, s"autoCompactDeltas must be >= 1, got $t")
-      latestVersion(spark, dir).foreach { lv =>
-        if (readManifest(spark, s"$dir/$lv/manifest").size > t &&
-            compact().isDefined) {
-          // retention ran at the data commit, BEFORE the compaction
-          // commit existed — re-run it so the pre-compaction version
-          // (whose manifest still references the collapsed chain) ages
-          // out under the same keep budget, letting the delta reclaim
-          // actually delete; without this the old chain lingers until
-          // the next unrelated commit's vacuum
-          retainVersions.foreach(vacuumIndexVersions(spark, dir, _))
-          vacuumCorpusDeltas(spark, dir)
+          // merged zone map from the OLD entries — no scan. Compaction
+          // rewrites files, never rows: the cumulative meta and the
+          // occupancy summary are invariant and carry forward verbatim
+          DeltaLog.Publication(
+            entries.filter(e => keepers.contains(e.delta)) :+ DeltaLog.mergedEntry(
+              slot.delta, entries.filter(e => merge.contains(e.delta))),
+            stamps = Seq(DeltaLog.Meta, DeltaLog.Occupancy).flatMap(name =>
+              DeltaLog.readStamp(spark, indexDir, lv, name).map(name -> _)))
         }
       }
     }
@@ -1957,21 +1630,12 @@ object StreamingOps {
   def annSqIndexSink(indexDir: String, op: graft.ops.AnnSq,
       appId: String = "sq-ingest",
       retainVersions: Option[Int] = None,
-      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      if (!latestTxn(batch.sparkSession, indexDir, appId).exists(_ >= batchId)) {
-        commitIndexDelta(batch.sparkSession, indexDir,
-          graft.ops.AnnSq.index(batch, op.centers, op.mins, op.maxs,
-            op.itemIdCol, op.itemVecCol),
-          "__item_id", appId, batchId, retainVersions,
-          occupancy = Some(("__cid", op.centers.size.toLong)))
-        maybeCompact(batch.sparkSession, indexDir, autoCompactDeltas,
-          retainVersions,
-          () => compactIndexState(batch.sparkSession, indexDir,
-            tierFraction = Some(AutoCompactTierFraction),
-            maxKeepers = autoCompactDeltas.get - 1))
-      }
-  }
+      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit =
+    indexDeltaSink(indexDir, appId, retainVersions, autoCompactDeltas,
+      "__item_id", Some(("__cid", op.centers.size.toLong))) { (batch, _) =>
+      graft.ops.AnnSq.index(batch, op.centers, op.mins, op.maxs,
+        op.itemIdCol, op.itemVecCol)
+    }
 
   /** foreachBatch sink maintaining a persisted IVF-PQ code index
     * ([[graft.ops.AnnIvfPq]]) from an item stream under `op`'s FROZEN
@@ -1989,27 +1653,18 @@ object StreamingOps {
   def annPqIndexSink(indexDir: String, op: graft.ops.AnnIvfPq,
       appId: String = "pq-ingest",
       retainVersions: Option[Int] = None,
-      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      if (!latestTxn(batch.sparkSession, indexDir, appId).exists(_ >= batchId)) {
-        commitIndexDelta(batch.sparkSession, indexDir,
-          graft.ops.AnnIvfPq.index(batch, op.centers, op.codebooks,
-            op.itemIdCol, op.itemVecCol),
-          "__item_id", appId, batchId, retainVersions,
-          occupancy = Some(("__cid", op.centers.size.toLong)))
-        maybeCompact(batch.sparkSession, indexDir, autoCompactDeltas,
-          retainVersions,
-          () => compactIndexState(batch.sparkSession, indexDir,
-            tierFraction = Some(AutoCompactTierFraction),
-            maxKeepers = autoCompactDeltas.get - 1))
-      }
-  }
+      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit =
+    indexDeltaSink(indexDir, appId, retainVersions, autoCompactDeltas,
+      "__item_id", Some(("__cid", op.centers.size.toLong))) { (batch, _) =>
+      graft.ops.AnnIvfPq.index(batch, op.centers, op.codebooks,
+        op.itemIdCol, op.itemVecCol)
+    }
 
   /** Load the live PQ code table from a sink-maintained directory —
     * probe via `op.asRowsIndexed(queries, loadAnnPqIndex(...).get)`. */
   def loadAnnPqIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[DataFrame] =
-    latestVersion(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
+    VersionedDir.latest(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
 
   /** foreachBatch sink maintaining a persisted LSH bucket index
     * ([[graft.ops.AnnLsh]]) from an item stream under the op's FROZEN
@@ -2026,176 +1681,17 @@ object StreamingOps {
       retainVersions: Option[Int] = None,
       autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit = {
     val mu = op.resolvedCenter
-    (batch: DataFrame, batchId: Long) =>
-      if (!latestTxn(batch.sparkSession, indexDir, appId).exists(_ >= batchId)) {
-        commitIndexDelta(batch.sparkSession, indexDir,
-          graft.ops.AnnLsh.index(batch, mu, op.numBits,
-            op.itemIdCol, op.itemVecCol),
-          "__item_id", appId, batchId, retainVersions,
-          occupancy = Some(("__bucket", 1L << op.numBits)))
-        maybeCompact(batch.sparkSession, indexDir, autoCompactDeltas,
-          retainVersions,
-          () => compactIndexState(batch.sparkSession, indexDir,
-            tierFraction = Some(AutoCompactTierFraction),
-            maxKeepers = autoCompactDeltas.get - 1))
-      }
+    indexDeltaSink(indexDir, appId, retainVersions, autoCompactDeltas,
+      "__item_id", Some(("__bucket", 1L << op.numBits))) { (batch, _) =>
+      graft.ops.AnnLsh.index(batch, mu, op.numBits, op.itemIdCol, op.itemVecCol)
+    }
   }
 
   /** Load the live LSH bucket table from a sink-maintained directory —
     * probe via `op.asRowsIndexed(queries, loadAnnLshIndex(...).get)`. */
   def loadAnnLshIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[DataFrame] =
-    latestVersion(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
-
-  /** One manifest row: a delta name plus its id ZONE MAP (min/max of
-    * the id column over the delta's rows, null for an empty delta) —
-    * the listing-level data-skipping stats [[loadCorpusPruned]] uses to
-    * drop whole deltas before any parquet footer is opened. */
-  case class ManifestEntry(delta: String,
-      min_id: Option[Long], max_id: Option[Long])
-
-  /** Zone-map bounds from the delta's own parquet FOOTERS — the write
-    * already computed exact per-row-group min/max for integral columns,
-    * so the commit protocol reads a few KB of footer metadata instead of
-    * scheduling a Spark aggregate job per commit (the Delta/Iceberg
-    * manifest discipline; at 3 micro-batches × several sinks per
-    * lifecycle row, the per-commit job was a measurable slice of the
-    * whole streaming family's latency). Returns None — caller falls back
-    * to the aggregate — when the id column is not INT32/INT64 (string
-    * footer stats order lexicographically, NOT the numeric zone order
-    * the pruned reader compares in) or any file's stats are absent
-    * (conservative: the job recovers full pruning effectiveness).
-    * All-null blocks contribute nothing, matching the aggregate's
-    * null-skipping min/max. */
-  private[streaming] def zoneFromFooters(
-      spark: org.apache.spark.sql.SparkSession,
-      deltaPath: String, idCol: String): Option[(Option[Long], Option[Long])] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(deltaPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(p)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      var any = false
-      val ok = files.forall { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            f.getPath, spark.sparkContext.hadoopConfiguration))
-        try {
-          import scala.jdk.CollectionConverters._
-          reader.getFooter.getBlocks.asScala.forall { block =>
-            block.getColumns.asScala.find(
-              _.getPath.toDotString == idCol) match {
-              // id column absent from the file: decline — the aggregate
-              // fallback preserves the loud missing-column error
-              case None => false
-              case Some(cc) =>
-                import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-                val tn = cc.getPrimitiveType.getPrimitiveTypeName
-                if (tn != INT64 && tn != INT32) false
-                else {
-                  val st = cc.getStatistics
-                  if (st == null || st.isEmpty) false
-                  else {
-                    if (st.hasNonNullValue) {
-                      mn = math.min(mn,
-                        st.genericGetMin.asInstanceOf[Number].longValue())
-                      mx = math.max(mx,
-                        st.genericGetMax.asInstanceOf[Number].longValue())
-                      any = true
-                    }
-                    true
-                  }
-                }
-            }
-          }
-        } finally reader.close()
-      }
-      if (!ok) None
-      else if (!any) Some((None, None))
-      else Some((Some(mn), Some(mx)))
-    } catch { case _: Throwable => None }
-
-  /** [[manifestEntry]] for a delta already ON DISK at `deltaPath`:
-    * footer-stats zone map when replicable, the aggregate job otherwise. */
-  private def manifestEntryAt(spark: org.apache.spark.sql.SparkSession,
-      deltaPath: String, delta: String, idCol: String,
-      fallback: => DataFrame): ManifestEntry =
-    zoneFromFooters(spark, deltaPath, idCol)
-      .map { case (mn, mx) => ManifestEntry(delta, mn, mx) }
-      .getOrElse(manifestEntry(delta, fallback, idCol))
-
-  private def manifestEntry(delta: String,
-      rows: DataFrame, idCol: String): ManifestEntry = {
-    // cast BEFORE min/max: a string id column's native min/max is
-    // lexicographic ("100" < "99"), which would build an inverted zone
-    // map and make the pruned read silently drop matching deltas —
-    // casting first keeps the aggregate in the comparison's own (long)
-    // ordering, and non-numeric ids become null = conservatively kept
-    val s = rows.agg(min(col(idCol).cast("long")),
-      max(col(idCol).cast("long"))).head()
-    ManifestEntry(delta,
-      if (s.isNullAt(0)) None else Some(s.getLong(0)),
-      if (s.isNullAt(1)) None else Some(s.getLong(1)))
-  }
-
-  // Commit-protocol metadata (manifest / meta / txn / source markers) is
-  // DRIVER-KNOWN and metadata-scale — a handful of values per commit.
-  // Persisting it through Spark parquet jobs cost 3+ jobs per commit and
-  // as many more per load (scheduler overhead dominated the whole
-  // lifecycle family's latency at small batch sizes). It is now written
-  // and read directly through the Hadoop FS as one-line-per-record text,
-  // like the `_LATEST` pointer — zero Spark jobs. The files live inside
-  // not-yet-published v<n> dirs until the pointer swap, so no reader
-  // ever observes a partial write; the DATA (deltas, digest index)
-  // stays parquet.
-  private def writeSmallFile(spark: org.apache.spark.sql.SparkSession,
-      path: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readSmallFile(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    // a DIRECTORY here is a state dir written by the pre-text-file
-    // revision (commit metadata as parquet directories) — fail with the
-    // diagnosis instead of an opaque can't-open-a-directory IOException
-    else if (fs.getFileStatus(p).isDirectory)
-      throw new IllegalStateException(
-        s"$path is a directory — legacy parquet-layout commit metadata " +
-        "from an older revision of this log; rebuild the state dir " +
-        "(re-run the stream from its source) before reading it here")
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
-  // one `delta,min,max` line per entry (empty field = no stat); delta
-  // names are log-generated (`d<n>`), so the separator is collision-free
-  private[graft] def readManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[ManifestEntry] =
-    readSmallFile(spark, path).getOrElse(
-      throw new IllegalStateException(s"missing manifest: $path"))
-      .split("\n").iterator.filter(_.nonEmpty).map { line =>
-        val f = line.split(",", -1)
-        ManifestEntry(f(0),
-          if (f(1).isEmpty) None else Some(f(1).toLong),
-          if (f(2).isEmpty) None else Some(f(2).toLong))
-      }.toIndexedSeq
-
-  private def writeManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, entries: Seq[ManifestEntry]): Unit =
-    writeSmallFile(spark, path, entries.map(e =>
-      s"${e.delta},${e.min_id.getOrElse("")},${e.max_id.getOrElse("")}")
-      .mkString("\n"))
+    VersionedDir.latest(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
 
   /** The live accepted corpus maintained by [[corpusIngestSink]] (None
     * before the first accepting batch): resolve the pointed version's
@@ -2204,10 +1700,8 @@ object StreamingOps {
     * bounded; the union is a multi-path parquet scan — no shuffle. */
   def loadCorpus(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): Option[DataFrame] =
-    latestVersion(spark, stateDir).map { v =>
-      val deltas = readManifest(spark, s"$stateDir/$v/manifest").map(_.delta)
-      spark.read.parquet(deltas.map(d => s"$stateDir/deltas/$d"): _*)
-    }
+    VersionedDir.latest(spark, stateDir).map(v =>
+      spark.read.parquet(DeltaLog.deltaPaths(spark, stateDir, v): _*))
 
   /** Id-range read over the live corpus with MANIFEST-LEVEL data
     * skipping: deltas whose [min_id, max_id] zone map cannot overlap
@@ -2222,8 +1716,8 @@ object StreamingOps {
   def loadCorpusPruned(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, minId: Long, maxId: Long,
       idCol: String = "doc_id"): Option[DataFrame] =
-    latestVersion(spark, stateDir).map { v =>
-      val entries = readManifest(spark, s"$stateDir/$v/manifest")
+    VersionedDir.latest(spark, stateDir).map { v =>
+      val entries = DeltaLog.readManifest(spark, stateDir, v)
       val chosen = entries.filter(e =>
         e.min_id.isEmpty || e.max_id.isEmpty ||
           (e.min_id.get <= maxId && e.max_id.get >= minId))
@@ -2241,18 +1735,11 @@ object StreamingOps {
     * [[graft.ops.SnapshotDiff]]: the `snapshot_diff_versions` workload
     * over live sink state). None if the version was never committed or
     * its manifest has been vacuumed; retention bounds the history
-    * window, exactly like [[graft.core.VersionedDir.readAt]]. */
+    * window, exactly like [[VersionedDir.readAt]]. */
   def loadCorpusAt(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, version: String): Option[DataFrame] = {
-    val (fs, p) = graft.core.VersionedDir.fsOf(spark, stateDir)
-    val m = new org.apache.hadoop.fs.Path(p, s"$version/manifest")
-    if (!isCommitted(spark, stateDir, version) || !fs.exists(m)) None
-    else Some {
-      val deltas = readManifest(spark, m.toString).map(_.delta)
-      spark.read.parquet(
-        deltas.map(d => s"$stateDir/deltas/$d"): _*)
-    }
-  }
+      stateDir: String, version: String): Option[DataFrame] =
+    DeltaLog.committedManifest(spark, stateDir, version).map(m =>
+      spark.read.parquet(m.map(e => s"$stateDir/deltas/${e.delta}"): _*))
 
   /** Rows added to the corpus SINCE a retained version — the append-only
     * incremental-read fast path: a manifest-level set difference picks
@@ -2270,23 +1757,19 @@ object StreamingOps {
     * if `sinceVersion`'s manifest is vacuumed or no version is live;
     * empty frame when nothing landed since. */
   def corpusDeltasSince(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, sinceVersion: String): Option[DataFrame] = {
-    val (fs, p) = graft.core.VersionedDir.fsOf(spark, stateDir)
-    val old = new org.apache.hadoop.fs.Path(p, s"$sinceVersion/manifest")
-    if (!fs.exists(old)) None
-    else latestVersion(spark, stateDir).flatMap { lv =>
-      val seen = readManifest(spark, old.toString).map(_.delta).toSet
-      val liveM = readManifest(spark, s"$stateDir/$lv/manifest").map(_.delta)
-      if (!seen.subsetOf(liveM.toSet)) None // purge/compact rewrote deltas
-      else Some {
-        val fresh = liveM.filterNot(seen)
-        if (fresh.isEmpty) // one delta carries the schema at O(1) cost
-          spark.read.parquet(s"$stateDir/deltas/${liveM.head}").limit(0)
-        else spark.read.parquet(
-          fresh.map(d => s"$stateDir/deltas/$d"): _*)
-      }
+      stateDir: String, sinceVersion: String): Option[DataFrame] =
+    for {
+      old <- DeltaLog.manifestAt(spark, stateDir, sinceVersion)
+      lv <- VersionedDir.latest(spark, stateDir)
+      seen = old.map(_.delta).toSet
+      liveM = DeltaLog.readManifest(spark, stateDir, lv).map(_.delta)
+      if seen.subsetOf(liveM.toSet) // else purge/compact rewrote deltas
+    } yield {
+      val fresh = liveM.filterNot(seen)
+      if (fresh.isEmpty) // one delta carries the schema at O(1) cost
+        spark.read.parquet(s"$stateDir/deltas/${liveM.head}").limit(0)
+      else spark.read.parquet(fresh.map(d => s"$stateDir/deltas/$d"): _*)
     }
-  }
 
   /** Bring the derived signal table up to the LIVE corpus, published as
     * the next version of the signal table's own commit log — IFF the
@@ -2309,10 +1792,10 @@ object StreamingOps {
       signal: graft.core.EnsembleOp,
       idCol: String = "doc_id",
       retainVersions: Option[Int] = None): Option[String] =
-    latestVersion(spark, corpusDir).flatMap { cv =>
-      val lastSv = latestVersion(spark, signalDir)
+    VersionedDir.latest(spark, corpusDir).flatMap { cv =>
+      val lastSv = VersionedDir.latest(spark, signalDir)
       val lastSrc = lastSv.flatMap(sv =>
-        readSmallFile(spark, s"$signalDir/$sv/source").map(_.trim))
+        DeltaLog.readStamp(spark, signalDir, sv, DeltaLog.Source).map(_.trim))
       if (lastSrc.contains(cv)) None
       else {
         // APPEND FAST PATH: when the commit chain from the version the
@@ -2324,16 +1807,14 @@ object StreamingOps {
         // reconcile joins. Anything else (takedown, compaction, vacuumed
         // history, no prior) falls back to the content-keyed reconcile,
         // which is always correct.
-        val live = readManifest(spark, s"$corpusDir/$cv/manifest")
-          .map(_.delta).toSet
+        val live = DeltaLog.readManifest(spark, corpusDir, cv).map(_.delta).toSet
         val out = (for {
           pv <- lastSrc
           sv <- lastSv
           oldM <- scala.util.Try(
-            readManifest(spark, s"$corpusDir/$pv/manifest")
-              .map(_.delta).toSet).toOption
+            DeltaLog.readManifest(spark, corpusDir, pv).map(_.delta).toSet).toOption
           if oldM.subsetOf(live)
-          prior <- graft.core.VersionedDir.readAt(spark, signalDir, sv)
+          prior <- VersionedDir.readAt(spark, signalDir, sv)
         } yield {
           val freshDeltas = (live -- oldM).toSeq.sorted
           val carried = prior.drop("carried").withColumn("carried", lit(true))
@@ -2343,10 +1824,10 @@ object StreamingOps {
               freshDeltas.map(n => s"$corpusDir/deltas/$n"): _*))
               .withColumn("carried", lit(false)))
         }).getOrElse(graft.ops.SignalReconcile.reconciled(
-          graft.core.VersionedDir.readLatest(spark, signalDir),
+          VersionedDir.readLatest(spark, signalDir),
           loadCorpus(spark, corpusDir).get, signal, idCol))
-        val v = graft.core.VersionedDir.publish(out, signalDir, retainVersions)
-        writeSmallFile(spark, s"$signalDir/$v/source", cv)
+        val v = VersionedDir.publish(out, signalDir, retainVersions)
+        DeltaLog.writeStamp(spark, signalDir, v, DeltaLog.Source, cv)
         Some(v)
       }
     }
@@ -2373,6 +1854,8 @@ object StreamingOps {
       normalized: Boolean = true,
       appId: String = "corpus-ingest",
       retainVersions: Option[Int] = None): (DataFrame, Long) => Unit = {
+    // checked as given: the corpus side's floor below would mask a bad value
+    DeltaLog.checkUpkeep(retainVersions, None)
     // the corpus side keeps >= 2 versions: the ingest commit's vacuum
     // runs BEFORE the signal publish reads the previous version's
     // manifest for the append fast path — keep = 1 would delete it
@@ -2399,26 +1882,15 @@ object StreamingOps {
     * collapse the chain to one delta as their full pass already pays). */
   def loadCorpusIndex(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): Option[DataFrame] =
-    latestVersion(spark, stateDir).map(v =>
+    VersionedDir.latest(spark, stateDir).map(v =>
       loadIndexChain(spark, stateDir, v))
 
   private def loadIndexChain(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, version: String): DataFrame = {
-    val names = readIndexManifest(spark, s"$stateDir/$version/index_manifest")
+      stateDir: String, version: String): DataFrame =
     // fixed protocol schema — skips the per-read schema-inference job
-    spark.read.schema(digestIndexSchema)
-      .parquet(names.map(n => s"$stateDir/idxdeltas/$n"): _*)
-  }
-
-  private def readIndexManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] =
-    readSmallFile(spark, path).getOrElse(
-      throw new IllegalStateException(s"missing index manifest: $path"))
-      .split("\n").iterator.filter(_.nonEmpty).toIndexedSeq
-
-  private def writeIndexManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, names: Seq[String]): Unit =
-    writeSmallFile(spark, path, names.mkString("\n"))
+    spark.read.schema(digestIndexSchema).parquet(
+      DeltaLog.readIndexManifest(spark, stateDir, version)
+        .map(n => s"$stateDir/idxdeltas/$n"): _*)
 
   /** foreachBatch sink maintaining the ACCEPTED CORPUS itself as
     * versioned state — the live closure of the ingest loop
@@ -2468,18 +1940,21 @@ object StreamingOps {
       appId: String = "corpus-ingest",
       retainVersions: Option[Int] = None,
       autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit = {
+    val upkeep = DeltaLog.Upkeep(retainVersions, autoCompactDeltas,
+      (spark, dir, keepers) => compactCorpusState(spark, dir, idCol = idCol,
+        tierFraction = Some(AutoCompactTierFraction), maxKeepers = keepers))
     (batch: DataFrame, batchId: Long) =>
       {
         val spark = batch.sparkSession
         import spark.implicits._
-        // per-app txn dedup across retained history (see latestTxn):
+        // per-app txn dedup across retained history (DeltaLog.latestTxn):
         // a batch retry after an intervening purge/optimize commit must
         // not recommit and duplicate its keepers. No separate
         // batch.isEmpty probe — keepers.isEmpty below gates the commit
         // (an empty batch has no keepers), so the pre-check was one more
         // scheduled job per commit for a fact the labeling pass proves
-        if (!latestTxn(spark, stateDir, appId).exists(_ >= batchId)) {
-          val live = latestVersion(spark, stateDir)
+        if (!DeltaLog.latestTxn(spark, stateDir, appId).exists(_ >= batchId)) {
+          val live = VersionedDir.latest(spark, stateDir)
           val chainIndex = live.map(v => loadIndexChain(spark, stateDir, v))
             .orElse(initialIndex.map(_.select(col("content_hash"))))
           // bloom gate (engages only past the chain-size threshold): a
@@ -2505,36 +1980,28 @@ object StreamingOps {
           val keepers = op.transform(batch).filter(col("dup_kind").isNull)
             .drop("dup_kind").withColumn("ingest_batch", lit(batchId))
           // ONE labeling pass serves the whole commit: the keepers land
-          // in a tmp delta with an OBSERVED row count (the emptiness
+          // in the staging dir with an OBSERVED row count (the emptiness
           // gate — the previous persist + isEmpty pair cost one more
           // scheduled job and a payload-sized cache entry per commit),
           // the dir is renamed into the reserved version only when
           // keepers exist, and the digest delta derives from the parquet
           // JUST WRITTEN instead of re-reading the labeling plan's cache
           // (same rows by construction — the delta IS the keepers).
-          // A crashed tmp dir is unreferenced garbage no manifest lists;
-          // vacuumCorpusDeltas reclaims it.
-          val tmp = s"$stateDir/deltas/_tmp-$appId-$batchId"
+          // A crashed staging dir is unreferenced garbage no manifest
+          // lists; vacuumCorpusDeltas reclaims it.
           val obs = org.apache.spark.sql.Observation()
           keepers.observe(obs, count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(tmp)
-          val nKeep = obs.get("n").asInstanceOf[Long]
-          val (fs, _) = graft.core.VersionedDir.fsOf(spark, stateDir)
-          if (nKeep == 0L)
-            fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          else {
-            val v = graft.core.VersionedDir.reserveNextVersion(spark, stateDir)
-            val delta = "d" + v.drop(1)
-            graft.core.VersionedDir.renameOrFail(fs, new org.apache.hadoop.fs.Path(tmp),
-              new org.apache.hadoop.fs.Path(s"$stateDir/deltas/$delta"))
-            val written = spark.read.schema(keepers.schema)
-              .parquet(s"$stateDir/deltas/$delta")
+            .write.mode("overwrite").parquet(DeltaLog.stagingDir(stateDir, appId, batchId))
+          if (obs.get("n").asInstanceOf[Long] == 0L)
+            DeltaLog.dropStaging(spark, stateDir, appId, batchId)
+          else DeltaLog.commit(spark, stateDir, live, appId, Some(batchId),
+              staged = true, upkeep) { slot =>
+            val written = spark.read.schema(keepers.schema).parquet(slot.deltaPath)
             // the index DELTA is the batch's own accepted digests —
             // O(batch) bytes, never the cumulative index; distinct by
             // construction across deltas (a digest already in the
             // chain labels its carrier an index-dup, never a keeper).
             // A seeded first commit folds initialIndex in — one-time.
-            val xdelta = "x" + v.drop(1)
             val newDigests =
               written.filter(col("content_hash").isNotNull)
                 .select(col("content_hash")).distinct()
@@ -2545,28 +2012,12 @@ object StreamingOps {
                chainIndex.get.select(col("content_hash"))
                  .union(newDigests).distinct()
              else newDigests)
-              .write.mode("overwrite")
-              .parquet(s"$stateDir/idxdeltas/$xdelta")
-            val prevIdxM = live
-              .map(pv => readIndexManifest(spark,
-                s"$stateDir/$pv/index_manifest"))
-              .getOrElse(Seq.empty)
-            writeIndexManifest(spark, s"$stateDir/$v/index_manifest",
-              prevIdxM :+ xdelta)
-            val prevManifest = live
-              .map(pv => readManifest(spark, s"$stateDir/$pv/manifest"))
-              .getOrElse(Seq.empty)
-            writeManifest(spark, s"$stateDir/$v/manifest",
-              prevManifest :+ manifestEntryAt(spark,
-                s"$stateDir/deltas/$delta", delta, idCol, written))
-            writeTxn(spark, stateDir, v, appId, batchId)
-            writePointer(spark, stateDir, v, live, Some(appId -> batchId))
-            retainVersions.foreach(vacuumIndexVersions(spark, stateDir, _))
-            maybeCompact(spark, stateDir, autoCompactDeltas,
-              retainVersions,
-              () => compactCorpusState(spark, stateDir, idCol = idCol,
-                tierFraction = Some(AutoCompactTierFraction),
-                maxKeepers = autoCompactDeltas.get - 1))
+              .write.mode("overwrite").parquet(slot.indexDeltaPath)
+            DeltaLog.Publication(
+              live.map(DeltaLog.readManifest(spark, stateDir, _)).getOrElse(Nil) :+
+                DeltaLog.entryFor(spark, slot.deltaPath, slot.delta, idCol, written),
+              Some(live.map(DeltaLog.readIndexManifest(spark, stateDir, _))
+                .getOrElse(Nil) :+ slot.indexDelta))
           }
         }
       }
@@ -2591,7 +2042,7 @@ object StreamingOps {
       stateDir: String, tombstones: DataFrame,
       idCol: String = "doc_id"): Option[String] = {
     import spark.implicits._
-    latestVersion(spark, stateDir).map { lv =>
+    VersionedDir.latest(spark, stateDir).map { lv =>
       val corpus = loadCorpus(spark, stateDir).get
       val tombIds = tombstones.select(col(idCol)).distinct()
       // ONE pass over the corpus serves both outputs: the left join's
@@ -2604,10 +2055,8 @@ object StreamingOps {
         .join(tombIds.withColumn("__tomb", lit(true)), Seq(idCol), "left")
         .persist()
       val kept = labeled.filter(col("__tomb").isNull).drop("__tomb")
-      try {
-        val v = graft.core.VersionedDir.reserveNextVersion(spark, stateDir)
-        val delta = "d" + v.drop(1)
-        kept.write.mode("overwrite").parquet(s"$stateDir/deltas/$delta")
+      try DeltaLog.commit(spark, stateDir, Some(lv), "corpus-purge") { slot =>
+        kept.write.mode("overwrite").parquet(slot.deltaPath)
         // RETIRE from the live index, never rebuild from survivors: the
         // live index may hold digests the stream corpus does not carry
         // (the seeded initialIndex of a prior corpus) — a rebuild would
@@ -2625,17 +2074,12 @@ object StreamingOps {
         // the purge pays a full index pass anyway — collapse the digest
         // chain to one delta (and a singleton index manifest), mirroring
         // the corpus-delta collapse above
-        val xdelta = "x" + v.drop(1)
         loadCorpusIndex(spark, stateDir).get
           .join(retired, Seq("content_hash"), "left_anti")
-          .write.mode("overwrite").parquet(s"$stateDir/idxdeltas/$xdelta")
-        writeIndexManifest(spark, s"$stateDir/$v/index_manifest", Seq(xdelta))
-        writeManifest(spark, s"$stateDir/$v/manifest",
-          Seq(manifestEntryAt(spark, s"$stateDir/deltas/$delta", delta,
-            idCol, kept)))
-        writeTxn(spark, stateDir, v, "corpus-purge", -1L)
-        writePointer(spark, stateDir, v, Some(lv))
-        v
+          .write.mode("overwrite").parquet(slot.indexDeltaPath)
+        DeltaLog.Publication(
+          Seq(DeltaLog.entryFor(spark, slot.deltaPath, slot.delta, idCol, kept)),
+          Some(Seq(slot.indexDelta)))
       } finally labeled.unpersist()
     }
   }
@@ -2669,89 +2113,47 @@ object StreamingOps {
       idCol: String = "doc_id",
       tierFraction: Option[Double] = None,
       maxKeepers: Int = Int.MaxValue): Option[String] = {
-    latestVersion(spark, stateDir).flatMap { lv =>
-      val (fs, p) = graft.core.VersionedDir.fsOf(spark, stateDir)
-      val entries = readManifest(spark, s"$stateDir/$lv/manifest")
-      val idxNames = readIndexManifest(spark, s"$stateDir/$lv/index_manifest")
-      val (dKeep, dMerge) = tierSplit(
-        fs, p, "deltas", entries.map(_.delta), tierFraction, maxKeepers)
-      val (xKeep, xMerge) =
-        tierSplit(fs, p, "idxdeltas", idxNames, tierFraction, maxKeepers)
+    VersionedDir.latest(spark, stateDir).flatMap { lv =>
+      val entries = DeltaLog.readManifest(spark, stateDir, lv)
+      val idxNames = DeltaLog.readIndexManifest(spark, stateDir, lv)
+      val (dKeep, dMerge) = DeltaLog.tierSplit(
+        spark, stateDir, "deltas", entries.map(_.delta), tierFraction, maxKeepers)
+      val (xKeep, xMerge) = DeltaLog.tierSplit(
+        spark, stateDir, "idxdeltas", idxNames, tierFraction, maxKeepers)
       if (dMerge.size < 2 && xMerge.size < 2) None
-      else Some {
-        val v = graft.core.VersionedDir.reserveNextVersion(spark, stateDir)
-        val newManifest =
+      else Some(DeltaLog.commit(spark, stateDir, Some(lv), "corpus-optimize") { slot =>
+        val manifest =
           if (dMerge.size < 2) entries
           else {
-            val delta = "d" + v.drop(1)
             val paths = dMerge.map(d => s"$stateDir/deltas/$d")
-            val bytes = paths.map(pp => fs.getContentSummary(
-              new org.apache.hadoop.fs.Path(pp)).getLength).sum
-            val nFiles =
-              math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-            spark.read.parquet(paths: _*).repartition(nFiles)
-              .write.mode("overwrite").parquet(s"$stateDir/deltas/$delta")
-            // merged zone map from the OLD entries — min of mins / max of
-            // maxs over a union is exact; None if any member had no stats
-            val mergedOld = entries.filter(e => dMerge.contains(e.delta))
-            entries.filter(e => dKeep.contains(e.delta)) :+ ManifestEntry(
-              delta,
-              if (mergedOld.forall(_.min_id.isDefined))
-                mergedOld.flatMap(_.min_id).minOption else None,
-              if (mergedOld.forall(_.max_id.isDefined))
-                mergedOld.flatMap(_.max_id).maxOption else None)
+            spark.read.parquet(paths: _*)
+              .repartition(DeltaLog.fileCount(spark, paths, targetBytes))
+              .write.mode("overwrite").parquet(slot.deltaPath)
+            // merged zone map from the OLD entries — no scan
+            entries.filter(e => dKeep.contains(e.delta)) :+ DeltaLog.mergedEntry(
+              slot.delta, entries.filter(e => dMerge.contains(e.delta)))
           }
-        val newIdx =
+        val idx =
           if (xMerge.size < 2) idxNames
           else {
-            val xdelta = "x" + v.drop(1)
             spark.read.schema(digestIndexSchema).parquet(
                 xMerge.map(x => s"$stateDir/idxdeltas/$x"): _*)
               .coalesce(1)
-              .write.mode("overwrite").parquet(s"$stateDir/idxdeltas/$xdelta")
-            xKeep :+ xdelta
+              .write.mode("overwrite").parquet(slot.indexDeltaPath)
+            xKeep :+ slot.indexDelta
           }
-        writeIndexManifest(spark, s"$stateDir/$v/index_manifest", newIdx)
-        writeManifest(spark, s"$stateDir/$v/manifest", newManifest)
-        writeTxn(spark, stateDir, v, "corpus-optimize", -1L)
-        writePointer(spark, stateDir, v, Some(lv))
-        v
-      }
+        DeltaLog.Publication(manifest, Some(idx))
+      })
     }
   }
 
   /** Physical reclamation of corpus deltas no RETAINED version's
     * manifest references (after [[purgeCorpusState]] + version vacuum,
-    * the pre-purge deltas). Returns the deleted delta names. Safe under
+    * the pre-purge deltas; stale `_tmp-` staging dirs too —
+    * [[graft.core.DeltaLog.vacuumDeltas]]). Returns the deleted names. Safe under
     * the single-writer contract: a delta referenced by ANY existing
     * version survives, so pinned readers of retained versions are
     * unaffected. */
   def vacuumCorpusDeltas(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Seq[String] = {
-    val (fs, p) = graft.core.VersionedDir.fsOf(spark, stateDir)
-    val versions = graft.core.VersionedDir.versions(spark, stateDir)
-    def reclaim(root: String, refs: Set[String]): Seq[String] = {
-      val rootPath = new org.apache.hadoop.fs.Path(p, root)
-      if (!fs.exists(rootPath)) Seq.empty
-      else {
-        val doomed = fs.listStatus(rootPath).toSeq.filter(_.isDirectory)
-          .map(_.getPath.getName).filterNot(refs)
-        doomed.foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(rootPath, d), true))
-        doomed
-      }
-    }
-    val dataRefs = versions.flatMap { v =>
-      val m = new org.apache.hadoop.fs.Path(p, s"$v/manifest")
-      if (fs.exists(m)) readManifest(spark, m.toString).map(_.delta)
-      else Seq.empty
-    }.toSet
-    // digest-index deltas reclaim by the same rule over their own chain
-    val idxRefs = versions.flatMap { v =>
-      val m = new org.apache.hadoop.fs.Path(p, s"$v/index_manifest")
-      if (fs.exists(m)) readIndexManifest(spark, m.toString)
-      else Seq.empty
-    }.toSet
-    reclaim("deltas", dataRefs) ++ reclaim("idxdeltas", idxRefs)
-  }
+      stateDir: String): Seq[String] = DeltaLog.vacuumDeltas(spark, stateDir)
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-question probe: is AQE active for queries issued INSIDE a
@@ -9,11 +8,7 @@ import org.apache.spark.sql.functions._
   * a grouped aggregate run there. */
 object BatchAqeProbe {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** JVM-lifetime accumulation probe for the corpus-lifecycle rows
   * (`runMain graft.tools.CurationRepeatProbe <dataDir> <query> <iters>`):
   * runs ONE SparkEntry query N times in one JVM with Bench's settle
@@ -17,20 +15,7 @@ object CurationRepeatProbe {
     val qname = args.lift(1).getOrElse("pipeline_incremental_curation")
     val iters = args.lift(2).map(_.toInt).getOrElse(8)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus)
     val fn = graft.SparkEntry.queries(qname)
     def settle(): Unit = {
       spark.catalog.clearCache()

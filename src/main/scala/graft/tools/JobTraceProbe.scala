@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentHashMap
 
 /** Per-job trace for one SparkEntry query
@@ -18,16 +17,7 @@ object JobTraceProbe {
     val qnames = args.lift(1).map(_.split(",").toSeq).getOrElse(
       sys.error("usage: JobTraceProbe <dataDir> <q1,q2,...>"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus)
 
     case class J(start: Long, site: String, var end: Long = -1L,
       var tasks: Int = 0, var taskMs: Long = 0L)

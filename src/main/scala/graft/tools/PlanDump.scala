@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Write the formatted physical plan of each named SparkEntry query to
   * `<outDir>/<query>_<tag>.txt` in ONE JVM
   * (`runMain graft.tools.PlanDump <dataDir> <outDir> <tag> <q1,q2,...>`) —
@@ -17,16 +15,7 @@ object PlanDump {
       .map(_.split(",").toSeq)
       .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       graft.SparkEntry.queries.get(n) match {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print one SparkEntry query's formatted plan
   * (`runMain graft.tools.QueryExplain <dataDir> <query>`) — the
   * .explain("formatted") feedback loop as a runnable surface. */
@@ -10,14 +8,7 @@ object QueryExplain {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val qname = args.lift(1).getOrElse("q1_agg")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus)
     graft.SparkEntry.queries(qname)(spark, d).explain("formatted")
     spark.stop()
   }

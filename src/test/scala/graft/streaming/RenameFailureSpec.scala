@@ -54,7 +54,7 @@ class RenameFailureSpec extends SparkSpec {
   private def assertLiveManifestComplete(d: String): Unit = {
     val v = VersionedDir.latest(spark, d).get
     val (fs, _) = VersionedDir.fsOf(spark, d)
-    val missing = StreamingOps.readManifest(spark, s"$d/$v/manifest").map(_.delta)
+    val missing = graft.core.DeltaLog.readManifest(spark, d, v).map(_.delta)
       .filterNot(delta => fs.exists(new Path(s"$d/deltas/$delta")))
     assert(missing.isEmpty, s"live manifest $v names missing deltas: $missing")
   }

@@ -1076,7 +1076,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(StreamingOps.compactIndexState(spark, dir).contains("v3"))
     val idx = StreamingOps.loadBm25Index(spark, dir).get
     assert(idx.docCount == 9L)
-    assert(StreamingOps.readManifest(spark, s"$dir/v3/manifest").size == 1,
+    assert(graft.core.DeltaLog.readManifest(spark, dir, "v3").size == 1,
       "compaction must republish the corpus as one delta")
     assert(idx.asRows(qs).collect().map(_.toSeq).toSet == before,
       "compaction must be probe-neutral")
@@ -1535,11 +1535,11 @@ class StreamingOpsSpec extends SparkSpec {
     docs.grouped(2).foreach { s => src.addData(s: _*); q.processAllAvailable() }
     q.stop()
     val lv = graft.core.VersionedDir.latest(spark, dir).get
-    assert(StreamingOps.readManifest(spark, s"$dir/$lv/manifest").size <= 2,
+    assert(graft.core.DeltaLog.readManifest(spark, dir, lv).size <= 2,
       "auto-compaction must keep the live chain at or under the threshold")
     // the deltas dir holds only what retained manifests reference — the
     // pre-compaction chain reclaimed without a manual OPTIMIZE/vacuum
-    val referenced = StreamingOps.readManifest(spark, s"$dir/$lv/manifest")
+    val referenced = graft.core.DeltaLog.readManifest(spark, dir, lv)
       .map(_.delta).toSet
     val onDisk = new java.io.File(dir, "deltas").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
@@ -1580,7 +1580,7 @@ class StreamingOpsSpec extends SparkSpec {
     tiny.foreach { t => src.addData(t); q.processAllAvailable() }
     q.stop()
     val lv = graft.core.VersionedDir.latest(spark, dir).get
-    val chain = StreamingOps.readManifest(spark, s"$dir/$lv/manifest")
+    val chain = graft.core.DeltaLog.readManifest(spark, dir, lv)
       .map(_.delta)
     assert(chain.contains("d0"),
       s"the large base delta must survive compaction untouched: $chain")
@@ -1683,7 +1683,7 @@ class StreamingOpsSpec extends SparkSpec {
       sink(Seq(row).toDF("query_id", "item_id", "rank"), b.toLong)
     }
     val lv = graft.core.VersionedDir.latest(spark, dir).get
-    val referenced = StreamingOps.readManifest(spark, s"$dir/$lv/manifest")
+    val referenced = graft.core.DeltaLog.readManifest(spark, dir, lv)
       .map(_.delta).toSet
     assert(referenced.size <= 3,
       s"live chain must stay bounded by the threshold: $referenced")
@@ -1955,20 +1955,20 @@ class StreamingOpsSpec extends SparkSpec {
     val longs = Seq(Some(100L), Some(7L), None, Some(4213L))
       .toDF("doc_id").coalesce(2)
     longs.write.mode("overwrite").parquet(s"$dir/longs")
-    assert(StreamingOps.zoneFromFooters(spark, s"$dir/longs", "doc_id")
+    assert(graft.core.DeltaLog.zoneFromFooters(spark, s"$dir/longs", "doc_id")
       .contains((Some(7L), Some(4213L))))
     val ints = Seq(3, 99, 12).toDF("doc_id")
     ints.write.mode("overwrite").parquet(s"$dir/ints")
-    assert(StreamingOps.zoneFromFooters(spark, s"$dir/ints", "doc_id")
+    assert(graft.core.DeltaLog.zoneFromFooters(spark, s"$dir/ints", "doc_id")
       .contains((Some(3L), Some(99L))))
     val strs = Seq("100", "99").toDF("doc_id")
     strs.write.mode("overwrite").parquet(s"$dir/strs")
-    assert(StreamingOps.zoneFromFooters(spark, s"$dir/strs", "doc_id").isEmpty,
+    assert(graft.core.DeltaLog.zoneFromFooters(spark, s"$dir/strs", "doc_id").isEmpty,
       "string footer stats are lexicographic and must decline")
     // all-null id column: stats carry no values → conservative (None, None)
     val nulls = Seq[Option[Long]](None, None).toDF("doc_id")
     nulls.write.mode("overwrite").parquet(s"$dir/nulls")
-    assert(StreamingOps.zoneFromFooters(spark, s"$dir/nulls", "doc_id")
+    assert(graft.core.DeltaLog.zoneFromFooters(spark, s"$dir/nulls", "doc_id")
       .contains((None, None)))
   }
 
@@ -2242,7 +2242,7 @@ class StreamingOpsSpec extends SparkSpec {
     tiny.foreach { t => src.addData(t); q.processAllAvailable() }
     q.stop()
     val lv = graft.core.VersionedDir.latest(spark, dir).get
-    val chain = StreamingOps.readManifest(spark, s"$dir/$lv/manifest").map(_.delta)
+    val chain = graft.core.DeltaLog.readManifest(spark, dir, lv).map(_.delta)
     assert(chain.contains("d0") && chain.size <= 3,
       s"base kept, fan-in bounded: $chain")
     assert(times("deltas/d0") == baseTimes,
@@ -2278,7 +2278,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(StreamingOps.loadCorpusIndex(spark, dir).get
       .as[String].collect().toSet == idxBefore)
     // the live manifest now lists ONE delta; vacuums reclaim the chain
-    assert(StreamingOps.readManifest(spark, s"$dir/v3/manifest").size == 1)
+    assert(graft.core.DeltaLog.readManifest(spark, dir, "v3").size == 1)
     StreamingOps.vacuumIndexVersions(spark, dir, keep = 1)
     // BOTH physical chains reclaim: the corpus deltas and the digest-
     // index deltas the compaction collapsed

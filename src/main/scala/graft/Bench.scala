@@ -121,41 +121,6 @@ object Bench {
     // geometry the k-means fit was 40 s of the cold serving number)
     if (selected.exists(_._1 == "pipeline_recsys"))
       prewarm("serving")(Flagship.prewarmServing(spark, sfDir))
-    // Per-query isolation, run before EVERY timed execution: earlier
-    // executions leave cached blocks behind (MLlib fits persist internal
-    // RDDs and never release them; ops legitimately persist inside one
-    // query's lifetime). On a real cluster each query would start from a
-    // fresh session — without this, late-alphabet queries pay GC/eviction
-    // for the whole run's leftovers (measured: pipeline_recsys 74 s
-    // contaminated vs ~30 s isolated at sf0.1).
-    def settle(): Unit = {
-      spark.catalog.clearCache()
-      // blocking = true: unpersist(false) only ENQUEUES block removal —
-      // the async drop then landed inside the NEXT query's timed window
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      // take the previous execution's garbage-collection debt HERE,
-      // outside the timed window — without this the query after a heavy
-      // one paid its predecessor's full GC inside its own timing
-      // (dedup_exact_norm measured 0.9 s isolated vs 9-13 s after
-      // dedup_clusters). The settle pause comes AFTER the collection: the
-      // full GC itself is synchronous, but G1 schedules concurrent/mixed
-      // follow-up work (and executors finish async cleanup) right after
-      // it — starting the timer immediately showed rare 4-12x per-query
-      // outliers on queries that are flat in isolation
-      System.gc(); Thread.sleep(150)
-      // …and the async ContextCleaner only frees broadcast blocks AFTER
-      // a GC proves their driver references dead, so after a heavy ML
-      // block one gc + fixed sleep left hundreds of MB of storage debt in
-      // later timed windows (r3: pipeline_curation 30.5 s in the official
-      // run vs 9.9 s isolated). Poll the storage pool until it drains
-      // (or 2.4 s), GC'ing each round to re-trigger the cleaner.
-      def storageUsed(): Long = spark.sparkContext.getExecutorMemoryStatus
-        .values.map { case (max, rem) => max - rem }.sum
-      var settled = 0
-      while (storageUsed() > (32L << 20) && settled < 2400) {
-        System.gc(); Thread.sleep(300); settled += 300
-      }
-    }
     // One isolated timed execution. setJobGroup is a thread-local: it
     // must run on the thread that triggers the action (inside the
     // Future), or cancelJobGroup would cancel nothing and a timed-out
@@ -167,7 +132,7 @@ object Bench {
     // under-reported exactly that way). The noop sink evaluates the full
     // result and discards it.
     def timedRun(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      settle()
+      settle(spark)
       val t0 = System.nanoTime()
       val ok = try {
         Await.result(Future {
@@ -372,6 +337,42 @@ object Bench {
     } else System.err.println(
       s"[bench] selective run — skipped writing $artPath")
     spark.stop()
+  }
+
+  /** Per-query isolation, run before EVERY timed execution: earlier
+    * executions leave cached blocks behind (MLlib fits persist internal
+    * RDDs and never release them; ops legitimately persist inside one
+    * query's lifetime). On a real cluster each query would start from a
+    * fresh session — without this, late-alphabet queries pay GC/eviction
+    * for the whole run's leftovers (measured: pipeline_recsys 74 s
+    * contaminated vs ~30 s isolated at sf0.1). */
+  def settle(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    // blocking = true: unpersist(false) only ENQUEUES block removal —
+    // the async drop then landed inside the NEXT query's timed window
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    // take the previous execution's garbage-collection debt HERE,
+    // outside the timed window — without this the query after a heavy
+    // one paid its predecessor's full GC inside its own timing
+    // (dedup_exact_norm measured 0.9 s isolated vs 9-13 s after
+    // dedup_clusters). The settle pause comes AFTER the collection: the
+    // full GC itself is synchronous, but G1 schedules concurrent/mixed
+    // follow-up work (and executors finish async cleanup) right after
+    // it — starting the timer immediately showed rare 4-12x per-query
+    // outliers on queries that are flat in isolation
+    System.gc(); Thread.sleep(150)
+    // …and the async ContextCleaner only frees broadcast blocks AFTER
+    // a GC proves their driver references dead, so after a heavy ML
+    // block one gc + fixed sleep left hundreds of MB of storage debt in
+    // later timed windows (r3: pipeline_curation 30.5 s in the official
+    // run vs 9.9 s isolated). Poll the storage pool until it drains
+    // (or 2.4 s), GC'ing each round to re-trigger the cleaner.
+    def storageUsed(): Long = spark.sparkContext.getExecutorMemoryStatus
+      .values.map { case (max, rem) => max - rem }.sum
+    var settled = 0
+    while (storageUsed() > (32L << 20) && settled < 2400) {
+      System.gc(); Thread.sleep(300); settled += 300
+    }
   }
 
   /** The benchmark's session on `local[cpus]`: its planner settings

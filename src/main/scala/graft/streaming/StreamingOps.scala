@@ -1377,7 +1377,7 @@ object StreamingOps {
     DeltaLog.commit(spark, indexDir, Some(lv), app) { slot =>
       rows.repartition(nFiles).write.mode("overwrite")
         .parquet(s"${slot.deltaPath}/index")
-      indexPublication(spark, indexDir, slot, Nil, "__item_id", None,
+      indexPublication(spark, indexDir, slot, Nil, "__item_id", Some(rows.schema),
         Some(("__cid", nBuckets)))
     }
   }
@@ -1791,7 +1791,9 @@ object StreamingOps {
       corpusDir: String, signalDir: String,
       signal: graft.core.EnsembleOp,
       idCol: String = "doc_id",
-      retainVersions: Option[Int] = None): Option[String] =
+      retainVersions: Option[Int] = None): Option[String] = {
+    // a bad retention fails here, before a signal version is written
+    DeltaLog.checkUpkeep(retainVersions, None)
     VersionedDir.latest(spark, corpusDir).flatMap { cv =>
       val lastSv = VersionedDir.latest(spark, signalDir)
       val lastSrc = lastSv.flatMap(sv =>
@@ -1831,6 +1833,7 @@ object StreamingOps {
         Some(v)
       }
     }
+  }
 
   /** The ingest loop WITH derived-state maintenance — the streaming
     * twin of the whole incremental-curation discipline

@@ -1,16 +1,12 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftTestProbes
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.core.{Ensemble, EnsemblePersistence}
 import graft.ops._
+import graft.tools.JobMeter
 
 /** The §3.3 lifecycle end-to-end: persist a fitted serving graph, score
   * a request parquet through graft.Serve, and read the response — the
@@ -53,33 +49,10 @@ class ServeSpec extends SparkSpec {
     }
   }
 
-  /** Jobs and tasks run under one job group. */
-  private class GroupCounter(group: String) extends SparkListener {
-    val jobs = new AtomicInteger
-    val tasks = new AtomicInteger
-    private val stages = ConcurrentHashMap.newKeySet[Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-        jobs.incrementAndGet()
-        e.stageIds.foreach(stages.add)
-      }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (stages.contains(e.stageId)) tasks.incrementAndGet()
-  }
-
   /** (rows, jobs, tasks) of collecting `df`. */
   private def counted(df: org.apache.spark.sql.DataFrame): (Array[Row], Int, Int) = {
-    val sc = spark.sparkContext
-    val group = s"serve-gate-${System.nanoTime()}"
-    val counter = new GroupCounter(group)
-    GraftTestProbes.drainListeners(sc)
-    sc.addSparkListener(counter)
-    try {
-      sc.setJobGroup(group, "job-count gate")
-      val rows = try df.collect() finally sc.clearJobGroup()
-      GraftTestProbes.drainListeners(sc)
-      (rows, counter.jobs.get, counter.tasks.get)
-    } finally sc.removeSparkListener(counter)
+    val (rows, c) = JobMeter.inGroup(spark.sparkContext)(df.collect())
+    (rows, c.jobs, c.tasks)
   }
 
   test("a reloaded flagship ensemble answers a request in one narrow job") {

@@ -2,10 +2,9 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.core.Ensemble
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.tools.JobMeter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The fit-once / serve-many contract ([[FittableOp]]): every bound twin
   * must produce BIT-IDENTICAL output to its unfitted op (same double
@@ -165,20 +164,10 @@ class FittedOpsSpec extends SparkSpec {
       FillMissing(medianCols = Seq("qty_n")),
       StandardScale(Seq("qty"))), fixture.schema)
     val fitted = FittedOps.fitEnsemble(ens, fixture)
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // building the serving plan must not run anything: the fit is done
-      val plan = fitted.transform(fixture)
-      Thread.sleep(300) // listener bus drain
-      assert(jobs.get() == 0,
-        s"bound transform scheduled ${jobs.get()} eager jobs; expected 0")
-      // and the plan still evaluates
-      assert(plan.count() == 6)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // building the serving plan must not run anything: the fit is done
+    val (plan, c) = JobMeter.inGroup(spark.sparkContext)(fitted.transform(fixture))
+    assert(c.jobs == 0, s"bound transform scheduled ${c.jobs} eager jobs; expected 0")
+    // and the plan still evaluates
+    assert(plan.count() == 6)
   }
 }

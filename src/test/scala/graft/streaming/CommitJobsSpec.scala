@@ -1,12 +1,9 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftTestProbes
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
+import graft.tools.JobMeter
 
 /** Spark jobs per sink call, pinned: a streaming commit's wall time at
   * small batch sizes is jobs × the per-job scheduling floor, so any
@@ -15,28 +12,9 @@ import graft.SparkSpec
 class CommitJobsSpec extends SparkSpec {
   import spark.implicits._
 
-  private class GroupJobs(group: String) extends SparkListener {
-    val jobs = new AtomicInteger
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-        jobs.incrementAndGet()
-  }
-
-  /** Jobs `sink(batch, batchId)` runs. */
-  private def jobsOf(sink: (DataFrame, Long) => Unit, batch: DataFrame,
-      batchId: Long): Int = {
-    val sc = spark.sparkContext
-    val group = s"commit-jobs-${System.nanoTime()}"
-    val counter = new GroupJobs(group)
-    GraftTestProbes.drainListeners(sc)
-    sc.addSparkListener(counter)
-    try {
-      sc.setJobGroup(group, "jobs per commit")
-      try sink(batch, batchId) finally sc.clearJobGroup()
-      GraftTestProbes.drainListeners(sc)
-      counter.jobs.get
-    } finally sc.removeSparkListener(counter)
-  }
+  /** Jobs `body` runs. */
+  private def jobsOf(body: => Unit): Int =
+    JobMeter.inGroup(spark.sparkContext)(body)._2.jobs
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -51,9 +29,9 @@ class CommitJobsSpec extends SparkSpec {
       autoCompactDeltas = Some(2))
     sink(docs(1, 20), 0L)
     val measured = Map(
-      "data commit" -> jobsOf(sink, docs(21, 40), 1L),
-      "redelivered batch" -> jobsOf(sink, docs(21, 40), 1L),
-      "compacting commit" -> jobsOf(sink, docs(41, 60), 2L))
+      "data commit" -> jobsOf(sink(docs(21, 40), 1L)),
+      "redelivered batch" -> jobsOf(sink(docs(21, 40), 1L)),
+      "compacting commit" -> jobsOf(sink(docs(41, 60), 2L)))
     assert(graft.core.VersionedDir.latest(spark, dir).contains("v3"),
       "the third commit must trigger the compaction commit v3")
     assert(measured == Map("data commit" -> 7, "redelivered batch" -> 0,
@@ -64,7 +42,7 @@ class CommitJobsSpec extends SparkSpec {
     val dir = tmpDir("jobs_bm25_")
     val sink = StreamingOps.bm25IndexSink(dir)
     sink(docs(1, 20), 0L)
-    val n = jobsOf(sink, docs(21, 40), 1L)
+    val n = jobsOf(sink(docs(21, 40), 1L))
     assert(n == 7, s"measured $n")
   }
 
@@ -77,7 +55,23 @@ class CommitJobsSpec extends SparkSpec {
       "query_id", "query_vec", nprobe = 1)
     val sink = StreamingOps.annIvfIndexSink(dir, op)
     sink(items(1, 10), 0L)
-    val n = jobsOf(sink, items(11, 20), 1L)
+    val n = jobsOf(sink(items(11, 20), 1L))
     assert(n == 6, s"measured $n")
+  }
+
+  test("refitAnnIvfIndex: jobs per refit commit") {
+    val dir = tmpDir("jobs_refit_")
+    def items(lo: Long, hi: Long): DataFrame =
+      (lo to hi).map(i => (i, Seq((i % 5).toFloat, (i % 3).toFloat)))
+        .toDF("item_id", "embedding")
+    val op = graft.ops.AnnIvf(items(1, 10), Seq(Seq(0.0, 0.0), Seq(4.0, 2.0)),
+      "query_id", "query_vec", nprobe = 1)
+    val sink = StreamingOps.annIvfIndexSink(dir, op)
+    sink(items(1, 10), 0L)
+    sink(items(11, 20), 1L)
+    // the k-means fit plus the republish commit; the commit reads its
+    // just-written delta with the schema in hand (no inference job)
+    val n = jobsOf(StreamingOps.refitAnnIvfIndex(spark, dir, nlist = 2, maxIter = 2))
+    assert(n == 22, s"measured $n")
   }
 }

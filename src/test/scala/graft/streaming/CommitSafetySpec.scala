@@ -76,6 +76,19 @@ class CommitSafetySpec extends SparkSpec {
       assert(!exists(s"$d/v0") && !exists(s"$d/_LATEST"), s"curatedCorpusSink committed into $d")
   }
 
+  test("publishSignalsFor with a bad retention fails before publishing a signal version") {
+    val (corpusDir, signalDir) = (tmpDir("bad_publish_"), tmpDir("bad_publish_sig_"))
+    StreamingOps.corpusIngestSink(corpusDir)(
+      Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id", "text"), 0L)
+    val published = Try(StreamingOps.publishSignalsFor(spark, corpusDir, signalDir,
+      graft.ops.QualitySignals(keyCols = Seq("doc_id", "content_hash")),
+      retainVersions = Some(-1)))
+    assert(published.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]),
+      s"publishSignalsFor(retainVersions=-1) must fail: $published")
+    assert(!exists(s"$signalDir/v0") && !exists(s"$signalDir/_LATEST"),
+      "publishSignalsFor(retainVersions=-1) published a signal version")
+  }
+
   test("a stale _tmp- staging dir is never read, is vacuumed, and the retry overwrites it") {
     val dir = tmpDir("stale_tmp_")
     def docs(lo: Long, hi: Long): DataFrame =

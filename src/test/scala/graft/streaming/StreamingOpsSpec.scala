@@ -36,6 +36,24 @@ class StreamingOpsSpec extends SparkSpec {
     assert(out.contains(("view", 1L, 100L)))
   }
 
+  test("a foreachBatch body runs with AQE on: its grouped aggregate plans adaptively") {
+    implicit val sqlCtx = spark.sqlContext
+    val src = MemoryStream[(Long, String)]
+    @volatile var seen: Option[(String, String)] = None
+    val q = src.toDF().toDF("id", "s").writeStream.foreachBatch {
+      (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        val agg = batch.groupBy("s").count()
+        agg.write.format("noop").mode("overwrite").save()
+        seen = Some((batch.sparkSession.conf.get("spark.sql.adaptive.enabled"),
+          agg.queryExecution.executedPlan.getClass.getSimpleName))
+    }.start()
+    try {
+      src.addData((1L, "a"), (2L, "b"), (3L, "a"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(seen == Some(("true", "AdaptiveSparkPlanExec")), s"seen in the batch body: $seen")
+  }
+
   test("scoreStream serves a per-row ensemble over a request stream") {
     implicit val sqlCtx = spark.sqlContext
     import graft.core.Ensemble
@@ -1839,13 +1857,8 @@ class StreamingOpsSpec extends SparkSpec {
         src.addData((9L, "omega")) // content no prior batch carries
         q.processAllAvailable()
         q.stop()
-        // the execution-listener bus is async: settle until no new scan
-        // roots arrive (bounded)
-        var last = -1
-        var spins = 0
-        while (scanned.size != last && spins < 50) {
-          last = scanned.size; spins += 1; Thread.sleep(100)
-        }
+        // the execution listener rides the async listener bus: drain it
+        org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       } finally spark.listenerManager.unregister(listener)
       // positive control: the commit DID execute observed file scans
       // (the written-delta read-back at minimum), so the collector works

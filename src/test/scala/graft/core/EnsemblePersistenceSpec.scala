@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.SparkSpec
 import graft.ops._
 
@@ -93,179 +95,6 @@ class EnsemblePersistenceSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       EnsemblePersistence.save(ens, Files.tmp("ens_bad"), spark)
     }
-  }
-
-  test("parameter-only ops round-trip by value (dedup/multimodal family)") {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING, sig BIGINT")
-    val ops = Seq(
-      ExactDedup("doc_id", "text", normalized = true),
-      NgramJaccardDedup("doc_id", "text", n = 4, thresholdBp = 7500),
-      MinHashDedup("doc_id", "text", n = 3, numHashes = 128, bands = 32, thresholdBp = 8500),
-      SimHashDedup("doc_id", "text", n = 3, maxHamming = 7, hashCol = Some("sig")))
-    // each op replaces the input schema entirely, so persist them as
-    // single-op ensembles and compare case-class equality
-    ops.foreach { op =>
-      val dir = Files.tmp("ens_param")
-      EnsemblePersistence.save(Ensemble(Seq(op), schema), dir, spark)
-      assert(EnsemblePersistence.load(dir, spark).ops.head == op)
-    }
-    val vecSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    val cos = CosineNearDup("vec_id", "embedding", 0.6, exact = false,
-      numBits = 6, numTables = 12)
-    val dir2 = Files.tmp("ens_param")
-    EnsemblePersistence.save(Ensemble(Seq(cos), vecSchema), dir2, spark)
-    assert(EnsemblePersistence.load(dir2, spark).ops.head == cos)
-
-    val mlp = MlpScorer(Seq(
-      MlpLayer(Seq(Seq(0.5, -0.25), Seq(1.0, 0.5)), Seq(0.125, -2.0), "relu"),
-      MlpLayer(Seq(Seq(2.0, 4.0)), Seq(0.0625), "linear")), "embedding")
-    val dirMlp = Files.tmp("ens_param")
-    EnsemblePersistence.save(Ensemble(Seq(mlp), vecSchema), dirMlp, spark)
-    assert(EnsemblePersistence.load(dirMlp, spark).ops.head == mlp)
-
-    // fit-time center round-trips by value (and its absence stays None)
-    val cosCtr = cos.copy(center = Some(Seq(0.25, -1.5)))
-    val dirCtr = Files.tmp("ens_param")
-    EnsemblePersistence.save(Ensemble(Seq(cosCtr), vecSchema), dirCtr, spark)
-    assert(EnsemblePersistence.load(dirCtr, spark).ops.head == cosCtr)
-
-    val sem = SemanticNearDup(Seq(Seq(0.1, 0.2), Seq(-0.3, 0.4)),
-      "vec_id", "embedding", 0.55)
-    val dirSem = Files.tmp("ens_sem")
-    EnsemblePersistence.save(Ensemble(Seq(sem), vecSchema), dirSem, spark)
-    assert(EnsemblePersistence.load(dirSem, spark).ops.head == sem,
-      "fitted centroids persist as parameter doubles")
-
-    val mediaOps = Seq(
-      DecodeMedia("media_id", "content", "img_"),
-      SampleFrames("media_id", "content", frameBytes = 32, stride = 3))
-    mediaOps.foreach { op =>
-      val dir = Files.tmp("ens_media")
-      EnsemblePersistence.save(Ensemble(Seq(op), MultimodalOps.mediaSchema), dir, spark)
-      assert(EnsemblePersistence.load(dir, spark).ops.head == op)
-    }
-
-    val rep = RepetitionStats("text", "doc_id", topNs = Seq(2, 4),
-      dupNs = Seq(6), topBpMax = Map(2 -> 1900L, 4 -> 1700L),
-      dupBpMax = Map(6 -> 1400L))
-    val dir3 = Files.tmp("ens_param")
-    EnsemblePersistence.save(Ensemble(Seq(rep), schema), dir3, spark)
-    assert(EnsemblePersistence.load(dir3, spark).ops.head == rep)
-
-    val vr = ValidateRequests(Seq("doc_id"), Map("sig" -> (0.0, 10.0)), "err")
-    val dirV = Files.tmp("ens_vr")
-    EnsemblePersistence.save(Ensemble(Seq(vr), schema), dirV, spark)
-    assert(EnsemblePersistence.load(dirV, spark).ops.head == vr)
-
-    val pii = MaskPii("text", "clean_text")
-    val dir5 = Files.tmp("ens_pii")
-    EnsemblePersistence.save(Ensemble(Seq(pii), schema), dir5, spark)
-    assert(EnsemblePersistence.load(dir5, spark).ops.head == pii)
-
-    val bkt = Bucketize(Map("sig" -> Seq(1.5, 2.5, 9.0)), "_bin")
-    val dir6 = Files.tmp("ens_bkt")
-    EnsemblePersistence.save(Ensemble(Seq(bkt), schema), dir6, spark)
-    assert(EnsemblePersistence.load(dir6, spark).ops.head == bkt)
-
-    val seqSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING")
-    val seqOp = TrainingSequences("user_id", "ts", "event_id", "event_type", 5)
-    val dir4 = Files.tmp("ens_seq")
-    EnsemblePersistence.save(Ensemble(Seq(seqOp), seqSchema), dir4, spark)
-    assert(EnsemblePersistence.load(dir4, spark).ops.head == seqOp)
-
-    val embOps = Seq(
-      NormalizeEmbeddings("embedding", "unit_vec"),
-      MeanPoolEmbeddings("vec_id", "embedding"))
-    embOps.foreach { op =>
-      val dir = Files.tmp("ens_emb")
-      EnsemblePersistence.save(Ensemble(Seq(op), vecSchema), dir, spark)
-      assert(EnsemblePersistence.load(dir, spark).ops.head == op)
-    }
-  }
-
-  test("sampling/chunking/quantize ops round-trip by value") {
-    val docSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING, lang STRING")
-    val ss = StratifiedSample("doc_id", "lang",
-      Map("en" -> 10000, "de" -> 500), defaultBp = 100, salt = "s3")
-    val dirS = Files.tmp("ens_strat")
-    EnsemblePersistence.save(Ensemble(Seq(ss), docSchema), dirS, spark)
-    assert(EnsemblePersistence.load(dirS, spark).ops.head == ss)
-
-    val dc = DocumentChunks("doc_id", "text", chunkSize = 16, overlap = 4)
-    val dirD = Files.tmp("ens_chunks")
-    EnsemblePersistence.save(Ensemble(Seq(dc), docSchema), dirD, spark)
-    assert(EnsemblePersistence.load(dirD, spark).ops.head == dc)
-
-    val vecSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "vec_id BIGINT, embedding ARRAY<FLOAT>")
-    val qe = QuantizeEmbeddings(levels = 127)
-    val dirQ = Files.tmp("ens_quant")
-    EnsemblePersistence.save(Ensemble(Seq(qe), vecSchema), dirQ, spark)
-    assert(EnsemblePersistence.load(dirQ, spark).ops.head == qe)
-
-    val chunkSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, chunk_id BIGINT, n_tokens BIGINT")
-    val pk = PackChunks(budget = 512, shards = 16, salt = "p1")
-    val dirP = Files.tmp("ens_pack")
-    EnsemblePersistence.save(Ensemble(Seq(pk), chunkSchema), dirP, spark)
-    assert(EnsemblePersistence.load(dirP, spark).ops.head == pk)
-
-    val um = UpsampleMix("doc_id", "lang",
-      Map("en" -> 25000, "zh" -> 15000), defaultBp = 5000, salt = "m1")
-    val dirU = Files.tmp("ens_mix")
-    EnsemblePersistence.save(Ensemble(Seq(um), docSchema), dirU, spark)
-    assert(EnsemblePersistence.load(dirU, spark).ops.head == um)
-
-    val wsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, lang STRING, n_chars BIGINT")
-    val wsOp = WeightedSampleByGroup("lang", "n_chars", "doc_id", k = 7, salt = "w1")
-    val dirW = Files.tmp("ens_wsample")
-    EnsemblePersistence.save(Ensemble(Seq(wsOp), wsSchema), dirW, spark)
-    assert(EnsemblePersistence.load(dirW, spark).ops.head == wsOp)
-
-    val sg = ScrubSharedGrams(n = 6, minDocs = 3)
-    val dirG = Files.tmp("ens_scrub")
-    EnsemblePersistence.save(Ensemble(Seq(sg), docSchema), dirG, spark)
-    assert(EnsemblePersistence.load(dirG, spark).ops.head == sg)
-
-    val scoreSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, source STRING, score DOUBLE")
-    Seq(false, true).foreach { approx =>
-      val tf = TopFractionByGroup("source", "score", "doc_id",
-        Map("src0" -> 2000), defaultBp = 9000, approx = approx)
-      val dirT = Files.tmp("ens_topfrac")
-      EnsemblePersistence.save(Ensemble(Seq(tf), scoreSchema), dirT, spark)
-      assert(EnsemblePersistence.load(dirT, spark).ops.head == tf)
-    }
-  }
-
-  test("fitted-FE family round-trips by value (TargetEncoding/JoinGroupby/HashBucket/FillMissing/Clip/Log/ListSlice)") {
-    val feSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "cat STRING, y BIGINT, v DOUBLE, arr ARRAY<BIGINT>")
-    val ops: Seq[EnsembleOp] = Seq(
-      TargetEncoding(Seq("cat"), "y", smoothing = 5.0, leaveOneOut = true,
-        broadcastBudgetBytes = 123L),
-      JoinGroupby("cat", Seq("y"), Seq("count", "mean"), broadcastBudgetBytes = 7L),
-      HashBucket(Seq("cat"), 64, salt = "s9", suffix = "_b"),
-      FillMissing(constants = Map("cat" -> "?", "y" -> 0L, "v" -> 1.5),
-        medianCols = Seq.empty, approxMedian = false, suffix = "_f"),
-      Clip(Map("v" -> (Some(0.0), None), "y" -> (None, Some(9.0)))),
-      LogTransform(Seq("v"), suffix = "_ln"),
-      ListSlice(Seq("arr"), -2, None, suffix = "_t"))
-    ops.foreach { op =>
-      val dir = Files.tmp("ens_fe")
-      EnsemblePersistence.save(Ensemble(Seq(op), feSchema), dir, spark)
-      assert(EnsemblePersistence.load(dir, spark).ops.head == op, op.name)
-    }
-    // end=Some(n) survives (None vs Some(0) must not collapse)
-    val sl = ListSlice(Seq("arr"), 0, Some(0))
-    val dir = Files.tmp("ens_fe_sl")
-    EnsemblePersistence.save(Ensemble(Seq(sl), feSchema), dir, spark)
-    assert(EnsemblePersistence.load(dir, spark).ops.head == sl)
   }
 
   test("Decontaminate round-trips its eval corpus as a side artifact") {
@@ -626,17 +455,6 @@ class EnsemblePersistenceSpec extends SparkSpec {
       op.transform(live).orderBy("doc_id").collect().toSeq)
   }
 
-  test("PrefixDedup round-trips as pure parameters") {
-    val docs = Seq((1L, "a b c d e"), (2L, "a b c")).toDF("doc_id", "text")
-    val op = PrefixDedup(n = 3)
-    val dir = Files.tmp("ens_prefixdedup")
-    EnsemblePersistence.save(Ensemble(Seq(op), docs.schema), dir, spark)
-    val loaded = EnsemblePersistence.load(dir, spark)
-    assert(loaded.ops.head == op)
-    assert(loaded.transform(docs).collect().toSeq ==
-      op.transform(docs).collect().toSeq)
-  }
-
   test("FuzzyDecontaminate round-trips its eval corpus as a side artifact") {
     val corpus = Seq((1L, "the quick brown fox jumps over the dog"),
       (2L, "nothing shared here at all today")).toDF("doc_id", "text")
@@ -659,41 +477,6 @@ class EnsemblePersistenceSpec extends SparkSpec {
     val loaded = EnsemblePersistence.load(dir, spark)
     assert(loaded.transform(corpus).select("doc_id").collect()
       .map(_.getLong(0)).toSeq == Seq(1L))
-  }
-
-  test("MixturePlan and PcaProject round-trip as pure parameters") {
-    val docs = Seq(("en", 10L)).toDF("lang", "toks")
-    val mp = MixturePlan("lang", "toks", Map("en" -> 5000), 100L, defaultBp = 500)
-    val dir1 = Files.tmp("ens_mixplan")
-    EnsemblePersistence.save(Ensemble(Seq(mp), docs.schema), dir1, spark)
-    assert(EnsemblePersistence.load(dir1, spark).ops.head == mp)
-    val emb = Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
-    val pca = PcaProject(Seq(Seq(0.6, 0.8), Seq(-0.8, 0.6)))
-    val dir2 = Files.tmp("ens_pca")
-    EnsemblePersistence.save(Ensemble(Seq(pca), emb.schema), dir2, spark)
-    val loaded = EnsemblePersistence.load(dir2, spark)
-    assert(loaded.ops.head == pca)
-    assert(loaded.transform(emb).collect().toSeq == pca.transform(emb).collect().toSeq)
-  }
-
-  test("ClusterAssign and TextQualityClassifier round-trip as pure parameters") {
-    val emb = Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
-    val ca = ClusterAssign(Seq(Seq(0.0, 0.0), Seq(3.0, 4.0)), withDistance = true)
-    val dir1 = Files.tmp("ens_cluster")
-    EnsemblePersistence.save(Ensemble(Seq(ca), emb.schema), dir1, spark)
-    val loadedCa = EnsemblePersistence.load(dir1, spark)
-    assert(loadedCa.ops.head == ca)
-    assert(loadedCa.transform(emb).collect().toSeq ==
-      ca.transform(emb).collect().toSeq)
-    val docs = Seq((1L, "some text here")).toDF("doc_id", "text")
-    val qc = TextQualityClassifier((1 to 8).map(_.toDouble), -0.25,
-      numBuckets = 8)
-    val dir2 = Files.tmp("ens_qc")
-    EnsemblePersistence.save(Ensemble(Seq(qc), docs.schema), dir2, spark)
-    val loadedQc = EnsemblePersistence.load(dir2, spark)
-    assert(loadedQc.ops.head == qc)
-    assert(loadedQc.transform(docs).collect().toSeq ==
-      qc.transform(docs).collect().toSeq)
   }
 
   test("QuantizerDrift round-trips its reference catalog as a side artifact") {
@@ -720,40 +503,386 @@ class EnsemblePersistenceSpec extends SparkSpec {
       op.transform(ranked).collect().toSeq)
   }
 
-  test("CalibrateScores round-trips as pure parameters") {
-    val frame = Seq((1L, 3.0)).toDF("id", "score")
-    val cal = CalibrateScores(Seq(1.0, 2.0, 5.0), Seq(0.1, 0.5, 0.9))
-    val dir = Files.tmp("ens_calibrate")
-    EnsemblePersistence.save(Ensemble(Seq(cal), frame.schema), dir, spark)
-    val loaded = EnsemblePersistence.load(dir, spark)
-    assert(loaded.ops.head == cal)
-    assert(loaded.transform(frame).collect().toSeq ==
-      cal.transform(frame).collect().toSeq)
+  test("save and load go through the dir's Hadoop filesystem (a file: URI)") {
+    val local = Files.tmp("ens_fs")
+    val input = Seq((1L, 7), (2L, 8)).toDF("id", "n")
+    val features = Seq((1L, 2.5)).toDF("id", "x")
+    val ens = Ensemble(Seq(QueryFeatureStore(features, "id", Seq("x"))), input.schema)
+    EnsemblePersistence.save(ens, "file:" + local, spark)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(local, "metadata.json")),
+      "metadata.json must land in the dir, not under a relative 'file:' path")
+    val loaded = EnsemblePersistence.load("file:" + local, spark)
+    assert(sortedRows(loaded.transform(input)) == sortedRows(ens.transform(input)))
   }
 
-  test("ResampleLocf and BoilerplateReport round-trip by value") {
-    val ev = Seq((1L, new java.sql.Timestamp(1000L), 1L, 2.0))
-      .toDF("user_id", "ts", "event_id", "value")
-    val rs = ResampleLocf()
-    val dir1 = Files.tmp("ens_resample")
-    EnsemblePersistence.save(Ensemble(Seq(rs), ev.schema), dir1, spark)
-    assert(EnsemblePersistence.load(dir1, spark).ops.head == rs)
-    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
-    val br = BoilerplateReport(n = 3, minDocs = 2, topK = 7)
-    val dir2 = Files.tmp("ens_boiler")
-    EnsemblePersistence.save(Ensemble(Seq(br), docs.schema), dir2, spark)
-    assert(EnsemblePersistence.load(dir2, spark).ops.head == br)
+  test("load refuses a foreign format version before reading any artifact") {
+    val input = Seq((1L, 7)).toDF("id", "n")
+    val dir = Files.tmp("ens_v1")
+    EnsemblePersistence.save(Ensemble(Seq(
+      QueryFeatureStore(Seq((1L, 2.5)).toDF("id", "x"), "id", Seq("x"))), input.schema), dir, spark)
+    // rewritten through the dir's filesystem, so its checksum sidecar stays
+    // valid; the artifacts go, so a load that read them first would fail
+    // with another error
+    val meta = new org.apache.hadoop.fs.Path(dir, "metadata.json")
+    val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(new org.apache.hadoop.fs.Path(dir, "artifacts"), true)
+    val text = java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "metadata.json"))
+    val out = fs.create(meta, true)
+    try out.write(text.replaceFirst("\"format_version\"\\s*:\\s*\"[^\"]*\"", "\"format_version\" : \"1\"")
+      .getBytes("UTF-8")) finally out.close()
+    val e = intercept[IllegalArgumentException](EnsemblePersistence.load(dir, spark))
+    assert(e.getMessage.contains("format version \"1\"") &&
+      e.getMessage.contains("format version 2"), e.getMessage)
   }
 
-  test("ResizeMedia and MediaEmbed round-trip by value") {
-    val media = Seq((1L, Array[Byte](0, 16, 0, 8, 1, 2, 3, 4)))
-      .toDF("media_id", "content")
-    for (op <- Seq[graft.core.EnsembleOp](
-        ResizeMedia(factor = 2), MediaEmbed(dim = 32, normalized = false))) {
-      val dir = Files.tmp("ens_media_" + op.name)
-      EnsemblePersistence.save(Ensemble(Seq(op), media.schema), dir, spark)
-      val loaded = EnsemblePersistence.load(dir, spark)
-      assert(loaded.ops.head == op, op.name)
+  // ---- the round-trip table: one case per persisted op type ---------------
+
+  /** `op` saved as a one-op ensemble over `schema` and loaded back: equal
+    * by value when it holds no frame or model, and equal in sorted output
+    * rows on `input` when one is given. */
+  private case class Row(op: EnsembleOp, schema: StructType, input: Option[DataFrame])
+  private def byValue(op: EnsembleOp, ddl: String) = Row(op, StructType.fromDDL(ddl), None)
+  private def byValue(op: EnsembleOp, schema: StructType) = Row(op, schema, None)
+  private def onInput(op: EnsembleOp, input: DataFrame) = Row(op, input.schema, Some(input))
+
+  private final class Case(val name: String, make: => Seq[Row]) {
+    lazy val rows: Seq[Row] = make
+  }
+
+  private def sortedRows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+
+  /** Names, types and metadata (the schema tags); parquet legitimately
+    * relaxes nullability. */
+  private def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType.catalogString, f.metadata))
+
+  private def holdsState(v: Any): Boolean = v match {
+    case _: DataFrame | _: org.apache.spark.ml.Model[_] => true
+    case m: collection.Map[_, _] => m.values.exists(holdsState)
+    case s: Iterable[_] => s.exists(holdsState)
+    case p: Product => p.productIterator.exists(holdsState)
+    case _ => false
+  }
+
+  /** Case-class equality, made strict where `==` is loose: NaN equals
+    * NaN, -0.0 differs from 0.0, and an Int differs from a Long. */
+  private def sameValue(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) =>
+      java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y)
+    case (x: collection.Map[_, _], y: collection.Map[_, _]) =>
+      sameValue(x.toSeq.sortBy(_._1.toString), y.toSeq.sortBy(_._1.toString))
+    case (x: Iterable[_], y: Iterable[_]) =>
+      x.size == y.size && x.iterator.zip(y.iterator).forall { case (p, q) => sameValue(p, q) }
+    // by name, not class: a decoded (Double, Double) is a Tuple2, not its specialized subclass
+    case (x: Product, y: Product) =>
+      x.productPrefix == y.productPrefix && x.productArity == y.productArity &&
+        x.productIterator.zip(y.productIterator).forall { case (p, q) => sameValue(p, q) }
+    case _ => a == null && b == null || a != null && b != null && a.getClass == b.getClass && a == b
+  }
+
+  private def check(r: Row): Unit = {
+    val dir = Files.tmp("ens_row")
+    EnsemblePersistence.save(Ensemble(Seq(r.op), r.schema), dir, spark)
+    val loaded = EnsemblePersistence.load(dir, spark).ops.head
+    assert(shape(loaded.transformSchema(r.schema)) == shape(r.op.transformSchema(r.schema)), r.op.name)
+    if (holdsState(r.op)) assert(r.input.isDefined, s"${r.op.name} holds a frame or model: give its row an input")
+    else assert(loaded.getClass == r.op.getClass && sameValue(loaded, r.op),
+      s"${r.op.name}: loaded $loaded, saved ${r.op}")
+    r.input.foreach { in =>
+      assert(sortedRows(loaded.transform(in)) == sortedRows(r.op.transform(in)), r.op.name)
     }
+  }
+
+  private val docSchema = "doc_id BIGINT, text STRING, lang STRING"
+  private val vecSchema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+  private val feSchema = "cat STRING, y BIGINT, v DOUBLE, arr ARRAY<BIGINT>"
+  private lazy val fitFrame = Seq(
+    ("a", "x", 10L, Some(3L), 1.5), ("b", "x", 20L, None, 2.5), ("a", "y", 30L, Some(7L), 3.5),
+    ("c", "y", 40L, Some(1L), 4.5), ("a", "x", 50L, None, 5.5), ("b", "z", 60L, Some(9L), 6.5)
+  ).toDF("cat", "grp", "qty", "qty_n", "price")
+  private lazy val corpus = Seq((1L, "alpha beta gamma delta"), (2L, "nothing in common at all"),
+    (3L, "alpha beta gamma delta")).toDF("doc_id", "text")
+  private lazy val evalDocs = Seq((9L, "beta gamma delta epsilon")).toDF("doc_id", "text")
+  private lazy val dvecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.1)), (3L, Seq(0.0, 1.0)),
+    (4L, Seq(0.1, 0.9)), (5L, Seq(0.7, 0.7))).toDF("item_id", "embedding")
+  private lazy val dqueries = Seq((100L, Seq(1.0, 0.05)), (200L, Seq(0.05, 1.0))).toDF("qid", "qvec")
+  private lazy val fvecs = Seq((1L, Seq(0.9f, 0.1f)), (2L, Seq(-1.0f, 0.0f)), (3L, Seq(3.0f, 4.0f)))
+    .toDF("vec_id", "embedding")
+  private lazy val fitems = {
+    val rnd = new scala.util.Random(3)
+    (1L to 40L).map(i => (i, Seq.fill(4)((rnd.nextGaussian() * 2).toFloat))).toDF("item_id", "embedding")
+  }
+  private lazy val fqueries = Seq((100L, Seq(1.0f, -0.5f, 0.25f, 2.0f)), (101L, Seq(8.0f, 8.5f, 7.0f, 9.0f)))
+    .toDF("vec_id", "embedding")
+  private lazy val train = Seq(
+    (1.0, 2.0, 10.0, 1.0), (2.0, 1.0, 8.0, 0.0), (3.0, 4.0, 20.0, 1.0),
+    (4.0, 3.0, 16.0, 0.0), (5.0, 6.0, 30.0, 1.0), (6.0, 5.0, 26.0, 0.0)).toDF("f1", "f2", "y", "label")
+  private lazy val pqCenters = Seq(Seq(0.0, 0.0, 0.0, 0.0), Seq(8.0, 8.0, 8.0, 8.0))
+  private lazy val pqCodebooks = Seq(Seq(Seq(0.5, 0.25), Seq(-0.5, 1.0)), Seq(Seq(2.0, 0.0), Seq(0.0, -2.0)))
+  private lazy val signalCorpus = Seq((1L, "kept around text"), (3L, "new arrival text")).toDF("doc_id", "text")
+    .withColumn("content_hash", md5(col("text")))
+  private lazy val signal = QualitySignals(keyCols = Seq("doc_id", "content_hash"))
+  private lazy val priorSignals = signal.transform(Seq((1L, "kept around text"), (2L, "soon gone"))
+    .toDF("doc_id", "text").withColumn("content_hash", md5(col("text"))))
+  private lazy val probeItems = ((1L to 30L).map(i => (i, Seq(1.0f, 0.0f))) ++
+    (31L to 40L).map(i => (i, Seq(0.0f, 5.0f)))).toDF("item_id", "embedding")
+  private lazy val probeQueries = (1L to 10L).map(i => (i, Seq(1.0f, 0.1f))).toDF("vec_id", "embedding")
+  private lazy val tagged = StructField("cat_y_mean", org.apache.spark.sql.types.DoubleType,
+    metadata = Tags.metadataFor(Seq(Tags.Continuous)))
+
+  private val table: Seq[Case] = Seq(
+    // the by-value rows, under the case names they had as separate tests
+    new Case("parameter-only ops round-trip by value (dedup/multimodal family)", {
+      val schema = "doc_id BIGINT, text STRING, sig BIGINT"
+      val cos = CosineNearDup("vec_id", "embedding", 0.6, exact = false, numBits = 6, numTables = 12)
+      Seq(
+        byValue(ExactDedup("doc_id", "text", normalized = true), schema),
+        byValue(NgramJaccardDedup("doc_id", "text", n = 4, thresholdBp = 7500), schema),
+        byValue(MinHashDedup("doc_id", "text", n = 3, numHashes = 128, bands = 32, thresholdBp = 8500), schema),
+        byValue(SimHashDedup("doc_id", "text", n = 3, maxHamming = 7, hashCol = Some("sig")), schema),
+        byValue(cos, vecSchema),
+        byValue(MlpScorer(Seq(
+          MlpLayer(Seq(Seq(0.5, -0.25), Seq(1.0, 0.5)), Seq(0.125, -2.0), "relu"),
+          MlpLayer(Seq(Seq(2.0, 4.0)), Seq(0.0625), "linear")), "embedding"), vecSchema),
+        byValue(cos.copy(center = Some(Seq(0.25, -1.5))), vecSchema),
+        byValue(SemanticNearDup(Seq(Seq(0.1, 0.2), Seq(-0.3, 0.4)), "vec_id", "embedding", 0.55), vecSchema),
+        byValue(DecodeMedia("media_id", "content", "img_"), MultimodalOps.mediaSchema),
+        byValue(SampleFrames("media_id", "content", frameBytes = 32, stride = 3), MultimodalOps.mediaSchema),
+        byValue(RepetitionStats("text", "doc_id", topNs = Seq(2, 4), dupNs = Seq(6),
+          topBpMax = Map(2 -> 1900L, 4 -> 1700L), dupBpMax = Map(6 -> 1400L)), schema),
+        byValue(ValidateRequests(Seq("doc_id"), Map("sig" -> (0.0, 10.0)), "err"), schema),
+        byValue(MaskPii("text", "clean_text"), schema),
+        byValue(Bucketize(Map("sig" -> Seq(1.5, 2.5, 9.0)), "_bin"), schema),
+        byValue(TrainingSequences("user_id", "ts", "event_id", "event_type", 5),
+          "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING"),
+        byValue(NormalizeEmbeddings("embedding", "unit_vec"), vecSchema),
+        byValue(MeanPoolEmbeddings("vec_id", "embedding"), vecSchema))
+    }),
+    new Case("sampling/chunking/quantize ops round-trip by value", Seq(
+      byValue(StratifiedSample("doc_id", "lang", Map("en" -> 10000, "de" -> 500), defaultBp = 100, salt = "s3"),
+        docSchema),
+      byValue(DocumentChunks("doc_id", "text", chunkSize = 16, overlap = 4), docSchema),
+      byValue(QuantizeEmbeddings(levels = 127), "vec_id BIGINT, embedding ARRAY<FLOAT>"),
+      byValue(PackChunks(budget = 512, shards = 16, salt = "p1"), "doc_id BIGINT, chunk_id BIGINT, n_tokens BIGINT"),
+      byValue(UpsampleMix("doc_id", "lang", Map("en" -> 25000, "zh" -> 15000), defaultBp = 5000, salt = "m1"),
+        docSchema),
+      byValue(WeightedSampleByGroup("lang", "n_chars", "doc_id", k = 7, salt = "w1"),
+        "doc_id BIGINT, lang STRING, n_chars BIGINT"),
+      byValue(ScrubSharedGrams(n = 6, minDocs = 3), docSchema)) ++
+      Seq(false, true).map(approx => byValue(TopFractionByGroup("source", "score", "doc_id",
+        Map("src0" -> 2000), defaultBp = 9000, approx = approx), "doc_id BIGINT, source STRING, score DOUBLE"))),
+    new Case("fitted-FE family round-trips by value (TargetEncoding/JoinGroupby/HashBucket/FillMissing/Clip/Log/ListSlice)",
+      Seq(
+        TargetEncoding(Seq("cat"), "y", smoothing = 5.0, leaveOneOut = true, broadcastBudgetBytes = 123L),
+        JoinGroupby("cat", Seq("y"), Seq("count", "mean"), broadcastBudgetBytes = 7L),
+        HashBucket(Seq("cat"), 64, salt = "s9", suffix = "_b"),
+        FillMissing(constants = Map("cat" -> "?", "y" -> 0L, "v" -> 1.5),
+          medianCols = Seq.empty, approxMedian = false, suffix = "_f"),
+        Clip(Map("v" -> (Some(0.0), None), "y" -> (None, Some(9.0)))),
+        LogTransform(Seq("v"), suffix = "_ln"),
+        ListSlice(Seq("arr"), -2, None, suffix = "_t"),
+        // end=Some(n) survives (None vs Some(0) must not collapse)
+        ListSlice(Seq("arr"), 0, Some(0))).map(byValue(_, feSchema))),
+    new Case("PrefixDedup round-trips as pure parameters", Seq(
+      onInput(PrefixDedup(n = 3), Seq((1L, "a b c d e"), (2L, "a b c")).toDF("doc_id", "text")))),
+    new Case("MixturePlan and PcaProject round-trip as pure parameters", Seq(
+      byValue(MixturePlan("lang", "toks", Map("en" -> 5000), 100L, defaultBp = 500), "lang STRING, toks BIGINT"),
+      onInput(PcaProject(Seq(Seq(0.6, 0.8), Seq(-0.8, 0.6))),
+        Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")))),
+    new Case("ClusterAssign and TextQualityClassifier round-trip as pure parameters", Seq(
+      onInput(ClusterAssign(Seq(Seq(0.0, 0.0), Seq(3.0, 4.0)), withDistance = true),
+        Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")),
+      onInput(TextQualityClassifier((1 to 8).map(_.toDouble), -0.25, numBuckets = 8),
+        Seq((1L, "some text here")).toDF("doc_id", "text")))),
+    new Case("CalibrateScores round-trips as pure parameters", Seq(
+      onInput(CalibrateScores(Seq(1.0, 2.0, 5.0), Seq(0.1, 0.5, 0.9)), Seq((1L, 3.0)).toDF("id", "score")))),
+    new Case("ResampleLocf and BoilerplateReport round-trip by value", Seq(
+      byValue(ResampleLocf(), "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, value DOUBLE"),
+      byValue(BoilerplateReport(n = 3, minDocs = 2, topK = 7), "doc_id BIGINT, text STRING"))),
+    new Case("ResizeMedia and MediaEmbed round-trip by value", Seq(
+      byValue(ResizeMedia(factor = 2), "media_id BIGINT, content BINARY"),
+      byValue(MediaEmbed(dim = 32, normalized = false), "media_id BIGINT, content BINARY"))),
+
+    // by value, one case per type
+    new Case("Selection round-trips", Seq(byValue(Selection(Seq("id")), "id BIGINT, s STRING"))),
+    new Case("SelectByTag round-trips", Seq(byValue(SelectByTag(Seq(Tags.Continuous), Seq("id")),
+      StructType(Seq(StructField("id", org.apache.spark.sql.types.LongType), tagged))))),
+    new Case("Rename round-trips", Seq(byValue(Rename(Map("s" -> "t")), "id BIGINT, s STRING"))),
+    new Case("FilterCandidates round-trips", Seq(byValue(FilterCandidates("candidate_ids", "seen_ids"),
+      "requestId INT, candidate_ids ARRAY<BIGINT>, seen_ids ARRAY<BIGINT>"))),
+    new Case("FilterCandidatesWithScores round-trips", Seq(byValue(
+      FilterCandidatesWithScores(filterCol = "seen_ids"),
+      "candidate_ids ARRAY<BIGINT>, candidate_scores ARRAY<DOUBLE>, seen_ids ARRAY<BIGINT>"))),
+    new Case("SoftmaxSampling round-trips", Seq(byValue(
+      SoftmaxSampling("candidate_ids", "scores", temperature = 5.0, topk = 3, seed = 7L),
+      "requestId INT, candidate_ids ARRAY<BIGINT>, scores ARRAY<DOUBLE>"))),
+    new Case("ExplodeCandidates round-trips", Seq(byValue(ExplodeCandidates("filtered_ids", "item_id"),
+      "requestId INT, filtered_ids ARRAY<BIGINT>"))),
+    new Case("Padding round-trips, non-finite and signed-zero pads included",
+      Seq(0.5, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0)
+        .map(v => byValue(Padding("xs", 4, v), "xs ARRAY<DOUBLE>"))),
+    new Case("Clip round-trips signed-zero and infinite bounds", Seq(byValue(Clip(Map(
+      "v" -> (Some(-0.0), Some(Double.PositiveInfinity)), "w" -> (Some(Double.NegativeInfinity), None))),
+      "v DOUBLE, w DOUBLE"))),
+    new Case("CosineNearDup round-trips a None center apart from Some(Nil)", Seq(None, Some(Nil)).map(c =>
+      byValue(CosineNearDup("vec_id", "embedding", 0.6, exact = true, numBits = 4, numTables = 2, center = c),
+        vecSchema))),
+    new Case("FillMissing round-trips Int and Long constants as themselves", Seq(byValue(
+      FillMissing(constants = Map("n" -> 7, "y" -> 7L, "b" -> true), medianCols = Seq.empty,
+        approxMedian = false, suffix = "_f"), "n INT, y BIGINT, b BOOLEAN"))),
+    new Case("Categorify round-trips", Seq(byValue(Categorify(Seq("cat"), "_c", 1024L), feSchema))),
+    new Case("StandardScale round-trips", Seq(byValue(StandardScale(Seq("v")), feSchema))),
+    new Case("FillMissingBound round-trips", Seq(byValue(FillMissingBound(
+      Map("cat" -> "?", "y" -> 0L), Map("v" -> 2.5), Seq("v"), "_f"), feSchema))),
+    new Case("StandardScaleBound round-trips", Seq(byValue(
+      StandardScaleBound(Seq("v"), "_s", Map("v" -> (1.5, 0.0))), feSchema))),
+    new Case("XgbForest round-trips", Seq(byValue(XgbForest.fromJson(graft.queries.MlQueries.portableModelJson,
+      graft.queries.MlQueries.portableFeatures, outputClass = true, threshold = 0.7),
+      "l_quantity DOUBLE, l_discount DOUBLE, l_extendedprice DOUBLE"))),
+    new Case("SklForest round-trips", Seq(byValue(SklForest(Vector(Vector(XgbTree(Vector(1, -1, -1),
+      Vector(2, -1, -1), Vector(0, 0, 0), Vector(2.5, 0.25, 0.75), Vector(true, false, false)))),
+      Vector.empty, Seq("f0")), "id INT, f0 DOUBLE"))),
+    new Case("HashSplit round-trips", Seq(byValue(HashSplit("doc_id", trainBp = 8000, validBp = 1000, salt = "s1"),
+      docSchema))),
+    new Case("TrailingWindowFeatures round-trips", Seq(byValue(
+      TrailingWindowFeatures("user_id", "ts_sec", "v", Seq(100L, 1000L)),
+      "event_id BIGINT, ts_sec BIGINT, v BIGINT, user_id BIGINT"))),
+    new Case("BpeTokenize round-trips", Seq(byValue(BpeTokenize(Seq(("a", "a"), ("b", "</w>")), "text"),
+      docSchema))),
+    new Case("SkewReport round-trips", Seq(byValue(SkewReport(Seq("lang"), topK = 3), docSchema))),
+    new Case("ShardShuffle round-trips", Seq(byValue(ShardShuffle("doc_id", shards = 4, salt = "s6"), docSchema))),
+    new Case("QualitySignals round-trips", Seq(byValue(QualitySignals(keyCols = Seq("doc_id")), docSchema))),
+    new Case("LshSkewReport round-trips", Seq(byValue(LshSkewReport(Seq(0.0, 0.0), numBits = 3),
+      "item_id BIGINT, embedding ARRAY<FLOAT>"))),
+    new Case("IvfSkewReport round-trips", Seq(byValue(IvfSkewReport(Seq(Seq(1.0, 0.0), Seq(0.0, 5.0))),
+      "item_id BIGINT, embedding ARRAY<FLOAT>"))),
+    new Case("Ensemble round-trips as a nested subgraph", {
+      val schema = StructType.fromDDL("id BIGINT, s STRING")
+      Seq(byValue(Ensemble(Seq(Rename(Map("s" -> "t")), Selection(Seq("id", "t"))), schema), schema))
+    }),
+
+    // by output, one case per type
+    new Case("CategorifyBound round-trips", Seq(onInput(Categorify(Seq("cat", "grp")).fit(fitFrame), fitFrame))),
+    new Case("TargetEncodingBound round-trips", Seq(onInput(
+      TargetEncoding(Seq("cat"), "qty", leaveOneOut = true).fit(fitFrame), fitFrame))),
+    new Case("JoinGroupbyBound round-trips, Tags metadata included", Seq(
+      onInput(JoinGroupby("grp", Seq("price"), Seq("count", "mean")).fit(fitFrame), fitFrame),
+      onInput(JoinGroupbyBound("cat", Seq(tagged), Seq(("a", 1.5)).toDF("cat", "cat_y_mean"), broadcastIt = true),
+        Seq(("a", 1L), ("b", 2L)).toDF("cat", "y")))),
+    new Case("QueryFeatureStore round-trips", Seq(onInput(
+      QueryFeatureStore(Seq((10L, "A", 1.5), (11L, "B", 2.5)).toDF("item_id", "brand", "price"), "item_id",
+        Seq("brand", "price"), includeId = true, outputPrefix = "item_"),
+      Seq((1, 10L), (2, 99L)).toDF("requestId", "item_id")))),
+    new Case("NegativeSampling round-trips", Seq(onInput(
+      NegativeSampling((10L to 29L).toDF("item"), "user_id", "item_id", "item", k = 2, attempts = 8, salt = "t"),
+      Seq((1L, 10L), (1L, 11L), (2L, 12L)).toDF("user_id", "item_id")))),
+    new Case("IntervalJoin round-trips", Seq(onInput(
+      IntervalJoin(Seq((1L, 95L, 210L, "w1"), (2L, 0L, 50L, "w3")).toDF("key", "s", "e", "tag"),
+        "key", "s", "e", "ts", bucketSize = 100L),
+      Seq((1L, 95L), (1L, 150L), (1L, 210L), (2L, 49L)).toDF("key", "ts")))),
+    new Case("PointInTimeJoin round-trips", Seq(onInput(
+      PointInTimeJoin(Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 15L, "c")).toDF("id", "ts", "v"), "id", "ts", Seq("v")),
+      Seq((1L, 5L), (1L, 10L), (1L, 25L), (2L, 14L)).toDF("id", "ts")))),
+    new Case("EmbeddingLookup round-trips", Seq(onInput(EmbeddingLookup(fvecs, "id"), Seq(1L, 3L, 7L).toDF("id")))),
+    new Case("UnrollFeatures round-trips", Seq(onInput(
+      UnrollFeatures(Seq((1, "A", 25), (2, "B", 30)).toDF("requestId", "segment", "age"), Seq("segment", "age")),
+      Seq((1, 10), (1, 11), (2, 12)).toDF("requestId", "item_id")))),
+    new Case("SaltedJoin round-trips", Seq(onInput(
+      SaltedJoin(Seq((7L, "hot"), (0L, "a")).toDF("key", "label"), "key", "row_id", saltBuckets = 3, joinType = "left"),
+      (1 to 20).map(i => (i.toLong, if (i <= 15) 7L else (i % 3).toLong)).toDF("row_id", "key")))),
+    new Case("ConcatColumns round-trips", {
+      val root = Seq((1, "a"), (2, "b")).toDF("requestId", "v")
+      Seq(onInput(ConcatColumns(root.withColumnRenamed("v", "v2")), root.withColumn("n", length($"v"))))
+    }),
+    new Case("TransformWorkflow round-trips", Seq(onInput(
+      TransformWorkflow.fit(fitFrame, Seq("cat"), Seq("price")), fitFrame))),
+    new Case("TopKRetrieval round-trips", Seq(onInput(
+      TopKRetrieval(dvecs, "qid", "qvec", k = 3, metric = "dot"), dqueries))),
+    new Case("AnnLsh round-trips with its resolved center pinned", Seq(onInput(
+      AnnLsh(dvecs, "qid", "qvec", k = 3, numBits = 4, nprobe = 3, metric = "dot"), dqueries))),
+    new Case("AnnIvf round-trips", Seq(onInput(
+      AnnIvf(dvecs, Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), "qid", "qvec", k = 3, nprobe = 1, metric = "cosine"),
+      dqueries))),
+    new Case("AnnSq round-trips", Seq(onInput(
+      AnnSq.fit(fitems, "vec_id", "embedding", k = 3, nlist = 2, nprobe = 2), fqueries))),
+    new Case("AnnIvfPq round-trips", Seq(onInput(
+      AnnIvfPq(fitems, pqCenters, pqCodebooks, "vec_id", "embedding", k = 3, nprobe = 2, refine = 3), fqueries))),
+    new Case("Bm25Index round-trips", Seq(onInput(
+      Bm25Index.fit(corpus, "doc_id", "text", k = 2),
+      Seq((1L, "alpha delta"), (2L, "common")).toDF("query_id", "query_text")))),
+    new Case("PredictForest round-trips", Seq(onInput(
+      PredictForest.trainRegressor(train, Seq("f1", "f2"), "y", numTrees = 3, maxDepth = 2), train))),
+    new Case("PredictForestClassifier round-trips", Seq(onInput(
+      PredictForestClassifier.train(train, Seq("f1", "f2"), "label", numTrees = 3, maxDepth = 2,
+        predictProba = false, outputClass = true, threshold = 0.4), train))),
+    new Case("PredictClassifier round-trips", {
+      val df = train.select(array($"f1", $"f2").as("feats"), $"label")
+      Seq(onInput(PredictClassifier.trainLogistic(df, "feats", "label", maxIter = 5), df))
+    }),
+    new Case("PredictImplicit round-trips", Seq(onInput(
+      PredictImplicit.fromModel(PredictImplicit.train(Seq((1, 1, 2.0f), (1, 2, 1.0f), (2, 1, 1.0f), (2, 3, 2.0f),
+        (3, 2, 1.0f), (3, 3, 2.0f)).toDF("user", "item", "strength"), "user", "item", "strength",
+        rank = 2, maxIter = 2), numToRecommend = 2, userCol = "user_id"),
+      Seq(Tuple1(1L), Tuple1(2L)).toDF("user_id")))),
+    new Case("MaterializeFeatureView round-trips", Seq(onInput(
+      MaterializeFeatureView(Seq((1L, 20L, 2L, "new")).toDF("id", "ts", "seq", "v"), Seq("id"), "ts", "seq"),
+      Seq((1L, 10L, 1L, "old"), (2L, 10L, 1L, "keep")).toDF("id", "ts", "seq", "v")))),
+    new Case("Decontaminate round-trips", Seq(onInput(Decontaminate(evalDocs, n = 3), corpus))),
+    new Case("BloomDecontaminate round-trips", Seq(onInput(BloomDecontaminate(evalDocs, n = 3, fpp = 0.02), corpus))),
+    new Case("FuzzyDecontaminate round-trips", Seq(onInput(
+      FuzzyDecontaminate(evalDocs, n = 3, thresholdBp = 4000, banded = false), corpus))),
+    new Case("SemanticDecontaminate round-trips", Seq(onInput(
+      SemanticDecontaminate(Seq((9L, Seq(1.0f, 0.0f)), (10L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding"),
+        threshold = 0.7, centers = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), nprobe = 1), fvecs))),
+    new Case("NgramLmScore round-trips", Seq(onInput(NgramLmScore(corpus, n = 2), corpus))),
+    new Case("SnapshotDiff round-trips", Seq(onInput(
+      SnapshotDiff(Seq((1L, "same", "x"), (2L, "old text", "y")).toDF("doc_id", "text", "extra"), normalized = true),
+      Seq((1L, "same"), (2L, "new text"), (3L, "added doc")).toDF("doc_id", "text")))),
+    new Case("Purge round-trips", Seq(onInput(Purge(Seq(2L, 2L).toDF("doc_id")), corpus))),
+    new Case("IncrementalDedup round-trips", Seq(onInput(
+      IncrementalDedup(ExactDedup(normalized = true).transform(corpus).select("content_hash")), corpus))),
+    new Case("IncrementalMinHashDedup round-trips", Seq(onInput(
+      IncrementalMinHashDedup(IncrementalMinHashDedup.signatures(evalDocs), thresholdBp = 7000), corpus))),
+    new Case("DriftReport round-trips", Seq(onInput(
+      DriftReport(Seq((1.0, 5L, "u"), (2.0, 150L, "w")).toDF("x", "k", "unmonitored"),
+        Map("x" -> Seq(2.0), "k" -> Seq(100.0)), thresholdBp = 2000L),
+      Seq((1.0, 5L), (3.0, 300L)).toDF("x", "k")))),
+    new Case("DupClusters round-trips", {
+      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+      Seq(onInput(DupClusters(allDocs = Some(Seq((1L, "a"), (20L, "b")).toDF("doc_id", "text"))), pairs),
+        onInput(DupClusters(maxIters = 8), pairs))
+    }),
+    new Case("EvalRanking round-trips", Seq(onInput(EvalRanking(Seq((1L, "b", 0)).toDF("query_id", "item_id", "x"), k = 5),
+      Seq((1L, "a", 1), (1L, "b", 2)).toDF("query_id", "item_id", "rank")))),
+    new Case("QuantizerDrift round-trips", Seq(onInput(QuantizerDrift(Seq(Seq(0.0, 0.0), Seq(3.0, 4.0)), fvecs), fvecs))),
+    new Case("SignalReconcile round-trips, a nested Ensemble signal included", Seq(
+      onInput(SignalReconcile(priorSignals, signal), signalCorpus),
+      onInput(SignalReconcile(priorSignals, Ensemble(Seq(signal), signalCorpus.schema)), signalCorpus))),
+    new Case("ReciprocalRankFusion round-trips", Seq(onInput(
+      ReciprocalRankFusion(Seq((1L, 11L, 1), (1L, 13L, 2), (2L, 21L, 1)).toDF("query_id", "doc_id", "rank"),
+        k0 = 30, topk = 3, outputCol = "s"),
+      Seq((1L, 10L, 1), (1L, 11L, 2), (2L, 20L, 1)).toDF("query_id", "doc_id", "rank")))),
+    new Case("IvfProbeCost round-trips", Seq(onInput(
+      IvfProbeCost(probeItems, Seq(Seq(1.0, 0.0), Seq(0.0, 5.0)), nprobe = 1), probeQueries))),
+    new Case("LshProbeCost round-trips", Seq(onInput(
+      LshProbeCost(probeItems, Seq(0.0, 0.0), numBits = 2, nprobe = 2), probeQueries))),
+    new Case("PqCodebookDrift round-trips", Seq(onInput(
+      PqCodebookDrift(pqCenters, pqCodebooks, reference = fitems.withColumnRenamed("item_id", "vec_id")),
+      fqueries))))
+
+  table.foreach(c => test(c.name)(c.rows.foreach(check)))
+
+  test("every concrete EnsembleOp case class has a round-trip row") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(
+      classOf[EnsembleOp].getProtectionDomain.getCodeSource.getLocation.toURI)
+    val opTypes = java.nio.file.Files.walk(root.resolve("graft")).iterator().asScala
+      .map(root.relativize(_).toString).filter(_.endsWith(".class"))
+      .map(f => Class.forName(f.stripSuffix(".class").replace('/', '.'), false, getClass.getClassLoader))
+      .filter(c => classOf[EnsembleOp].isAssignableFrom(c) && classOf[Product].isAssignableFrom(c) &&
+        !c.isInterface && !java.lang.reflect.Modifier.isAbstract(c.getModifiers))
+      .toSet
+    assert(opTypes.size > 100, s"found only ${opTypes.size} op types under $root")
+    val missing = opTypes -- table.flatMap(_.rows).map(_.op.getClass)
+    assert(missing.isEmpty, s"op types without a round-trip row: ${missing.map(_.getName).toSeq.sorted.mkString(", ")}")
   }
 }

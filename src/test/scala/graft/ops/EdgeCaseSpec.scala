@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -210,6 +210,14 @@ class EdgeCaseSpec extends SparkSpec {
     val lsh = AnnLsh(items, "user_id", "user_vec", k = 2, numBits = 4,
       metric = "dot", center = Some(Seq(0.5, 0.5)))
     assert(lsh.transform(empty).count() == 0)
+    for ((name, op) <- retrievers(items)) {
+      val out = op.transform(empty)
+      assert(out.count() == 0, name)
+      def shape(t: StructType) = t.map(f => f.name -> f.dataType.simpleString)
+      assert(shape(out.schema) == shape(op.transformSchema(empty.schema)), name)
+      assert(out.schema.fieldNames.toSeq ==
+        Seq("user_id", "candidate_ids", "candidate_scores"), name)
+    }
   }
 
   test("retrieval ops: null query vector contributes no candidates") {
@@ -227,6 +235,45 @@ class EdgeCaseSpec extends SparkSpec {
     // candidates "scored" zero
     assert(out.map(_.getLong(0)).toSeq == Seq(7L))
     assert(out(0).getSeq[Long](1) == Seq(1L))
+    // every retriever drops the null-vector row (8). Query 9 points away
+    // from the only item, so every list it probes is empty: the IVF
+    // tiers keep its row with empty arrays, LSH and PQ drop it, and the
+    // exhaustive TopKRetrieval still scores the item
+    val req3 = spark.createDataFrame(
+      java.util.Arrays.asList(
+        Row(7L, Seq(1.0, 0.0)), Row(8L, null.asInstanceOf[Any]),
+        Row(9L, Seq(-1.0, 0.0))),
+      req.schema)
+    val want = Map(
+      "TopKRetrieval" -> Seq(7L -> Seq(1L), 9L -> Seq(1L)),
+      "AnnIvf" -> Seq(7L -> Seq(1L), 9L -> Seq.empty[Long]),
+      "AnnSq" -> Seq(7L -> Seq(1L), 9L -> Seq.empty[Long]),
+      "AnnLsh" -> Seq(7L -> Seq(1L)),
+      "AnnIvfPq" -> Seq(7L -> Seq(1L)))
+    for ((name, op) <- retrievers(items)) {
+      val rows = op.transform(req3).orderBy("user_id").collect()
+      assert(rows.map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq == want(name),
+        name)
+      assert(rows.forall(r => r.getSeq[Double](2).size == r.getSeq[Long](1).size), name)
+    }
+  }
+
+  /** The five top-k retrievers over `items` for `(user_id, user_vec)`
+    * requests. The quantizers split the plane at x = 0 (IVF/SQ/PQ
+    * centroids (1, 0) and (-1, 0), LSH hyperplanes through the origin)
+    * and probe one list, so a query opposite every item probes only
+    * empty lists. */
+  private def retrievers(items: DataFrame): Seq[(String, graft.core.EnsembleOp)] = {
+    val centers = Seq(Seq(1.0, 0.0), Seq(-1.0, 0.0))
+    Seq(
+      "TopKRetrieval" -> TopKRetrieval(items, "user_id", "user_vec", k = 2),
+      "AnnIvf" -> AnnIvf(items, centers, "user_id", "user_vec", k = 2, nprobe = 1),
+      "AnnSq" -> AnnSq(items, centers, Seq(-1.0, 0.0), Seq(1.0, 1.0),
+        "user_id", "user_vec", k = 2, nprobe = 1),
+      "AnnLsh" -> AnnLsh(items, "user_id", "user_vec", k = 2, numBits = 4,
+        nprobe = 1, metric = "dot", center = Some(Seq(0.0, 0.0))),
+      "AnnIvfPq" -> AnnIvfPq(items, centers, Seq(Seq(Seq(0.0, 0.0))),
+        "user_id", "user_vec", k = 2, nprobe = 1))
   }
 
   test("Bucketize: half-open bin edges, null passes through null") {

@@ -117,8 +117,7 @@ object Flagship {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nItems = itemVecs.count()
-      val numBits = math.max(4, math.min(12,
-        (math.log(math.max(1L, nItems / 64).toDouble) / math.log(2)).round.toInt))
+      val numBits = lshBits(nItems)
       val center = graft.functions.VectorFunctions
         .meanVector(itemVecs, "embedding").toSeq
       val workload = userFactors.select(col("id").as("user_id"),
@@ -127,28 +126,32 @@ object Flagship {
         decideRetriever(itemVecs, center, numBits,
           workload = Some(workload), workloadVecCol = "user_vec"))
       if (decision.tier == "ivf") {
-        val nlist = math.max(4, math.min(4096, (nItems / 64).toInt))
+        val nlist = ivfNlist(nItems)
         cachedIvfCenters(d, itemVecs, nlist)
       }
     } finally itemVecs.unpersist()
   }
 
   /** Verify-dir side artifacts of one [[recommend]] serving pass:
-    * factor tables, index assignments (LSH buckets or IVF lists —
-    * `retriever` records which tier served), user probe buckets, and
-    * the scalar parameters the oracle replay needs. The assignments are
-    * fit-state like centroid literals — the oracle does not re-derive
-    * the xxhash hyperplanes / k-means fit, it replays the SERVING math
-    * (probe join, double dot, top-k, seen filter, softmax keys) from
-    * them. For `retriever = "lsh"` the user table carries one `home`
-    * bucket per user (the XOR probe flips are serving math, replayed in
-    * SQL); for `"ivf"` it carries the EXPLODED (user_id, bucket) probe
-    * rows — the nprobe-nearest-centroid routing under the frozen
-    * quantizer, per-user fit state like the item assignments. */
+    * factor tables, the serving op's index assignments
+    * `(item_id, bucket)` and user probes `(user_id, bucket)` (LSH
+    * buckets or IVF lists, one row per probe), and the scalar parameters
+    * the oracle replay needs. The assignments are fit-state like
+    * centroid literals — the oracle does not re-derive the xxhash
+    * hyperplanes / k-means fit, it replays the SERVING math (probe join,
+    * double dot, top-k, seen filter, softmax keys) from them. */
   case class RecsysArtifacts(userPath: String, itemPath: String,
       itemBucketPath: String, userBucketPath: String, rank: Int,
-      retrievalK: Int, finalK: Int, temperature: Double, seed: Long,
-      retriever: String = "lsh")
+      retrievalK: Int, finalK: Int, temperature: Double, seed: Long)
+
+  /** Sign-LSH bits for a catalog of `nItems`: buckets of ~64 items on
+    * average, 4 to 12 bits. */
+  def lshBits(nItems: Long): Int = math.max(4, math.min(12,
+    (math.log(math.max(1L, nItems / 64).toDouble) / math.log(2)).round.toInt))
+
+  /** IVF list count for a catalog of `nItems`: lists of ~64 items on
+    * average, 4 to 4096 lists. */
+  def ivfNlist(nItems: Long): Int = math.max(4, math.min(4096, (nItems / 64).toInt))
 
   /** The occupancy-skew bound (basis points of the ceil-uniform bucket
     * target) above which [[chooseRetriever]] abandons the sign-LSH tier
@@ -403,8 +406,7 @@ object Flagship {
     // a different partial-agg merge order and flip borderline signs
     // (round-12 ADVICE; the recommend() path already works this way)
     def fitLshParams(): (Int, Seq[Double]) = {
-      val numBits = math.max(4, math.min(12,
-        (math.log(math.max(1L, nItems / 64).toDouble) / math.log(2)).round.toInt))
+      val numBits = lshBits(nItems)
       val center = graft.functions.VectorFunctions
         .meanVector(itemVecs, "embedding").toSeq
       (numBits, center)
@@ -413,7 +415,7 @@ object Flagship {
       AnnLsh(itemVecs, "user_id", "user_vec", k = retrievalK,
         numBits = numBits, nprobe = 4, metric = "dot", center = Some(center))
     def ivfOp(): graft.core.EnsembleOp = {
-      val nlist = math.max(4, math.min(4096, (nItems / 64).toInt))
+      val nlist = ivfNlist(nItems)
       AnnIvf(itemVecs, cachedIvfCenters(d, itemVecs, nlist),
         "user_id", "user_vec", k = retrievalK,
         nprobe = math.min(4, nlist), metric = "dot")
@@ -436,7 +438,7 @@ object Flagship {
         // take the largest m that DIVIDES the rank (rank/4 itself need
         // not — rank 14 would otherwise crash the fit's divisibility
         // require), falling back to m = 1 for prime ranks
-        val nlist = math.max(4, math.min(4096, (nItems / 64).toInt))
+        val nlist = ivfNlist(nItems)
         val dim = als.rank
         val m = (math.max(1, dim / 4) to 1 by -1).find(dim % _ == 0).get
         AnnIvfPq.fit(itemVecs, "user_id", "user_vec", k = retrievalK,
@@ -502,8 +504,7 @@ object Flagship {
     // borderline signs); the IVF centroids are likewise fit once and
     // shared between the serving op and the artifact dump.
     val nItems = itemVecs.count()
-    val numBits = math.max(4, math.min(12,
-      (math.log(math.max(1L, nItems / 64).toDouble) / math.log(2)).round.toInt))
+    val numBits = lshBits(nItems)
     val center = graft.functions.VectorFunctions
       .meanVector(itemVecs, "embedding").toSeq
     // GRAFT_RECSYS_RETRIEVER: a harness seam for driving the non-default
@@ -555,43 +556,31 @@ object Flagship {
     if (!Set("lsh", "ivf").contains(tier))
       throw new IllegalArgumentException(
         s"unknown retriever '$tier' (lsh|ivf, or None for skew-aware auto)")
-    // (retrieved frame, item assignment artifact, user probe artifact)
-    val (retrieved, itemBuckets, userBuckets) = tier match {
+    val op: AnnIndex = tier match {
       case "lsh" =>
         // the resize retry may have widened the bit count — serve and
         // dump artifacts with the DECIDED bits, never the requested ones
-        val lshBits = decision.numBits
-        val mu = typedLit(center.toArray)
-        def bkt(vec: org.apache.spark.sql.Column) =
-          graft.functions.FastExpressions.lshBucket(vec, mu, lshBits)
-        (AnnLsh(itemVecs, "user_id", "user_vec",
-          k = retrievalK, numBits = lshBits, nprobe = 4, metric = "dot",
-          center = Some(center)).transform(withVec),
-         itemVecs.select(col("item_id"), bkt(col("embedding")).as("bucket")),
-         withVec.select(col("user_id"), bkt(col("user_vec")).as("home")))
+        AnnLsh(itemVecs, "user_id", "user_vec",
+          k = retrievalK, numBits = decision.numBits, nprobe = 4, metric = "dot",
+          center = Some(center))
       case _ =>
-        val nlist = math.max(4, math.min(4096, (nItems / 64).toInt))
+        val nlist = ivfNlist(nItems)
         // nprobe matches the LSH tier's 4-probe serving envelope: the
         // fallback exists to REMOVE a candidate-volume pathology, so it
         // must not double per-user candidates (4 adapted cells ≈ the 4
         // hyperplane flips' volume at ~64 items/cell either way); the
         // dedicated op_ann_ivf query keeps the reference's nprobe=8
         // parameterization (faiss.py:213-214)
-        val nprobe = math.min(4, nlist)
-        val centers = cachedIvfCenters(d, itemVecs, nlist)
-        val op = AnnIvf(itemVecs, centers, "user_id", "user_vec",
-          k = retrievalK, nprobe = nprobe, metric = "dot")
-        // user probe routing under the frozen quantizer — the same
-        // fused NearestCids kernel as AnnIvf's probe side, exploded to
-        // (user_id, bucket) rows so the oracle's probe join reads it
-        // exactly like the LSH home-bucket table
-        val probeCids = graft.functions.FastExpressions
-          .nearestCids(col("user_vec"), centers, nprobe)
-        (op.transform(withVec),
-         AnnIvf.index(itemVecs, centers)
-           .select(col("__item_id").as("item_id"), col("__cid").as("bucket")),
-         withVec.select(col("user_id"), explode(probeCids).as("bucket")))
+        AnnIvf(itemVecs, cachedIvfCenters(d, itemVecs, nlist), "user_id", "user_vec",
+          k = retrievalK, nprobe = math.min(4, nlist), metric = "dot")
     }
+    val retrieved = op.transform(withVec)
+    // the oracle's probe join reads the op's own index assignments and
+    // probe rows
+    val itemBuckets = op.index(itemVecs)
+      .select(col("__item_id").as("item_id"), col(op.listCol).as("bucket"))
+    val userBuckets = op.withProbes(withVec)
+      .select(col("user_id"), col(op.listCol).as("bucket"))
 
     // under Verify: persist the fitted state (factors + index/probe
     // assignments) so the oracle can replay the serving stage in SQL
@@ -605,7 +594,7 @@ object Flagship {
       } recsysArtifacts(d) = RecsysArtifacts(up, ip, ib, ub,
         rank = userFactors.select("features").head().getSeq[Float](0).size,
         retrievalK = retrievalK, finalK = finalK,
-        temperature = 20.0, seed = 42L, retriever = tier)
+        temperature = 20.0, seed = 42L)
     }
 
     // stage 3: drop seen items and rank — the retrieval scores ARE the dot

@@ -131,8 +131,18 @@ object EnsemblePersistence {
     * served by the relational plan. Spark's ContextCleaner releases
     * the broadcasts once the graph is unreachable. */
   def load(dir: String, spark: SparkSession): Ensemble = {
-    val in = fileSystem(dir, spark).open(new Path(dir, "metadata.json"))
-    val meta = try JsonMethods.parse(new String(in.readAllBytes(), UTF_8)) finally in.close()
+    val manifest = new Path(dir, "metadata.json")
+    val meta = try {
+      val in = fileSystem(dir, spark).open(manifest)
+      try JsonMethods.parse(new String(in.readAllBytes(), UTF_8)) finally in.close()
+    } catch {
+      // the local filesystem checks the manifest against its checksum
+      // sidecar, which an edit outside Hadoop leaves stale
+      case e: org.apache.hadoop.fs.ChecksumException => throw new IllegalArgumentException(
+        s"Ensemble.load: $manifest does not match its checksum file " +
+          s"${new Path(dir, ".metadata.json.crc")}; if the manifest was edited by hand, " +
+          "delete the checksum file and load again", e)
+    }
     val fv = meta \ "format_version"
     if (fv != JString(FormatVersion)) throw new IllegalArgumentException(
       s"Ensemble.load: $dir has format version ${JsonMethods.compact(fv)}, this build " +

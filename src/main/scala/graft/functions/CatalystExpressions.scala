@@ -841,7 +841,7 @@ case class ByteStride(child: Expression, skip: Int, step: Int)
 
 /** The whole IVF-PQ encode — coarse-assign, residual, per-subspace
   * codebook argmin — as ONE fused loop per row. Value-identical to the
-  * literal-tree formulation in [[graft.ops.AnnIvfPq.encodedIndex]] /
+  * literal-tree formulation in [[graft.ops.AnnIvfPq.index]] /
   * [[graft.ops.PqCodebookDrift]] (struct-min over
   * `|e|² − 2·r_j·e` with lowest-code tie-break, all dots sequential
   * double folds, `|e|²` pre-summed driver-side with the same Scala fold),

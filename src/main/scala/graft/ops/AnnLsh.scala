@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.broadcast.Broadcast
 import graft.core.EnsembleOp
-import graft.functions.{AnnTable, LshRouting, TopKAggregator, VectorFunctions}
+import graft.functions.{AnnTable, LshRouting, VectorFunctions}
 
 /** Approximate nearest neighbour via sign-random-projection LSH — the
   * scale path for [[TopKRetrieval]] when the item set cannot be broadcast
@@ -31,7 +31,8 @@ import graft.functions.{AnnTable, LshRouting, TopKAggregator, VectorFunctions}
   * scores, same top-k order, and a query whose probed buckets are empty
   * still drops out. Any other input, an index above
   * `spark.sql.autoBroadcastJoinThreshold`, and every in-memory op take
-  * the probe join below, which also merges duplicate query ids.
+  * the probe join ([[AnnIndex.transformIndexed]]), which also merges
+  * duplicate query ids.
   */
 case class AnnLsh(
     items: DataFrame,
@@ -44,35 +45,9 @@ case class AnnLsh(
     nprobe: Int = 4,
     metric: String = "cosine",
     center: Option[Seq[Double]] = None,
-    resident: Option[Broadcast[AnnTable]] = None) extends EnsembleOp {
+    resident: Option[Broadcast[AnnTable]] = None) extends AnnIndex {
 
   require(nprobe >= 1 && nprobe <= numBits + 1, s"$name: nprobe in [1, numBits+1]")
-
-  /** Bucket id: numBits sign-projection bits packed into an int — the
-    * one-pass [[graft.functions.LshBucket]] expression (one xxhash per
-    * dimension, all planes in a single loop; the old HOF formulation cost
-    * numBits interpreted vector scans per row). Hyperplanes pass through
-    * the item-set mean, not the origin: clustered catalogs
-    * (ALS factors live in a cone) would otherwise collapse into a few
-    * giant buckets — measured 20k items → 138 buckets with a 1.9k-item
-    * heavy hitter uncentered, vs a near-uniform spread centered. */
-  private def bucket(vec: Column, centerCol: Column): Column =
-    graft.functions.FastExpressions.lshBucket(vec, centerCol, numBits)
-
-
-  private def score(q: Column, it: Column): Column = metric match {
-    case "dot"    => VectorFunctions.dot(q, it)
-    case "cosine" => VectorFunctions.cosine(q, it)
-    case m        => throw new IllegalArgumentException(s"$name: unknown metric $m")
-  }
-
-  override def transformSchema(in: StructType): StructType = {
-    requireCol(in, queryIdCol); requireCol(in, queryVecCol)
-    StructType(Seq(
-      in(queryIdCol),
-      StructField("candidate_ids", ArrayType(LongType)),
-      StructField("candidate_scores", ArrayType(DoubleType))))
-  }
 
   /** The hyperplane center: the fit-time `center` when given (persisted
     * ensembles MUST pass it — double partial-agg merge order makes a
@@ -82,74 +57,55 @@ case class AnnLsh(
   @transient lazy val resolvedCenter: Seq[Double] =
     center.getOrElse(VectorFunctions.meanVector(items, itemVecCol).toSeq)
 
+  def index(items: DataFrame): DataFrame =
+    AnnLsh.index(items, resolvedCenter, numBits, itemIdCol, itemVecCol)
+  def listCol: String = "__bucket"
+  def listCount: Long = 1L << numBits
+  def keepEmpty: Boolean = false
+  def ingestAppId: String = "lsh-ingest"
+
+  /** Probes: the home bucket plus `nprobe-1` single-bit flips. Bucket
+    * id: numBits sign-projection bits packed into an int — the one-pass
+    * [[graft.functions.LshBucket]] expression (one xxhash per
+    * dimension, all planes in a single loop; the old HOF formulation cost
+    * numBits interpreted vector scans per row). Hyperplanes pass through
+    * the item-set mean, not the origin: clustered catalogs
+    * (ALS factors live in a cone) would otherwise collapse into a few
+    * giant buckets — measured 20k items → 138 buckets with a 1.9k-item
+    * heavy hitter uncentered, vs a near-uniform spread centered. The
+    * center is a literal (#dims doubles, metadata scale): both sides
+    * bucket against the same hyperplanes and the plan stays join-free. */
+  def withProbes(queries: DataFrame): DataFrame = {
+    // home bucket computed ONCE per query row; the nprobe-1 flips are
+    // cheap integer XORs of that value
+    val probes = array((0 until nprobe).map(i =>
+      if (i == 0) col("__home")
+      else col("__home").bitwiseXOR(lit(1 << (i - 1)))): _*)
+    queries
+      .withColumn("__home", graft.functions.FastExpressions.lshBucket(
+        col(queryVecCol), typedLit(resolvedCenter.toArray), numBits))
+      .withColumn(listCol, explode(probes))
+      .drop("__home")
+  }
+
+  // a null vector's null bucket never joins
+  protected def queries(df: DataFrame): DataFrame =
+    df.select(col(queryIdCol), col(queryVecCol))
+
+  protected def ranked(candidates: DataFrame, df: DataFrame): DataFrame =
+    Retriever.topK(candidates, queryIdCol, k, coalesce(Retriever.similarity(metric,
+      col(queryVecCol), col("__item_vec")), lit(Double.NaN)))
+
   private def routing = LshRouting(resolvedCenter, numBits, nprobe)
 
   /** This op with its bucketed catalog held resident (see the class
     * doc); itself when the index does not qualify. One collect job. */
   def withResidentTable: AnnLsh =
-    Resident.annTable(AnnLsh.index(items, resolvedCenter, numBits, itemIdCol, itemVecCol),
-      "__bucket", routing, metric).fold(this)(t => copy(resident = Some(t)))
+    Resident.annTable(index(items), listCol, routing, metric)
+      .fold(this)(t => copy(resident = Some(t)))
 
-  override def transform(df: DataFrame): DataFrame =
-    Resident.annProbe(df, resident, routing, metric, queryIdCol, queryVecCol, k,
-      keepEmpty = false).getOrElse(transformIndexed(df,
-        AnnLsh.index(items, resolvedCenter, numBits, itemIdCol, itemVecCol)))
-
-  /** Probe a PREBUILT bucket table (the `(__item_id, __item_vec,
-    * __bucket)` shape [[AnnLsh.index]] emits — persisted parquet
-    * bucketed by `__bucket`, or the live frame of a sink-maintained
-    * index log): same probe plan, zero bucketing work for the catalog —
-    * the serving path when the index is maintained incrementally
-    * ([[updatedIndex]] / [[graft.streaming.StreamingOps.annLshIndexSink]]). */
-  def transformIndexed(df: DataFrame, index: DataFrame): DataFrame = {
-    val topk = udaf(new TopKAggregator(k))
-    // item mean as a literal (#dims doubles, metadata scale) — both sides
-    // bucket against the same centered hyperplanes, plans stay join-free
-    val mu = typedLit(resolvedCenter.toArray)
-    // home bucket computed ONCE per query row; the nprobe-1 single-bit-flip
-    // probes are cheap integer XORs of that value
-    val probes = array((0 until nprobe).map(i =>
-      if (i == 0) col("__home")
-      else col("__home").bitwiseXOR(lit(1 << (i - 1)))): _*)
-    val probed = df.select(col(queryIdCol), col(queryVecCol))
-      .withColumn("__home", bucket(col(queryVecCol), mu))
-      .withColumn("__bucket", explode(probes))
-      .drop("__home")
-    probed.join(index, Seq("__bucket"))
-      .groupBy(col(queryIdCol))
-      .agg(topk(col("__item_id"), coalesce(score(col(queryVecCol), col("__item_vec")),
-        lit(Double.NaN))).as("__top"))
-      .select(col(queryIdCol),
-        col("__top.ids").as("candidate_ids"),
-        col("__top.scores").as("candidate_scores"))
-  }
-
-  /** Incremental index ingest under the FROZEN hyperplane center
-    * ([[AnnIvf.updatedIndex]]'s discipline): bucketing is per-item
-    * independent, so appending the batch's bucketed rows is id-identical
-    * to a full rebuild over the union, at the cost of bucketing only the
-    * batch. The frozen center is the staleness trade — a drifting
-    * catalog mean skews bucket occupancy; the recall rows are the
-    * monitor, a re-center + rebuild the action. */
-  def updatedIndex(index: DataFrame, newItems: DataFrame): DataFrame =
-    index.unionByName(
-      AnnLsh.index(newItems, resolvedCenter, numBits, itemIdCol, itemVecCol))
-
-  /** Relational form: one row per (query, rank, item, score) — scalar
-    * columns only, the shape the correctness harness can sort and hash. */
-  def asRows(df: DataFrame): DataFrame = rowsOf(transform(df))
-
-  /** Relational form over a prebuilt bucket table ([[transformIndexed]]). */
-  def asRowsIndexed(df: DataFrame, index: DataFrame): DataFrame =
-    rowsOf(transformIndexed(df, index))
-
-  private def rowsOf(out: DataFrame): DataFrame =
-    out.select(col(queryIdCol),
-      posexplode(arrays_zip(col("candidate_ids"), col("candidate_scores")))
-        .as(Seq("pos", "pair")))
-      .select(col(queryIdCol), (col("pos") + 1).as("rank"),
-        col("pair.candidate_ids").as("item_id"),
-        col("pair.candidate_scores").as("score"))
+  override protected def residentAnswer(df: DataFrame): Option[DataFrame] =
+    Resident.annProbe(df, resident, routing, metric, queryIdCol, queryVecCol, k, keepEmpty)
 }
 
 /** LSH bucket-occupancy skew report — the fit-quality monitor the sf1.0

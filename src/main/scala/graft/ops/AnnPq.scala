@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.EnsembleOp
-import graft.functions.{TopKAggregator, VectorFunctions}
+import graft.functions.VectorFunctions
 
 /** IVF-PQ approximate nearest neighbour — the product-quantization scale
   * path of the reference's FAISS surface (`IVF<nlist>,PQ<m>` index
@@ -30,7 +30,7 @@ import graft.functions.{TopKAggregator, VectorFunctions}
   * higher-order functions (zip_with + element_at + aggregate), fully
   * codegen'd, no UDF.
   *
-  * Spark shape: the compact index [[encodedIndex]] (id, list id, codes)
+  * Spark shape: the compact index [[index]] (id, list id, codes)
   * is computed map-side from fit-time literal parameters (centers +
   * codebooks are plain doubles — metadata scale, persist as JSON); the
   * probe is the same `__cid` equi-join as AnnIvf — nprobe·|list|
@@ -58,7 +58,7 @@ case class AnnIvfPq(
     itemVecCol: String = "embedding",
     k: Int = 10,
     nprobe: Int = 8,
-    refine: Int = 0) extends EnsembleOp {
+    refine: Int = 0) extends AnnIndex {
 
   require(centers.nonEmpty, s"$name: need at least one coarse centroid")
   require(nprobe >= 1 && nprobe <= centers.size, s"$name: nprobe in [1, nlist]")
@@ -83,26 +83,19 @@ case class AnnIvfPq(
     * Pure map-side expressions over fit-time literals — one items pass of
     * d·ksub flops per row, INDEPENDENT of query count (this is encode,
     * not brute force: brute force is queries×items). A serving deployment
-    * amortizes even that: write this frame out once
-    * (`op.encodedIndex.write.parquet(...)`) and feed future probe jobs
-    * from the ~m-bytes-per-item parquet instead of re-encoding — the
-    * frame is public precisely so it can be checkpointed. Codes quantize
-    * the RESIDUAL against the assigned centroid (IVFADC; Jégou §IV.A):
-    * residuals are smaller than raw vectors, so the same codebook budget
-    * buys less quantization error. */
-  def encodedIndex: DataFrame =
+    * amortizes even that: write this frame out once and feed future probe
+    * jobs ([[transformIndexed]]) from the ~m-bytes-per-item parquet
+    * instead of re-encoding. Codes quantize the RESIDUAL against the
+    * assigned centroid (IVFADC; Jégou §IV.A): residuals are smaller than
+    * raw vectors, so the same codebook budget buys less quantization
+    * error. The frozen codebooks' staleness monitor is
+    * [[PqCodebookDrift]], [[AnnIvfPq.refitCodebooks]] the cheap action. */
+  def index(items: DataFrame): DataFrame =
     AnnIvfPq.index(items, centers, codebooks, itemIdCol, itemVecCol)
-
-  /** Incremental index ingest under the FROZEN quantizers ([[AnnIvf
-    * .updatedIndex]]'s discipline one tier down): encoding is per-item
-    * independent, so appending the batch's codes is id-identical to a
-    * full re-encode over the union, at the cost of encoding only the
-    * batch. Staleness is the documented trade — [[PqCodebookDrift]] is
-    * the sub-codebook monitor, [[AnnIvfPq.refitCodebooks]] the cheap
-    * action. */
-  def updatedIndex(index: DataFrame, newItems: DataFrame): DataFrame =
-    index.unionByName(
-      AnnIvfPq.index(newItems, centers, codebooks, itemIdCol, itemVecCol))
+  def listCol: String = "__cid"
+  def listCount: Long = centers.size.toLong
+  def keepEmpty: Boolean = false
+  def ingestAppId: String = "pq-ingest"
 
   /** Per-query ADC lookup table: tab[j][k] = q_j · cb_jk (m×ksub doubles,
     * one array literal tree per query row). */
@@ -115,93 +108,61 @@ case class AnnIvfPq(
   private def qcCol(q: Column): Column =
     array(centers.map(c => dot(q, typedLit(c.toArray))): _*)
 
-  override def transformSchema(in: StructType): StructType = {
-    requireCol(in, queryIdCol); requireCol(in, queryVecCol)
-    StructType(Seq(
-      in(queryIdCol),
-      StructField("candidate_ids", ArrayType(LongType)),
-      StructField("candidate_scores", ArrayType(DoubleType))))
-  }
-
-  override def transform(df: DataFrame): DataFrame =
-    transformIndexed(df, encodedIndex)
-
-  /** Probe a PREBUILT code table (the `(__item_id, __cid, __codes)`
-    * shape [[AnnIvfPq.index]] emits — persisted parquet, or the live
-    * frame of a sink-maintained index log): same probe plan, zero
-    * encode work for the catalog — the serving path when the index is
-    * maintained incrementally ([[updatedIndex]] /
-    * [[graft.streaming.StreamingOps.annPqIndexSink]]) rather than
-    * re-encoded per query job. The refine pass still fetches full
-    * vectors from `items` by id — the raw catalog is the refine store,
-    * the code table the probe store, exactly FAISS's
-    * refine-with-stored-vectors split. */
-  def transformIndexed(df: DataFrame, index: DataFrame): DataFrame = {
+  /** Probes: the `nprobe` nearest coarse centroids, each probe row
+    * carrying the query's ADC tables (built once per query, before the
+    * explode) instead of its vector. */
+  def withProbes(queries: DataFrame): DataFrame = {
     val q = col(queryVecCol)
-    val probed = df.select(col(queryIdCol), q)
+    queries
       .withColumn("__tab", lutCol(q))
       .withColumn("__qc", qcCol(q))
-      .withColumn("__cid", explode(
-        VectorFunctions.nearestCentroids(q, centers, nprobe)))
+      .withColumn(listCol, explode(VectorFunctions.nearestCentroids(q, centers, nprobe)))
       .drop(queryVecCol)
+  }
+
+  // a null vector has no nearest centroid, so it probes nothing
+  protected def queries(df: DataFrame): DataFrame =
+    df.select(col(queryIdCol), col(queryVecCol))
+
+  /** ADC top-k over the probed codes; with `refine`, the exact re-rank.
+    * The refine pass fetches full vectors from `items` by id — the raw
+    * catalog is the refine store, the code table the probe store,
+    * exactly FAISS's refine-with-stored-vectors split. */
+  protected def ranked(candidates: DataFrame, df: DataFrame): DataFrame = {
     // ADC: element_at(qc, cid+1) + Σ_j tab[j][codes[j]] — m lookups per
     // candidate, no float-vector math after the per-query table build.
     // The lookup-sum is the fused AdcLookupSum expression: bit-identical
     // to the zip_with + aggregate HOF pair (same ((0+t0)+t1)+… fold the
     // oracle replays), but HOFs are CodegenFallback — the composed form
     // paid interpreted lambda eval + an intermediate array PER CANDIDATE
-    val adc = element_at(col("__qc"), col("__cid") + 1) +
+    val adc = element_at(col("__qc"), col(listCol) + 1) +
       graft.functions.FastExpressions
         .adcLookupSum(col("__codes"), col("__tab"))
-    val adcTop = udaf(new TopKAggregator(if (refine > 0) refine else k))
-    val coarseTop = probed.join(index, Seq("__cid"))
-      .groupBy(col(queryIdCol))
-      .agg(adcTop(col("__item_id"), adc).as("__top"))
-    val ranked =
-      if (refine == 0) coarseTop
-      else {
-        // FAISS-style refinement (the IVFPQ + refine-with-stored-vectors
-        // design): ADC nominates `refine` candidates per query from CODES
-        // alone; only those ~refine rows fetch their full float vector —
-        // an id-keyed equi-join touching refine·|queries| rows, not the
-        // index — and re-rank by the EXACT dot. Recall returns to
-        // IVF,Flat's probe-limited level; the big index still never
-        // shuffles floats.
-        val exactTop = udaf(new TopKAggregator(k))
+    val coarseTop = Retriever.topK(candidates, queryIdCol, if (refine > 0) refine else k, adc)
+    if (refine == 0) coarseTop
+    else {
+      // FAISS-style refinement (the IVFPQ + refine-with-stored-vectors
+      // design): ADC nominates `refine` candidates per query from CODES
+      // alone; only those ~refine rows fetch their full float vector —
+      // an id-keyed equi-join touching refine·|queries| rows, not the
+      // index — and re-rank by the EXACT dot. Recall returns to
+      // IVF,Flat's probe-limited level; the big index still never
+      // shuffles floats.
+      Retriever.topK(
         coarseTop
-          .select(col(queryIdCol), explode(col("__top.ids")).as("__item_id"))
-          .join(df.select(col(queryIdCol), q), Seq(queryIdCol))
+          .select(col(queryIdCol), explode(col("candidate_ids")).as("__item_id"))
+          .join(df.select(col(queryIdCol), col(queryVecCol)), Seq(queryIdCol))
           .join(items.select(col(itemIdCol).cast("long").as("__item_id"),
-            col(itemVecCol).as("__item_vec")), Seq("__item_id"))
-          .groupBy(col(queryIdCol))
-          .agg(exactTop(col("__item_id"),
-            dot(col(queryVecCol), col("__item_vec"))).as("__top"))
-      }
-    ranked.select(col(queryIdCol),
-      col("__top.ids").as("candidate_ids"),
-      col("__top.scores").as("candidate_scores"))
+            col(itemVecCol).as("__item_vec")), Seq("__item_id")),
+        queryIdCol, k, dot(col(queryVecCol), col("__item_vec")))
+    }
   }
-
-  /** Relational form: one row per (query, rank, item, score). */
-  def asRows(df: DataFrame): DataFrame = rowsOf(transform(df))
-
-  /** Relational form over a prebuilt code table ([[transformIndexed]]). */
-  def asRowsIndexed(df: DataFrame, index: DataFrame): DataFrame =
-    rowsOf(transformIndexed(df, index))
-
-  private def rowsOf(out: DataFrame): DataFrame =
-    out.select(col(queryIdCol),
-      posexplode(arrays_zip(col("candidate_ids"), col("candidate_scores")))
-        .as(Seq("pos", "pair")))
-      .select(col(queryIdCol), (col("pos") + 1).as("rank"),
-        col("pair.candidate_ids").as("item_id"),
-        col("pair.candidate_scores").as("score"))
 }
 
 object AnnIvfPq {
   /** The compact searchable index frame — the ONE encode definition
-    * ([[AnnIvfPq.encodedIndex]], [[AnnIvfPq.updatedIndex]] and the
-    * streaming sink all build through here, so incremental and rebuilt
+    * (the op's `index`, hence `transform`, `updatedIndex` and the
+    * streaming sink, all build through here, so incremental and rebuilt
     * indexes can never disagree). One fused [[graft.functions.PqEncode]]
     * pass per row (coarse argmin → residual → m codebook argmins) —
     * value-identical to the unrolled |cb|² − 2·r_j·cb struct-min tree it

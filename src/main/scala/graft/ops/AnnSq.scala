@@ -2,9 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.core.EnsembleOp
-import graft.functions.{TopKAggregator, VectorFunctions}
+import graft.functions.VectorFunctions
 
 /** IVF + 8-bit scalar quantization — the `IVF<nlist>,SQ8` tier of the
   * reference's FAISS index strings (/root/reference/merlin/systems/dag/ops/
@@ -56,7 +54,7 @@ case class AnnSq(
     itemIdCol: String = "item_id",
     itemVecCol: String = "embedding",
     k: Int = 10,
-    nprobe: Int = 8) extends EnsembleOp {
+    nprobe: Int = 8) extends AnnIndex {
 
   require(centers.nonEmpty, s"$name: need at least one coarse centroid")
   require(nprobe >= 1 && nprobe <= centers.size, s"$name: nprobe in [1, nlist]")
@@ -76,76 +74,32 @@ case class AnnSq(
   /** Row-local decoder: codes → reconstructed double vector v̂. */
   def decode(codes: Column): Column = AnnSq.decodeExpr(codes, mins, steps)
 
-  override def transformSchema(in: StructType): StructType = {
-    requireCol(in, queryIdCol); requireCol(in, queryVecCol)
-    StructType(Seq(
-      in(queryIdCol),
-      StructField("candidate_ids", ArrayType(LongType)),
-      StructField("candidate_scores", ArrayType(DoubleType))))
-  }
+  /** The compact searchable index: (item id, coarse list id, SQ8 codes)
+    * — the [[AnnIvf.index]] contract with codes in place of float
+    * vectors. */
+  def index(items: DataFrame): DataFrame =
+    AnnSq.index(items, centers, mins, maxs, itemIdCol, itemVecCol)
+  def listCol: String = "__cid"
+  def listCount: Long = centers.size.toLong
+  def keepEmpty: Boolean = true
+  def ingestAppId: String = "sq-ingest"
 
-  override def transform(df: DataFrame): DataFrame =
-    transformIndexed(df, codedIndex)
+  def withProbes(queries: DataFrame): DataFrame =
+    queries.withColumn(listCol, explode(
+      VectorFunctions.nearestCentroids(col(queryVecCol), centers, nprobe)))
 
-  /** The compact searchable index: (item id, coarse list id, SQ8 codes) —
-    * the persistable/incrementally-maintainable artifact (the
-    * [[AnnIvf.index]] contract with codes in place of float vectors). */
-  def codedIndex: DataFrame = AnnSq.index(items, centers, mins, maxs,
-    itemIdCol, itemVecCol)
+  protected def queries(df: DataFrame): DataFrame =
+    df.filter(col(queryVecCol).isNotNull).select(col(queryIdCol), col(queryVecCol))
 
-  /** Probe a PREBUILT coded index (`(__item_id, __cid, __codes)`): decode
-    * is row-local over the candidates, the exact dot runs on v̂. */
-  def transformIndexed(df: DataFrame, index: DataFrame): DataFrame = {
-    val topk = udaf(new TopKAggregator(k))
-    val queries = df.filter(col(queryVecCol).isNotNull)
-      .select(col(queryIdCol), col(queryVecCol))
-    val probed = queries
-      .withColumn("__cid", explode(
-        VectorFunctions.nearestCentroids(col(queryVecCol), centers, nprobe)))
-    // fused decode+dot (q · (lo + code·st) in one loop): bit-identical
-    // to dot(q, decode(codes)) — same fold order, same per-term IEEE
-    // arithmetic, same null discipline — but allocation-free where the
-    // composed form materialized one reconstructed vector PER CANDIDATE
-    // (nprobe·|list| rows per query, the SQ8 hot loop)
-    val hits = probed.join(index, Seq("__cid"))
-      .groupBy(col(queryIdCol))
-      .agg(topk(col("__item_id"),
-        coalesce(graft.functions.FastExpressions.sqDecodeDot(
-          col(queryVecCol), col("__codes"), mins, steps),
-          lit(Double.NaN))).as("__top"))
-    // empty-probed-list queries keep their row (AnnIvf.transformIndexed's
-    // one-row-per-query contract; empty candidate arrays)
-    queries.select(col(queryIdCol)).join(hits, Seq(queryIdCol), "left")
-      .select(col(queryIdCol),
-        coalesce(col("__top.ids"), typedLit(Array.empty[Long]))
-          .as("candidate_ids"),
-        coalesce(col("__top.scores"), typedLit(Array.empty[Double]))
-          .as("candidate_scores"))
-  }
-
-  /** Incremental ingest under the FROZEN quantizers (coarse + scalar):
-    * only the batch is assigned/encoded; id-identical to a full rebuild
-    * because both assignments are per-item independent ([[AnnIvf.updatedIndex]]
-    * discipline). Staleness: catalog drift moves values outside the fitted
-    * [min,max] — codes saturate, recall monitoring triggers the refit. */
-  def updatedIndex(index: DataFrame, newItems: DataFrame): DataFrame =
-    index.unionByName(AnnSq.index(newItems, centers, mins, maxs,
-      itemIdCol, itemVecCol))
-
-  /** Relational form: one row per (query, rank, item, score). */
-  def asRows(df: DataFrame): DataFrame = rowsOf(transform(df))
-
-  /** Relational form over a prebuilt coded index ([[transformIndexed]]). */
-  def asRowsIndexed(df: DataFrame, index: DataFrame): DataFrame =
-    rowsOf(transformIndexed(df, index))
-
-  private def rowsOf(out: DataFrame): DataFrame =
-    out.select(col(queryIdCol),
-      posexplode(arrays_zip(col("candidate_ids"), col("candidate_scores")))
-        .as(Seq("pos", "pair")))
-      .select(col(queryIdCol), (col("pos") + 1).as("rank"),
-        col("pair.candidate_ids").as("item_id"),
-        col("pair.candidate_scores").as("score"))
+  // fused decode+dot (q · (lo + code·st) in one loop): bit-identical
+  // to dot(q, decode(codes)) — same fold order, same per-term IEEE
+  // arithmetic, same null discipline — but allocation-free where the
+  // composed form materialized one reconstructed vector PER CANDIDATE
+  // (nprobe·|list| rows per query, the SQ8 hot loop)
+  protected def ranked(candidates: DataFrame, df: DataFrame): DataFrame =
+    Retriever.topK(candidates, queryIdCol, k,
+      coalesce(graft.functions.FastExpressions.sqDecodeDot(
+        col(queryVecCol), col("__codes"), mins, steps), lit(Double.NaN)))
 }
 
 object AnnSq {

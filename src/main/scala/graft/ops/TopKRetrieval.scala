@@ -1,10 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.EnsembleOp
-import graft.functions.{TopKAggregator, VectorFunctions}
 
 /** Top-k similarity retrieval — the Spark-native `QueryFaiss`
   * (/root/reference/merlin/systems/dag/ops/faiss.py:90-112): for each query
@@ -25,28 +23,17 @@ case class TopKRetrieval(
     itemIdCol: String = "item_id",
     itemVecCol: String = "embedding",
     k: Int = 10,
-    metric: String = "dot", // dot | cosine
-    outputCol: String = "candidate_ids") extends EnsembleOp {
+    metric: String = "dot") extends Retriever { // dot | cosine
 
   require(k >= 1, s"$name: k must be >= 1, got $k")
 
-  private def score(q: Column, it: Column): Column = metric match {
-    case "dot"    => VectorFunctions.dot(q, it)
-    case "cosine" => VectorFunctions.cosine(q, it)
-    case m        => throw new IllegalArgumentException(s"$name: unknown metric $m")
-  }
-
   override def transformSchema(in: StructType): StructType = {
-    requireCol(in, queryIdCol); requireCol(in, queryVecCol)
+    val out = super.transformSchema(in)
     require(in(queryVecCol).dataType.isInstanceOf[ArrayType], s"$name: $queryVecCol must be array")
-    StructType(Seq(
-      in(queryIdCol),
-      StructField(outputCol, ArrayType(LongType)),
-      StructField("candidate_scores", ArrayType(DoubleType))))
+    out
   }
 
   override def transform(df: DataFrame): DataFrame = {
-    val topk = udaf(new TopKAggregator(k))
     // the same null discipline on the ITEM side: a null (or
     // dimension-mismatched — ArrayDotProduct yields NULL) item vector
     // would otherwise score 0.0 against every query via the tuple
@@ -62,22 +49,11 @@ case class TopKRetrieval(
     // the user receives arbitrary candidates "scored" 0. distinct():
     // duplicate request rows would feed every item twice and duplicate
     // ids inside top-k (PredictImplicit.requestedUsers discipline)
-    df.where(col(queryVecCol).isNotNull)
-      .select(col(queryIdCol), col(queryVecCol)).distinct()
-      .join(it)  // broadcast nested loop: every query scores every item
-      .groupBy(col(queryIdCol))
-      .agg(topk(col("__item_id"), coalesce(score(col(queryVecCol), col("__item_vec")),
-        lit(Double.NaN))).as("__top"))
-      .select(col(queryIdCol),
-        col("__top.ids").as(outputCol),
-        col("__top.scores").as("candidate_scores"))
+    Retriever.topK(
+      df.where(col(queryVecCol).isNotNull)
+        .select(col(queryIdCol), col(queryVecCol)).distinct()
+        .join(it),  // broadcast nested loop: every query scores every item
+      queryIdCol, k, coalesce(Retriever.similarity(metric, col(queryVecCol),
+        col("__item_vec")), lit(Double.NaN)))
   }
-
-  /** Relational form: one row per (query, rank, item) — used by the
-    * correctness oracle where arrays of ties are awkward to hash. */
-  def asRows(df: DataFrame): DataFrame =
-    transform(df).select(col(queryIdCol),
-      posexplode(arrays_zip(col(outputCol), col("candidate_scores"))).as(Seq("pos", "pair")))
-      .select(col(queryIdCol), (col("pos") + 1).as("rank"),
-        col(s"pair.$outputCol").as("item_id"), col("pair.candidate_scores").as("score"))
 }

@@ -1152,11 +1152,7 @@ object CurationQueries {
         q.processAllAvailable()
       }
     } finally q.stop()
-    graft.streaming.StreamingOps.occupancyLog(spark, dir).map { case (v, o) =>
-      (v, o.nItems, o.nBuckets, o.nOccupied, o.maxCount,
-        o.uniformCount, o.skewBp)
-    }.toDF("version", "n_items", "n_buckets", "n_occupied", "max_count",
-      "uniform_count", "skew_bp").orderBy("version")
+    OpQueries.occupancyRows(spark, dir)
   }
 
   /** The BM25 trigger→ACTION lifecycle end-to-end

@@ -225,7 +225,7 @@ object MlQueries {
       op.relFrame.unpersist(false)
       op.relCountsFrame.unpersist(false)
     }
-    graft.streaming.StreamingOps.loadEvalLog(spark, dir).get
+    graft.streaming.StreamingOps.loadIndexLog(spark, dir).get
       .drop("batch_id").orderBy("query_id")
   }
 
@@ -389,32 +389,20 @@ object MlQueries {
     // k-means centroids are fit parameters, not serving math): probe
     // join, double-fold dot, (score DESC, id ASC) top-k, seen
     // anti-filter, per-position md5 softmax keys, final (key ASC, id
-    // ASC) top-10. The probe CTE follows the tier [[graft.Flagship]]'s
-    // skew-aware chooseRetriever picked: LSH persists one home bucket
-    // per user and the XOR flips replay as serving math; IVF persists
-    // the exploded nprobe-nearest-centroid routing itself (per-user fit
-    // state under the frozen quantizer), so the probes CTE is a plain
-    // read — everything downstream is shared.
+    // ASC) top-10. Either tier [[graft.Flagship]]'s skew-aware decision
+    // picks (LSH buckets or IVF lists) persists the serving op's own
+    // probe rows, one (user_id, bucket) row per probe, so the probes CTE
+    // is a plain read.
     val recsys = OracleDir.pickDir(graft.Flagship.recsysArtifacts.keys)
       .flatMap(graft.Flagship.recsysArtifacts.get).map { a =>
         val dot = (1 to a.rank)
           .map(j => s"f.features[$j]::DOUBLE * g.features[$j]::DOUBLE")
           .reduceLeft((x, y) => s"($x + $y)")
-        val ubProbes = a.retriever match {
-          case "ivf" =>
-            s"""ub AS (SELECT user_id, bucket FROM read_parquet('${a.userBucketPath}/*.parquet')),
-               |probes AS (SELECT user_id, bucket FROM ub),""".stripMargin
-          case _ =>
-            s"""ub AS (SELECT user_id, home FROM read_parquet('${a.userBucketPath}/*.parquet')),
-               |probes AS (SELECT user_id,
-               |    unnest([home, xor(home, 1), xor(home, 2), xor(home, 4)]) AS bucket
-               |  FROM ub),""".stripMargin
-        }
         "pipeline_recsys" ->
           s"""WITH uf AS (SELECT id, features FROM read_parquet('${a.userPath}/*.parquet')),
              |itf AS (SELECT id, features FROM read_parquet('${a.itemPath}/*.parquet')),
              |ib AS (SELECT item_id, bucket FROM read_parquet('${a.itemBucketPath}/*.parquet')),
-             |$ubProbes
+             |probes AS (SELECT user_id, bucket FROM read_parquet('${a.userBucketPath}/*.parquet')),
              |cand AS (SELECT p.user_id, b.item_id
              |  FROM probes p JOIN ib b ON p.bucket = b.bucket),
              |scored AS (SELECT c.user_id, c.item_id, $dot AS score

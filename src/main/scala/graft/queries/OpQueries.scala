@@ -203,15 +203,13 @@ object OpQueries {
   /** The ONLINE LSH-index lifecycle end-to-end ([[annIvfStream]]'s shape
     * for the sign-projection tier): the catalog arrives as a
     * 3-micro-batch item stream,
-    * [[graft.streaming.StreamingOps.annLshIndexSink]] maintains the
+    * [[graft.streaming.StreamingOps.annIndexSink]] maintains the
     * persisted bucket table under the frozen center across batches, and
     * the probe runs against the final loaded version. Bucketing is
     * per-item independent through the one shared [[AnnLsh.index]]
     * definition, so the maintained index equals the full build and this
     * row shares op_ann_lsh's dump-time oracle. */
   def annLshStream(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = embeddings(spark, d)
     val queries = emb.filter(col("label") === 0).select(col("vec_id"), col("embedding"))
     val items = emb.filter(col("label") =!= 0)
@@ -219,20 +217,7 @@ object OpQueries {
     val op = AnnLsh(items, "vec_id", "embedding", k = 10, numBits = annLshBits,
       nprobe = annLshProbes, metric = "cosine",
       center = Some(cachedLshCenter(spark, d)))
-    val itemRows = items.as[(Long, Seq[Float])].collect()
-    val dir = OracleDir.tempDir("lsh_stream_idx")
-    val src = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(graft.streaming.StreamingOps.annLshIndexSink(dir, op)).start()
-    try {
-      (0 until 3).foreach { m =>
-        src.addData(itemRows.filter(_._1 % 3 == m).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val index = graft.streaming.StreamingOps.loadAnnLshIndex(spark, dir).get
-    op.asRowsIndexed(queries, index).orderBy("vec_id", "rank")
+    streamedRows(spark, op, queries, "lsh_stream_idx")
   }
 
   /** LSH bucket-occupancy skew over the op_ann_lsh fitted state
@@ -502,37 +487,19 @@ object OpQueries {
   }
 
   /** The LSH twin of [[annOccupancyStream]] — the stamped occupancy log
-    * of a 3-batch [[graft.streaming.StreamingOps.annLshIndexSink]]
+    * of a 3-batch [[graft.streaming.StreamingOps.annIndexSink]]
     * ingest under the frozen hyperplane center, hash-checked per
     * version against the per-prefix sign-matrix replay. Completes the
     * in-log monitoring symmetry for the tier whose occupancy skew is
     * the FIT-dependent one ([[graft.ops.LshSkewReport]] — the sf1.0
     * recsys indictment). */
   def annLshSkewStream(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val items = embeddings(spark, d).filter(col("label") =!= 0)
       .select(col("vec_id").as("item_id"), col("embedding"))
     val op = AnnLsh(items, "vec_id", "embedding", k = 10,
       numBits = annLshBits, nprobe = annLshProbes, metric = "cosine",
       center = Some(cachedLshCenter(spark, d)))
-    val itemRows = items.as[(Long, Seq[Float])].collect()
-    val dir = OracleDir.tempDir("lsh_skew_stream")
-    val src = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(graft.streaming.StreamingOps.annLshIndexSink(dir, op)).start()
-    try {
-      (0 until 3).foreach { m =>
-        src.addData(itemRows.filter(_._1 % 3 == m).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    graft.streaming.StreamingOps.occupancyLog(spark, dir).map { case (v, o) =>
-      (v, o.nItems, o.nBuckets, o.nOccupied, o.maxCount,
-        o.uniformCount, o.skewBp)
-    }.toDF("version", "n_items", "n_buckets", "n_occupied", "max_count",
-      "uniform_count", "skew_bp").orderBy("version")
+    occupancyRows(spark, streamIndex(spark, op, "lsh_skew_stream"))
   }
 
   /** Memoized IVF coarse-quantizer centers keyed by (sfDir, nlist,
@@ -545,6 +512,51 @@ object OpQueries {
     * [[prewarmAnnCenters]]; Verify pays the fit on first use. */
   private val centerCache =
     scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Seq[Seq[Double]]]
+
+  /** `op`'s catalog streamed through
+    * [[graft.streaming.StreamingOps.annIndexSink]] as three micro-batches
+    * (item_id % 3 = 0, 1, 2) into a fresh temp index log; returns the
+    * log dir. The oracles replay batch b as version b, and the sink skips
+    * empty batches, so an empty split fails here instead of shifting the
+    * mapping. */
+  private def streamIndex(spark: SparkSession, op: AnnIndex, name: String): String = {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val itemRows = op.items.as[(Long, Seq[Float])].collect()
+    (0 until 3).foreach(m => require(itemRows.exists(_._1 % 3 == m),
+      s"streamIndex($name): the item_id % 3 == $m split is empty"))
+    val dir = OracleDir.tempDir(name)
+    val src = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Seq[Float])]
+    val q = src.toDF().toDF("item_id", "embedding").writeStream
+      .foreachBatch(graft.streaming.StreamingOps.annIndexSink(dir, op)).start()
+    try {
+      (0 until 3).foreach { m =>
+        src.addData(itemRows.filter(_._1 % 3 == m).toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    dir
+  }
+
+  /** `queries` probed against `op`'s [[streamIndex]]-maintained index
+    * log, as ordered rows. */
+  private def streamedRows(spark: SparkSession, op: AnnIndex, queries: DataFrame,
+      name: String): DataFrame = {
+    val index = graft.streaming.StreamingOps.loadIndexLog(spark, streamIndex(spark, op, name)).get
+    op.asRowsIndexed(queries, index).orderBy("vec_id", "rank")
+  }
+
+  /** A sink-maintained log's stamped occupancy lines, one row per
+    * committed version. */
+  private[queries] def occupancyRows(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    graft.streaming.StreamingOps.occupancyLog(spark, dir).map { case (v, o) =>
+      (v, o.nItems, o.nBuckets, o.nOccupied, o.maxCount,
+        o.uniformCount, o.skewBp)
+    }.toDF("version", "n_items", "n_buckets", "n_occupied", "max_count",
+      "uniform_count", "skew_bp").orderBy("version")
+  }
 
   private def ivfItems(spark: SparkSession, d: String): DataFrame =
     embeddings(spark, d).filter(col("label") =!= 0)
@@ -1206,7 +1218,7 @@ object OpQueries {
 
   /** The ONLINE dense-index lifecycle end-to-end (the IVF twin of
     * text_bm25_stream): the catalog arrives as a 3-micro-batch item
-    * stream, [[graft.streaming.StreamingOps.annIvfIndexSink]] maintains
+    * stream, [[graft.streaming.StreamingOps.annIndexSink]] maintains
     * the persisted inverted lists under the frozen quantizer across
     * batches, and the probe runs against the final loaded version.
     * Assignment is per-item independent, so the maintained index equals
@@ -1214,28 +1226,12 @@ object OpQueries {
     * streaming index ingest proven equal to the batch build by the
     * driver's own compare. */
   def annIvfStream(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = embeddings(spark, d)
     val queries = emb.filter(col("label") === 0).select(col("vec_id"), col("embedding"))
     val centers = cachedCenters(spark, d, nlist = 32, maxIter = 5)
     val op = AnnIvf(ivfItems(spark, d), centers, "vec_id", "embedding",
       k = 10, nprobe = math.min(8, centers.size), metric = "dot")
-    val itemRows = ivfItems(spark, d)
-      .as[(Long, Seq[Float])].collect()
-    val dir = OracleDir.tempDir("ivf_stream_idx")
-    val src = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(graft.streaming.StreamingOps.annIvfIndexSink(dir, op)).start()
-    try {
-      (0 until 3).foreach { m =>
-        src.addData(itemRows.filter(_._1 % 3 == m).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val index = graft.streaming.StreamingOps.loadAnnIvfIndex(spark, dir).get
-    op.asRowsIndexed(queries, index).orderBy("vec_id", "rank")
+    streamedRows(spark, op, queries, "ivf_stream_idx")
   }
 
   /** The STAMPED occupancy log end-to-end ([[annIvfStream]]'s 3-batch
@@ -1249,28 +1245,10 @@ object OpQueries {
     * the id-modulo prefix — the stamped monitoring lines themselves are
     * driver-hash-checked, not just spec-pinned. */
   def annOccupancyStream(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val centers = cachedCenters(spark, d, nlist = 32, maxIter = 5)
     val op = AnnIvf(ivfItems(spark, d), centers, "vec_id", "embedding",
       k = 10, nprobe = math.min(8, centers.size), metric = "dot")
-    val itemRows = ivfItems(spark, d).as[(Long, Seq[Float])].collect()
-    val dir = OracleDir.tempDir("ivf_occ_stream")
-    val src = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(graft.streaming.StreamingOps.annIvfIndexSink(dir, op)).start()
-    try {
-      (0 until 3).foreach { m =>
-        src.addData(itemRows.filter(_._1 % 3 == m).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    graft.streaming.StreamingOps.occupancyLog(spark, dir).map { case (v, o) =>
-      (v, o.nItems, o.nBuckets, o.nOccupied, o.maxCount,
-        o.uniformCount, o.skewBp)
-    }.toDF("version", "n_items", "n_buckets", "n_occupied", "max_count",
-      "uniform_count", "skew_bp").orderBy("version")
+    occupancyRows(spark, streamIndex(spark, op, "ivf_occ_stream"))
   }
 
   /** The degenerate FROZEN quantizer behind [[annRefitSkewed]]: c0 at
@@ -1292,7 +1270,7 @@ object OpQueries {
     .TrieMap.empty[String, (String, Seq[Seq[Double]])]
 
   /** The full trigger→action lifecycle under the sink: 3-batch item
-    * ingest through [[graft.streaming.StreamingOps.annIvfIndexSink]]
+    * ingest through [[graft.streaming.StreamingOps.annIndexSink]]
     * under the degenerate frozen quantizer (every commit stamps its
     * occupancy line, all reading "one list holds everything"), then
     * [[graft.streaming.StreamingOps.refitAnnIvfIndexIfSkewed]] reads the
@@ -1301,27 +1279,9 @@ object OpQueries {
     * as v3 with its own (now balanced) occupancy line. */
   private def buildRefitSkewedIndex(spark: SparkSession,
       d: String): (String, Seq[Seq[Double]]) = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val op = AnnIvf(ivfItems(spark, d), degenerateCenters,
       "vec_id", "embedding", k = 10, nprobe = 8, metric = "dot")
-    val itemRows = ivfItems(spark, d).as[(Long, Seq[Float])].collect()
-    // the oracle's v0-v2 lines assume batch b == version b; the sink
-    // skips empty batches, so an empty modulo class would shift the
-    // mapping (round-13 ADVICE) — fail loudly instead
-    (0 until 3).foreach(m => require(itemRows.exists(_._1 % 3 == m),
-      s"buildRefitSkewedIndex: item_id % 3 == $m split is empty in $d"))
-    val dir = OracleDir.tempDir("ivf_refit_skew")
-    val src = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(graft.streaming.StreamingOps.annIvfIndexSink(dir, op)).start()
-    try {
-      (0 until 3).foreach { m =>
-        src.addData(itemRows.filter(_._1 % 3 == m).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    val dir = streamIndex(spark, op, "ivf_refit_skew")
     val refit = graft.streaming.StreamingOps.refitAnnIvfIndexIfSkewed(
       spark, dir, boundBp = graft.Flagship.LshSkewBoundBp,
       nlist = RefitNlist, maxIter = 5)
@@ -1353,13 +1313,8 @@ object OpQueries {
     * reduce warm runs to reading a 4-line log. The superseded temp index
     * dir is dropped eagerly on each rebuild (round-13 ADVICE). */
   def annRefitSkewed(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
     val (dir, _) = buildRefitSkewedIndex(spark, d)
-    graft.streaming.StreamingOps.occupancyLog(spark, dir).map { case (v, o) =>
-      (v, o.nItems, o.nBuckets, o.nOccupied, o.maxCount,
-        o.uniformCount, o.skewBp)
-    }.toDF("version", "n_items", "n_buckets", "n_occupied", "max_count",
-      "uniform_count", "skew_bp").orderBy("version")
+    occupancyRows(spark, dir)
   }
 
   /** The refit ACTION's serving proof: probe the refitted log version
@@ -1374,7 +1329,7 @@ object OpQueries {
       .select(col("vec_id"), col("embedding"))
     val op = AnnIvf(ivfItems(spark, d), centers, "vec_id", "embedding",
       k = 10, nprobe = math.min(8, centers.size), metric = "dot")
-    val index = graft.streaming.StreamingOps.loadAnnIvfIndex(spark, dir).get
+    val index = graft.streaming.StreamingOps.loadIndexLog(spark, dir).get
     op.asRowsIndexed(queries, index).orderBy("vec_id", "rank")
   }
 
@@ -1587,15 +1542,13 @@ object OpQueries {
     * for the scalar-quantized tier; completes the four-tier symmetry
     * with op_ann_{ivf,pq,lsh}_stream): the catalog arrives as a
     * 3-micro-batch item stream,
-    * [[graft.streaming.StreamingOps.annSqIndexSink]] maintains the
+    * [[graft.streaming.StreamingOps.annIndexSink]] maintains the
     * persisted coded index under the frozen quantizers across batches,
     * and the probe runs against the final loaded version. Encoding is
     * per-item independent through the one shared [[AnnSq.index]]
     * definition, so the maintained index equals the full build and this
     * row shares op_ann_sq's dump-time oracle. */
   def annSqStream(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = embeddings(spark, d)
     val queries = emb.filter(col("label") === 0).select(col("vec_id"), col("embedding"))
     val centers = cachedCenters(spark, d, nlist = 32, maxIter = 5)
@@ -1603,20 +1556,7 @@ object OpQueries {
     val items = ivfItems(spark, d)
     val op = AnnSq(items, centers, mins, maxs, "vec_id", "embedding",
       k = 10, nprobe = math.min(8, centers.size))
-    val itemRows = items.as[(Long, Seq[Float])].collect()
-    val dir = OracleDir.tempDir("sq_stream_idx")
-    val src = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(graft.streaming.StreamingOps.annSqIndexSink(dir, op)).start()
-    try {
-      (0 until 3).foreach { m =>
-        src.addData(itemRows.filter(_._1 % 3 == m).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val index = graft.streaming.StreamingOps.loadAnnSqIndex(spark, dir).get
-    op.asRowsIndexed(queries, index).orderBy("vec_id", "rank")
+    streamedRows(spark, op, queries, "sq_stream_idx")
   }
 
   /** IVF-PQ ANN — the memory-compressed FAISS scale path (`IVF32,PQ8`):
@@ -1664,7 +1604,7 @@ object OpQueries {
 
   /** The ONLINE PQ-index lifecycle end-to-end ([[annIvfStream]] one
     * quantization tier down): the catalog arrives as a 3-micro-batch
-    * item stream, [[graft.streaming.StreamingOps.annPqIndexSink]]
+    * item stream, [[graft.streaming.StreamingOps.annIndexSink]]
     * maintains the persisted code table under the frozen quantizers
     * across batches, and the probe (ADC + catalog-fraction refine) runs
     * against the final loaded version. Encoding is per-item independent
@@ -1673,8 +1613,6 @@ object OpQueries {
     * op_ann_pq's dump-time oracle — streaming PQ ingest proven equal to
     * the batch build by the driver's own compare. */
   def annPqStream(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = embeddings(spark, d)
     val queries = emb.filter(col("label") === 0).select(col("vec_id"), col("embedding"))
     val centers = cachedCenters(spark, d, nlist = 32, maxIter = 5)
@@ -1683,20 +1621,7 @@ object OpQueries {
     val op = AnnIvfPq(items, centers, cachedCodebooks(spark, d),
       "vec_id", "embedding", k = 10, nprobe = math.min(8, centers.size),
       refine = refineK)
-    val itemRows = items.as[(Long, Seq[Float])].collect()
-    val dir = OracleDir.tempDir("pq_stream_idx")
-    val src = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(graft.streaming.StreamingOps.annPqIndexSink(dir, op)).start()
-    try {
-      (0 until 3).foreach { m =>
-        src.addData(itemRows.filter(_._1 % 3 == m).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val index = graft.streaming.StreamingOps.loadAnnPqIndex(spark, dir).get
-    op.asRowsIndexed(queries, index).orderBy("vec_id", "rank")
+    streamedRows(spark, op, queries, "pq_stream_idx")
   }
 
   /** Frozen PQ sub-codebook drift report ([[graft.ops.PqCodebookDrift]]

@@ -1284,9 +1284,12 @@ object StreamingOps {
       .flatMap(v => readIndexOccupancy(spark, indexDir, v).map(v -> _))
       .sortBy(_._1.drop(1).toLong)
 
-  /** Load the live IVF index frame from a sink-maintained directory —
-    * probe via `op.asRowsIndexed(queries, loadAnnIvfIndex(...).get)`. */
-  def loadAnnIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  /** The live frame of a sink-maintained index log ([[annIndexSink]],
+    * [[evalRankingSink]]; None before the first non-empty batch): the
+    * union of the live manifest's deltas, one multi-path scan over a
+    * BOUNDED file set when the sink compacts. Probe an ANN index via
+    * `op.asRowsIndexed(queries, loadIndexLog(spark, dir).get)`. */
+  def loadIndexLog(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[DataFrame] =
     VersionedDir.latest(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
 
@@ -1299,21 +1302,28 @@ object StreamingOps {
     DeltaLog.committedManifest(spark, indexDir, version)
       .map(_ => loadIndexDeltas(spark, indexDir, version))
 
-  /** foreachBatch sink maintaining a persisted IVF index from an item
-    * stream under `op`'s FROZEN coarse quantizer: each batch is assigned
-    * to its inverted lists map-side (per-item assignment against
-    * centroid literals, no shuffle, the existing index never re-read)
-    * and lands as an immutable `deltas/d<n>` dir — per-batch compute
-    * AND persist both O(batch). Centroid staleness is the documented
-    * trade: monitor recall, refit + rebuild when the catalog's
-    * distribution drifts. Batches must carry disjoint item ids. */
-  def annIvfIndexSink(indexDir: String, op: graft.ops.AnnIvf,
-      appId: String = "ivf-ingest",
+  /** foreachBatch sink maintaining a persisted ANN index ([[graft.ops.AnnIvf]],
+    * [[graft.ops.AnnSq]], [[graft.ops.AnnIvfPq]] or [[graft.ops.AnnLsh]])
+    * from an item stream under `op`'s FROZEN fit state: each batch is
+    * assigned (and, for SQ8/PQ, encoded) map-side through the op's one
+    * [[graft.ops.AnnIndex.index]] definition — per-item work against
+    * quantizer literals, the existing index never re-read — and lands as
+    * an immutable `deltas/d<n>` dir, with the delta's occupancy over the
+    * op's lists stamped per commit: per-batch compute AND persist both
+    * O(batch). An AnnLsh op resolves its center once (a per-batch
+    * recomputed mean would drift in the last bits and flip borderline
+    * bucket signs). Staleness is the documented trade: monitor recall
+    * and the drift reports, refit + rebuild on drift. Batches must carry
+    * disjoint item ids. `appId` (default: the op's
+    * [[graft.ops.AnnIndex.ingestAppId]], e.g. `ivf-ingest`) is the
+    * commit identity retries dedup on. */
+  def annIndexSink(indexDir: String, op: graft.ops.AnnIndex,
+      appId: Option[String] = None,
       retainVersions: Option[Int] = None,
       autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit =
-    indexDeltaSink(indexDir, appId, retainVersions, autoCompactDeltas,
-      "__item_id", Some(("__cid", op.centers.size.toLong))) { (batch, _) =>
-      graft.ops.AnnIvf.index(batch, op.centers, op.itemIdCol, op.itemVecCol)
+    indexDeltaSink(indexDir, appId.getOrElse(op.ingestAppId), retainVersions,
+      autoCompactDeltas, "__item_id", Some((op.listCol, op.listCount))) { (batch, _) =>
+      op.index(batch)
     }
 
   /** The one sink of the frozen-quantizer and eval logs: txn dedup, then
@@ -1423,9 +1433,8 @@ object StreamingOps {
     VersionedDir.latest(spark, indexDir).map { lv =>
       val op = graft.ops.AnnSq.fit(items, "query_id", "query_vec",
         itemIdCol, itemVecCol, nlist = nlist, maxIter = maxIter, seed = seed)
-      (op, republishIndex(spark, indexDir, lv, "sq-rebuild",
-        graft.ops.AnnSq.index(items, op.centers, op.mins, op.maxs,
-          itemIdCol, itemVecCol), op.centers.size.toLong, targetBytes))
+      (op, republishIndex(spark, indexDir, lv, "sq-rebuild", op.index(items),
+        op.listCount, targetBytes))
     }
 
   /** The PQ action of the drift→action table
@@ -1449,16 +1458,9 @@ object StreamingOps {
       targetBytes: Long = 128L << 20): Option[(graft.ops.AnnIvfPq, String)] =
     VersionedDir.latest(spark, indexDir).map { lv =>
       val refit = graft.ops.AnnIvfPq.refitCodebooks(op, items, maxIter, seed)
-      (refit, republishIndex(spark, indexDir, lv, "pq-rebuild",
-        graft.ops.AnnIvfPq.index(items, refit.centers, refit.codebooks,
-          op.itemIdCol, op.itemVecCol), refit.centers.size.toLong, targetBytes))
+      (refit, republishIndex(spark, indexDir, lv, "pq-rebuild", refit.index(items),
+        refit.listCount, targetBytes))
     }
-
-  /** Load the live SQ8 coded index from a sink-maintained directory —
-    * probe via `op.transformIndexed(queries, loadAnnSqIndex(...).get)`. */
-  def loadAnnSqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] =
-    VersionedDir.latest(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
 
   /** Online ranking-quality monitoring — the streaming twin of
     * [[graft.ops.EvalRanking]]: a served-candidates stream (query id,
@@ -1479,7 +1481,7 @@ object StreamingOps {
     * The log is a versioned delta chain like every other sink here
     * (each batch's metric rows land as one immutable `deltas/d<n>`
     * stamped `batch_id`, O(batch) bytes), read back via
-    * [[loadEvalLog]]. That buys the full commit protocol for free:
+    * [[loadIndexLog]]. That buys the full commit protocol for free:
     * retries of committed batches are no-ops (txn markers), retention
     * vacuum bounds version metadata, and `autoCompactDeltas` runs the
     * size-tiered OPTIMIZE so a monitoring log that accumulates one tiny
@@ -1497,14 +1499,6 @@ object StreamingOps {
       // listing tracks the delta count, not the shuffle partitioning
       op.transform(batch).withColumn("batch_id", lit(batchId)).coalesce(1)
     }
-
-  /** The accumulated monitoring log maintained by [[evalRankingSink]]
-    * (None before the first non-empty batch): the union of the live
-    * manifest's deltas — one multi-path scan over a BOUNDED file set
-    * when the sink compacts. */
-  def loadEvalLog(spark: org.apache.spark.sql.SparkSession,
-      outDir: String): Option[DataFrame] =
-    VersionedDir.latest(spark, outDir).map(loadIndexDeltas(spark, outDir, _))
 
   /** Retention vacuum for a sink-maintained versioned index directory
     * (BM25 / IVF / SQ8, and the corpus log — same layout): deletes all
@@ -1617,81 +1611,6 @@ object StreamingOps {
     * at most 8 keepers exist, small enough that merged runs graduate
     * quickly). */
   val AutoCompactTierFraction: Double = 0.125
-
-  /** foreachBatch sink maintaining a persisted SQ8 coded index
-    * ([[graft.ops.AnnSq]]) from an item stream under `op`'s FROZEN
-    * quantizers (coarse centroids + scalar range): each batch is
-    * assigned and byte-encoded map-side (per-item work against quantizer
-    * literals, the existing index never re-read) and lands as an
-    * immutable `deltas/d<n>` dir — per-batch compute AND persist both
-    * O(batch). Staleness is the documented trade — values drifting
-    * outside the fitted range saturate; monitor recall, refit + rebuild
-    * on drift. Batches must carry disjoint item ids. */
-  def annSqIndexSink(indexDir: String, op: graft.ops.AnnSq,
-      appId: String = "sq-ingest",
-      retainVersions: Option[Int] = None,
-      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit =
-    indexDeltaSink(indexDir, appId, retainVersions, autoCompactDeltas,
-      "__item_id", Some(("__cid", op.centers.size.toLong))) { (batch, _) =>
-      graft.ops.AnnSq.index(batch, op.centers, op.mins, op.maxs,
-        op.itemIdCol, op.itemVecCol)
-    }
-
-  /** foreachBatch sink maintaining a persisted IVF-PQ code index
-    * ([[graft.ops.AnnIvfPq]]) from an item stream under `op`'s FROZEN
-    * quantizers (coarse centroids + residual sub-codebooks): each batch
-    * is encoded map-side through the one shared
-    * [[graft.ops.AnnIvfPq.index]] definition (per-item fused PqEncode
-    * against quantizer literals, the existing index never re-read) and
-    * lands as an immutable `deltas/d<n>` dir — per-batch compute AND
-    * persist both O(batch). The probe store is the ~m-bytes-per-item
-    * code table this log maintains; the refine store stays the raw
-    * catalog, fetched by id. Staleness is the documented trade —
-    * [[graft.ops.PqCodebookDrift]] is the monitor,
-    * [[graft.ops.AnnIvfPq.refitCodebooks]] + a from-log re-encode the
-    * cheap action. Batches must carry disjoint item ids. */
-  def annPqIndexSink(indexDir: String, op: graft.ops.AnnIvfPq,
-      appId: String = "pq-ingest",
-      retainVersions: Option[Int] = None,
-      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit =
-    indexDeltaSink(indexDir, appId, retainVersions, autoCompactDeltas,
-      "__item_id", Some(("__cid", op.centers.size.toLong))) { (batch, _) =>
-      graft.ops.AnnIvfPq.index(batch, op.centers, op.codebooks,
-        op.itemIdCol, op.itemVecCol)
-    }
-
-  /** Load the live PQ code table from a sink-maintained directory —
-    * probe via `op.asRowsIndexed(queries, loadAnnPqIndex(...).get)`. */
-  def loadAnnPqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] =
-    VersionedDir.latest(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
-
-  /** foreachBatch sink maintaining a persisted LSH bucket index
-    * ([[graft.ops.AnnLsh]]) from an item stream under the op's FROZEN
-    * hyperplane center (resolved ONCE at sink construction — a
-    * per-batch recomputed mean would drift in the last bits and flip
-    * borderline bucket signs): each batch buckets map-side through the
-    * one shared [[graft.ops.AnnLsh.index]] definition and lands as an
-    * immutable `deltas/d<n>` dir — per-batch compute AND persist both
-    * O(batch). Center staleness is the documented trade: a drifting
-    * catalog mean skews bucket occupancy; monitor the recall rows,
-    * re-center + rebuild on drift. Batches must carry disjoint item ids. */
-  def annLshIndexSink(indexDir: String, op: graft.ops.AnnLsh,
-      appId: String = "lsh-ingest",
-      retainVersions: Option[Int] = None,
-      autoCompactDeltas: Option[Int] = None): (DataFrame, Long) => Unit = {
-    val mu = op.resolvedCenter
-    indexDeltaSink(indexDir, appId, retainVersions, autoCompactDeltas,
-      "__item_id", Some(("__bucket", 1L << op.numBits))) { (batch, _) =>
-      graft.ops.AnnLsh.index(batch, mu, op.numBits, op.itemIdCol, op.itemVecCol)
-    }
-  }
-
-  /** Load the live LSH bucket table from a sink-maintained directory —
-    * probe via `op.asRowsIndexed(queries, loadAnnLshIndex(...).get)`. */
-  def loadAnnLshIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] =
-    VersionedDir.latest(spark, indexDir).map(loadIndexDeltas(spark, indexDir, _))
 
   /** The live accepted corpus maintained by [[corpusIngestSink]] (None
     * before the first accepting batch): resolve the pointed version's

@@ -27,8 +27,7 @@ object RecsysScaleProbe {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nItems = t("item count")(itemVecs.count())
     println(s"[probe] nItems = $nItems")
-    val numBits = math.max(4, math.min(12,
-      (math.log(math.max(1L, nItems / 64).toDouble) / math.log(2)).round.toInt))
+    val numBits = graft.Flagship.lshBits(nItems)
     val center = t("mean vector")(
       graft.functions.VectorFunctions.meanVector(itemVecs, "embedding").toSeq)
     val (tier, bp) = t("chooseRetriever")(
@@ -71,32 +70,32 @@ object RecsysScaleProbe {
         s"memoized decision ${if (drift.tier == dec.tier) "HOLDS"
           else "DIVERGES"} under worst-case migration)")
     }
-    val nlist = math.max(4, math.min(4096, (nItems / 64).toInt))
+    val nlist = graft.Flagship.ivfNlist(nItems)
     val centers = t(s"k-means fit (nlist=$nlist)")(
       graft.functions.VectorFunctions.fitCenters(
         itemVecs, "embedding", nlist, maxIter = 10, seed = 42L))
+    val op = graft.ops.AnnIvf(itemVecs, centers, "user_id", "user_vec",
+      k = 100, nprobe = 4, metric = "dot")
     val ivfOcc = t("IvfSkewReport")(
       graft.ops.IvfSkewReport(centers).transform(itemVecs).head())
     println(s"[probe] ivf occupancy: $ivfOcc")
     t("index build (noop write)")(
-      graft.ops.AnnIvf.index(itemVecs, centers)
-        .write.format("noop").mode("overwrite").save())
+      op.index(itemVecs).write.format("noop").mode("overwrite").save())
     // candidate volume = Σ_users Σ_probed-lists |list| — THE retrieval
     // cost driver; compare against users × nprobe × uniform-list-size
     // to see how much fit skew (× probe-correlation) multiplies the join
     val (userFactors, _) = graft.Flagship.prefitFactorFrames(spark, d).get
-    val probes = userFactors
-      .select(col("id").as("user_id"), col("features").as("user_vec"))
-      .select(col("user_id"), explode(graft.functions.FastExpressions
-        .nearestCids(col("user_vec"), centers, 4)).as("__cid"))
-    val listSizes = graft.ops.AnnIvf.index(itemVecs, centers)
-      .groupBy("__cid").agg(count(lit(1)).as("__n"))
+    val probes = op.withProbes(userFactors
+      .select(col("id").as("user_id"), col("features").as("user_vec")))
+      .select(col("user_id"), col(op.listCol))
+    val listSizes = op.index(itemVecs)
+      .groupBy(op.listCol).agg(count(lit(1)).as("__n"))
     val cand = t("candidate volume (count)")(
-      probes.join(listSizes, Seq("__cid"))
+      probes.join(listSizes, Seq(op.listCol))
         .agg(sum("__n")).head().getLong(0))
     val nUsers = userFactors.count()
     println(s"[probe] candidates=$cand users=$nUsers uniform=${
-      nUsers * 4 * ((nItems + centers.size - 1) / centers.size)}")
+      nUsers * op.nprobe * ((nItems + centers.size - 1) / centers.size)}")
     // recommend's serving stages, timed individually (mirrors
     // Flagship.recommend's plan; any drift between this decomposition
     // and the real path shows up as the residual in the full-pass rows)
@@ -119,8 +118,6 @@ object RecsysScaleProbe {
         .select(col("c_custkey").cast("long").as("user_id"))
       val withVec = requests.join(userVecs, Seq("user_id"))
         .filter(col("user_vec").isNotNull)
-      val op = graft.ops.AnnIvf(itemVecs, centers, "user_id", "user_vec",
-        k = 100, nprobe = 4, metric = "dot")
       t("stage: retrieval (noop)")(
         op.transform(withVec).write.format("noop").mode("overwrite").save())
       t("stage: retrieval again (noop)")(

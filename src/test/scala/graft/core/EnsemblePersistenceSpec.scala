@@ -535,6 +535,24 @@ class EnsemblePersistenceSpec extends SparkSpec {
       e.getMessage.contains("format version 2"), e.getMessage)
   }
 
+  test("a manifest edited outside Hadoop fails load naming its stale checksum file") {
+    val input = Seq((1L, 7)).toDF("id", "n")
+    val dir = Files.tmp("ens_crc")
+    EnsemblePersistence.save(Ensemble(Seq(
+      QueryFeatureStore(Seq((1L, 2.5)).toDF("id", "x"), "id", Seq("x"))), input.schema), dir, spark)
+    val meta = java.nio.file.Paths.get(dir, "metadata.json")
+    val crc = java.nio.file.Paths.get(dir, ".metadata.json.crc")
+    assert(java.nio.file.Files.exists(crc))
+    java.nio.file.Files.writeString(meta, java.nio.file.Files.readString(meta)
+      .replaceFirst("\"engine_version\"\\s*:\\s*\"[^\"]*\"", "\"engine_version\" : \"edited\""))
+    val e = intercept[IllegalArgumentException](EnsemblePersistence.load(dir, spark))
+    assert(e.getMessage.contains(s"$dir/metadata.json") &&
+      e.getMessage.contains(s"$dir/.metadata.json.crc"), e.getMessage)
+    java.nio.file.Files.delete(crc)
+    val out = EnsemblePersistence.load(dir, spark).transform(input)
+    assert(out.select("x").as[Double].collect().toSeq == Seq(2.5))
+  }
+
   // ---- the round-trip table: one case per persisted op type ---------------
 
   /** `op` saved as a one-op ensemble over `schema` and loaded back: equal

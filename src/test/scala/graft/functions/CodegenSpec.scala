@@ -154,7 +154,7 @@ class CodegenSpec extends SparkSpec {
   }
 
   test("PqEncode is bit-identical to the literal-tree formulation and stays in codegen") {
-    // the exact formulation PqEncode replaced in AnnIvfPq.encodedIndex /
+    // the exact formulation PqEncode replaced in AnnIvfPq.index /
     // PqCodebookDrift.codeD2: coarse struct-min over |c|² − 2·x·c,
     // zip_with residual, per-subspace struct-min over |e|² − 2·r_j·e with
     // lowest-code tie-break, d2 = best_d + r_j·r_j. Random non-dyadic

@@ -28,7 +28,7 @@ class AnnPqSpec extends SparkSpec {
       (1L, Seq(-0.5f, 1.0f, 2.0f, 0.0f)),
       (2L, Seq(8.5f, 8.25f, 8.0f, 6.0f))
     ).toDF("item_id", "embedding")
-    val idx = op(items).encodedIndex
+    val idx = op(items).index(items)
       .select("__item_id", "__cid", "__codes")
       .as[(Long, Int, Seq[Int])].collect()
       .map { case (id, cid, codes) => id -> ((cid, codes)) }.toMap

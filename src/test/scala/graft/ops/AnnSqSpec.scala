@@ -29,7 +29,7 @@ class AnnSqSpec extends SparkSpec {
       (3L, Seq(127.49f, 1.0f, 5.0f)),   // 127.49 → 127 (floor(x+0.5)); 1.0 → 191 (191.25 rounds down)
       (4L, Seq(-10.0f, 3.0f, 7.0f))     // below/above range → saturate 0/255; const dim → 0
     ).toDF("item_id", "embedding")
-    val codes = op(items).codedIndex
+    val codes = op(items).index(items)
       .select("__item_id", "__codes").as[(Long, Seq[Int])].collect().toMap
     assert(codes(1L) == Seq(0, 0, 0))
     assert(codes(2L) == Seq(255, 255, 0))
@@ -88,7 +88,7 @@ class AnnSqSpec extends SparkSpec {
     val o = op(items)
     val prior = AnnSq.index(items.filter($"item_id" % 3 =!= 0), centers, mins, maxs)
     val updated = o.updatedIndex(prior, items.filter($"item_id" % 3 === 0))
-    val rebuilt = o.codedIndex
+    val rebuilt = o.index(items)
     assert(updated.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(updated).isEmpty,
       "incrementally-ingested SQ index differs from the full rebuild")
   }

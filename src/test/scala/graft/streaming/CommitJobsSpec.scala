@@ -53,7 +53,7 @@ class CommitJobsSpec extends SparkSpec {
         .toDF("item_id", "embedding")
     val op = graft.ops.AnnIvf(items(1, 10), Seq(Seq(0.0, 0.0), Seq(4.0, 2.0)),
       "query_id", "query_vec", nprobe = 1)
-    val sink = StreamingOps.annIvfIndexSink(dir, op)
+    val sink = StreamingOps.annIndexSink(dir, op)
     sink(items(1, 10), 0L)
     val n = jobsOf(sink(items(11, 20), 1L))
     assert(n == 6, s"measured $n")
@@ -66,7 +66,7 @@ class CommitJobsSpec extends SparkSpec {
         .toDF("item_id", "embedding")
     val op = graft.ops.AnnIvf(items(1, 10), Seq(Seq(0.0, 0.0), Seq(4.0, 2.0)),
       "query_id", "query_vec", nprobe = 1)
-    val sink = StreamingOps.annIvfIndexSink(dir, op)
+    val sink = StreamingOps.annIndexSink(dir, op)
     sink(items(1, 10), 0L)
     sink(items(11, 20), 1L)
     // the k-means fit plus the republish commit; the commit reads its

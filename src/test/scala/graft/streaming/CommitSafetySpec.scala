@@ -38,21 +38,17 @@ class CommitSafetySpec extends SparkSpec {
     val lsh = graft.ops.AnnLsh(items, "query_id", "query_vec", numBits = 2,
       nprobe = 1, center = Some(Seq(0.5, 0.5)))
     val eval = graft.ops.EvalRanking(Seq((1L, 10L)).toDF("query_id", "item_id"), k = 1)
-    val sinks: Seq[(String, (String, Option[Int], Option[Int]) => Sink, DataFrame)] = Seq(
+    type Mk = (String, Option[Int], Option[Int]) => Sink
+    val sinks = Seq[(String, Mk, DataFrame)](
       ("corpusIngestSink", (d, r, a) => StreamingOps.corpusIngestSink(d,
         retainVersions = r, autoCompactDeltas = a), docs),
       ("bm25IndexSink", (d, r, a) => StreamingOps.bm25IndexSink(d,
         retainVersions = r, autoCompactDeltas = a), docs),
-      ("annIvfIndexSink", (d, r, a) => StreamingOps.annIvfIndexSink(d, ivf,
-        retainVersions = r, autoCompactDeltas = a), items),
-      ("annSqIndexSink", (d, r, a) => StreamingOps.annSqIndexSink(d, sq,
-        retainVersions = r, autoCompactDeltas = a), items),
-      ("annPqIndexSink", (d, r, a) => StreamingOps.annPqIndexSink(d, pq,
-        retainVersions = r, autoCompactDeltas = a), items),
-      ("annLshIndexSink", (d, r, a) => StreamingOps.annLshIndexSink(d, lsh,
-        retainVersions = r, autoCompactDeltas = a), items),
       ("evalRankingSink", (d, r, a) => StreamingOps.evalRankingSink(d, eval,
-        retainVersions = r, autoCompactDeltas = a), served))
+        retainVersions = r, autoCompactDeltas = a), served)) ++
+      Seq(ivf, sq, pq, lsh).map(op => (s"annIndexSink(${op.name})",
+        ((d, r, a) => StreamingOps.annIndexSink(d, op,
+          retainVersions = r, autoCompactDeltas = a)): Mk, items))
     for ((name, mk, batch) <- sinks;
          (retain, auto) <- Seq((Some(-1), None), (None, Some(0)))) {
       val dir = tmpDir("bad_settings_")

@@ -107,9 +107,9 @@ class RenameFailureSpec extends SparkSpec {
     val items1 = Seq((3L, Seq(0.5f, 0.5f))).toDF("item_id", "embedding")
     val op = graft.ops.AnnIvf(items0, Seq(Seq(0.0, 1.0), Seq(1.0, 0.0)),
       "query_id", "query_vec", nprobe = 1)
-    checkSink(d, StreamingOps.annIvfIndexSink(d, op), items0, items1) { () =>
-      StreamingOps.loadAnnIvfIndex(spark, d).get.count()
+    checkSink(d, StreamingOps.annIndexSink(d, op), items0, items1) { () =>
+      StreamingOps.loadIndexLog(spark, d).get.count()
     }
-    assert(StreamingOps.loadAnnIvfIndex(spark, d).get.count() == 3L)
+    assert(StreamingOps.loadIndexLog(spark, d).get.count() == 3L)
   }
 }

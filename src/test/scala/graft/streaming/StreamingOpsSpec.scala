@@ -842,12 +842,12 @@ class StreamingOpsSpec extends SparkSpec {
       val dir = tmpDir("ivf_sink_")
       val src = MemoryStream[(Long, Seq[Float])]
       val q = src.toDF().toDF("item_id", "embedding").writeStream
-        .foreachBatch(StreamingOps.annIvfIndexSink(dir, op)).start()
+        .foreachBatch(StreamingOps.annIndexSink(dir, op)).start()
       splits.foreach { s => src.addData(s: _*); q.processAllAvailable() }
       q.stop(); dir
     }
     val dir = run(Seq(items.take(20), items.slice(20, 21), items.drop(21)))
-    val streamed = StreamingOps.loadAnnIvfIndex(spark, dir).get
+    val streamed = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid").as[(Long, Int)].collect().toSet
     val rebuilt = graft.ops.AnnIvf.index(itemsDf, op.centers)
       .select("__item_id", "__cid").as[(Long, Int)].collect().toSet
@@ -866,12 +866,12 @@ class StreamingOpsSpec extends SparkSpec {
     val dir = tmpDir("sq_sink_")
     val src = MemoryStream[(Long, Seq[Float])]
     val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(StreamingOps.annSqIndexSink(dir, op)).start()
+      .foreachBatch(StreamingOps.annIndexSink(dir, op)).start()
     Seq(items.take(20), items.slice(20, 21), items.drop(21)).foreach { s =>
       src.addData(s: _*); q.processAllAvailable()
     }
     q.stop()
-    val streamed = StreamingOps.loadAnnSqIndex(spark, dir).get
+    val streamed = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid", "__codes")
       .as[(Long, Int, Seq[Int])].collect().toSet
     val rebuilt = graft.ops.AnnSq.index(itemsDf, op.centers, op.mins, op.maxs)
@@ -892,12 +892,12 @@ class StreamingOpsSpec extends SparkSpec {
     val dir = tmpDir("pq_sink_")
     val src = MemoryStream[(Long, Seq[Float])]
     val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(StreamingOps.annPqIndexSink(dir, op)).start()
+      .foreachBatch(StreamingOps.annIndexSink(dir, op)).start()
     Seq(items.take(20), items.slice(20, 21), items.drop(21)).foreach { s =>
       src.addData(s: _*); q.processAllAvailable()
     }
     q.stop()
-    val streamed = StreamingOps.loadAnnPqIndex(spark, dir).get
+    val streamed = StreamingOps.loadIndexLog(spark, dir).get
     def codeSet(df: org.apache.spark.sql.DataFrame) =
       df.select("__item_id", "__cid", "__codes")
         .as[(Long, Int, Seq[Int])].collect().toSet
@@ -932,12 +932,12 @@ class StreamingOpsSpec extends SparkSpec {
     val dir = tmpDir("lsh_sink_")
     val src = MemoryStream[(Long, Seq[Float])]
     val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(StreamingOps.annLshIndexSink(dir, op)).start()
+      .foreachBatch(StreamingOps.annIndexSink(dir, op)).start()
     Seq(items.take(20), items.slice(20, 21), items.drop(21)).foreach { s =>
       src.addData(s: _*); q.processAllAvailable()
     }
     q.stop()
-    val streamed = StreamingOps.loadAnnLshIndex(spark, dir).get
+    val streamed = StreamingOps.loadIndexLog(spark, dir).get
     def bucketSet(df: org.apache.spark.sql.DataFrame) =
       df.select("__item_id", "__bucket").as[(Long, Int)].collect().toSet
     val rebuilt = graft.ops.AnnLsh.index(itemsDf, mu, op.numBits)
@@ -969,7 +969,7 @@ class StreamingOpsSpec extends SparkSpec {
     val dir = tmpDir("sq_vacuum_")
     val src = MemoryStream[(Long, Seq[Float])]
     val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(StreamingOps.annSqIndexSink(dir, op)).start()
+      .foreachBatch(StreamingOps.annIndexSink(dir, op)).start()
     Seq(items.take(10), items.slice(10, 20), items.drop(20)).foreach { s =>
       src.addData(s: _*); q.processAllAvailable()
     }
@@ -980,7 +980,7 @@ class StreamingOpsSpec extends SparkSpec {
     // keep=1 retires the two superseded versions; the live index still probes
     val deleted = StreamingOps.vacuumIndexVersions(spark, dir, keep = 1)
     assert(deleted.toSet == Set("v0", "v1") && versionDirs == Set("v2"))
-    val live = StreamingOps.loadAnnSqIndex(spark, dir).get
+    val live = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id").as[Long].collect().toSet
     assert(live == (1L to 30L).toSet, "vacuum must not touch the live version")
     // keep=0 force-keeps the _LATEST-pointed version
@@ -1007,7 +1007,7 @@ class StreamingOpsSpec extends SparkSpec {
         .foreachBatch(StreamingOps.evalRankingSink(dir, op)).start()
       splits.foreach { s => src.addData(s: _*); q.processAllAvailable() }
       q.stop()
-      StreamingOps.loadEvalLog(spark, dir).get.drop("batch_id")
+      StreamingOps.loadIndexLog(spark, dir).get.drop("batch_id")
         .collect().map(_.toSeq).toSet
     }
     val oneShot = run(Seq(served))
@@ -1119,17 +1119,17 @@ class StreamingOpsSpec extends SparkSpec {
     val dir = tmpDir("ivf_compact_")
     val src = MemoryStream[(Long, Seq[Float])]
     val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(StreamingOps.annIvfIndexSink(dir, op)).start()
+      .foreachBatch(StreamingOps.annIndexSink(dir, op)).start()
     Seq(items.take(20), items.slice(20, 40), items.drop(40)).foreach { s =>
       src.addData(s: _*); q.processAllAvailable()
     }
     q.stop()
-    val before = StreamingOps.loadAnnIvfIndex(spark, dir).get
+    val before = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid").as[(Long, Int)].collect().toSet
     assert(StreamingOps.compactIndexState(spark, dir).contains("v3"))
     StreamingOps.vacuumIndexVersions(spark, dir, keep = 1)
     StreamingOps.vacuumCorpusDeltas(spark, dir)
-    val after = StreamingOps.loadAnnIvfIndex(spark, dir).get
+    val after = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid").as[(Long, Int)].collect().toSet
     assert(after == before && after.size == 60,
       "ANN compaction + vacuum must be content-neutral")
@@ -1295,7 +1295,7 @@ class StreamingOpsSpec extends SparkSpec {
     val dir = tmpDir("ivf_tt_")
     val src = MemoryStream[(Long, Seq[Float])]
     val q = src.toDF().toDF("item_id", "embedding").writeStream
-      .foreachBatch(StreamingOps.annIvfIndexSink(dir, op)).start()
+      .foreachBatch(StreamingOps.annIndexSink(dir, op)).start()
     Seq(items.take(10), items.slice(10, 20), items.drop(20)).foreach { s =>
       src.addData(s: _*); q.processAllAvailable()
     }
@@ -1308,7 +1308,7 @@ class StreamingOpsSpec extends SparkSpec {
       items.take(20).toDF("item_id", "embedding"), op.centers)
       .select("__item_id", "__cid").as[(Long, Int)].collect().toSet
     assert(at == scratch, "pinned ANN snapshot must equal the fresh index")
-    assert(StreamingOps.loadAnnIvfIndex(spark, dir).get.count() == 30L)
+    assert(StreamingOps.loadIndexLog(spark, dir).get.count() == 30L)
     assert(StreamingOps.loadAnnIndexAt(spark, dir, "v9").isEmpty)
     StreamingOps.vacuumIndexVersions(spark, dir, keep = 1)
     assert(StreamingOps.loadAnnIndexAt(spark, dir, "v1").isEmpty,
@@ -1328,17 +1328,17 @@ class StreamingOpsSpec extends SparkSpec {
     val op = graft.ops.AnnIvf.fit(early.toDF("item_id", "embedding"),
       "query_id", "query_vec", nlist = 2, nprobe = 2)
     val dir = tmpDir("ivf_refit_")
-    val sink = StreamingOps.annIvfIndexSink(dir, op)
+    val sink = StreamingOps.annIndexSink(dir, op)
     sink(early.toDF("item_id", "embedding"), 0L)
     sink(late.toDF("item_id", "embedding"), 1L)
-    val stale = StreamingOps.loadAnnIvfIndex(spark, dir).get
+    val stale = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid").as[(Long, Int)].collect().toSet
     val (centers, v) = StreamingOps.refitAnnIvfIndex(spark, dir,
       nlist = 2, maxIter = 5, seed = 7L).get
     assert(v == "v2")
     // the republished index IS a fresh index over the same items under
     // the refit quantizer — and it actually separates the two modes
-    val refit = StreamingOps.loadAnnIvfIndex(spark, dir).get
+    val refit = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid").as[(Long, Int)].collect().toSet
     val scratch = graft.ops.AnnIvf.index(
       (early ++ late).toDF("item_id", "embedding"), centers)
@@ -1354,7 +1354,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(StreamingOps.loadAnnIndexAt(spark, dir, "v1").get
       .select("__item_id", "__cid").as[(Long, Int)].collect().toSet == stale)
     sink(late.toDF("item_id", "embedding"), 1L)
-    assert(StreamingOps.loadAnnIvfIndex(spark, dir).get.count() == 40L,
+    assert(StreamingOps.loadIndexLog(spark, dir).get.count() == 40L,
       "a committed batch replayed after the refit must not recommit")
   }
 
@@ -1371,7 +1371,7 @@ class StreamingOpsSpec extends SparkSpec {
     val op = graft.ops.AnnIvf.fit(early.toDF("item_id", "embedding"),
       "query_id", "query_vec", nlist = 4, nprobe = 2)
     val dir = tmpDir("ivf_occ_")
-    val sink = StreamingOps.annIvfIndexSink(dir, op)
+    val sink = StreamingOps.annIndexSink(dir, op)
     sink(early.toDF("item_id", "embedding"), 0L)
     // the stamped summary equals the direct batch report over the same
     // catalog + centroids — one occupancy definition, two surfaces
@@ -1435,7 +1435,7 @@ class StreamingOpsSpec extends SparkSpec {
       center = Some(graft.functions.VectorFunctions
         .meanVector(itemsDf, "embedding").toSeq))
     val dir = tmpDir("lsh_occ_")
-    val sink = StreamingOps.annLshIndexSink(dir, op)
+    val sink = StreamingOps.annIndexSink(dir, op)
     sink(items.take(30).toDF("item_id", "embedding"), 0L)
     sink(items.drop(30).toDF("item_id", "embedding"), 1L)
     val o = StreamingOps.readIndexOccupancy(spark, dir, "v1").get
@@ -1455,11 +1455,11 @@ class StreamingOpsSpec extends SparkSpec {
     val op0 = graft.ops.AnnSq.fit(early.toDF("item_id", "embedding"),
       "query_id", "query_vec", nlist = 2, maxIter = 5)
     val dir = tmpDir("sq_rebuild_")
-    val sink = StreamingOps.annSqIndexSink(dir, op0)
+    val sink = StreamingOps.annIndexSink(dir, op0)
     sink(early.toDF("item_id", "embedding"), 0L)
     sink(late.toDF("item_id", "embedding"), 1L)
     // under the stale range every drifted value encodes to the 255 cap
-    val staleCodes = StreamingOps.loadAnnSqIndex(spark, dir).get
+    val staleCodes = StreamingOps.loadIndexLog(spark, dir).get
       .filter($"__item_id" > 15L).select("__codes")
       .as[Seq[Int]].collect()
     assert(staleCodes.forall(_.forall(_ == 255)),
@@ -1468,7 +1468,7 @@ class StreamingOpsSpec extends SparkSpec {
     val (op1, v) = StreamingOps.rebuildAnnSqIndex(spark, dir, all,
       nlist = 2, maxIter = 5).get
     assert(v == "v2")
-    val rebuilt = StreamingOps.loadAnnSqIndex(spark, dir).get
+    val rebuilt = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid", "__codes")
       .as[(Long, Int, Seq[Int])].collect().toSet
     val scratch = graft.ops.AnnSq.index(all, op1.centers, op1.mins, op1.maxs)
@@ -1480,7 +1480,7 @@ class StreamingOpsSpec extends SparkSpec {
     // pinned history + commit memory survive the rebuild
     assert(StreamingOps.loadAnnIndexAt(spark, dir, "v1").get.count() == 30L)
     sink(late.toDF("item_id", "embedding"), 1L)
-    assert(StreamingOps.loadAnnSqIndex(spark, dir).get.count() == 30L,
+    assert(StreamingOps.loadIndexLog(spark, dir).get.count() == 30L,
       "a committed batch replayed after the rebuild must not recommit")
   }
 
@@ -1501,10 +1501,10 @@ class StreamingOpsSpec extends SparkSpec {
       "query_id", "query_vec", nlist = 2, m = 2, ksub = 2, maxIter = 5,
       refine = 0, k = 3)
     val dir = tmpDir("pq_rebuild_")
-    val sink = StreamingOps.annPqIndexSink(dir, op0)
+    val sink = StreamingOps.annIndexSink(dir, op0)
     sink(early.toDF("item_id", "embedding"), 0L)
     sink(late.toDF("item_id", "embedding"), 1L)
-    val stale = StreamingOps.loadAnnPqIndex(spark, dir).get
+    val stale = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid").as[(Long, Int)].collect().toMap
     val all = (early ++ late).toDF("item_id", "embedding")
     val (op1, v) = StreamingOps.rebuildAnnPqIndex(spark, dir, op0, all,
@@ -1512,7 +1512,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(v == "v2")
     assert(op1.centers == op0.centers,
       "the codebook-only refit must not touch the coarse quantizer")
-    val rebuilt = StreamingOps.loadAnnPqIndex(spark, dir).get
+    val rebuilt = StreamingOps.loadIndexLog(spark, dir).get
       .select("__item_id", "__cid", "__codes")
       .as[(Long, Int, Seq[Int])].collect()
     val scratch = graft.ops.AnnIvfPq.index(all, op1.centers, op1.codebooks)
@@ -1534,7 +1534,7 @@ class StreamingOpsSpec extends SparkSpec {
     // pinned history + commit memory survive the rebuild
     assert(StreamingOps.loadAnnIndexAt(spark, dir, "v1").get.count() == 40L)
     sink(late.toDF("item_id", "embedding"), 1L)
-    assert(StreamingOps.loadAnnPqIndex(spark, dir).get.count() == 40L,
+    assert(StreamingOps.loadIndexLog(spark, dir).get.count() == 40L,
       "a committed batch replayed after the rebuild must not recommit")
   }
 
@@ -1712,7 +1712,7 @@ class StreamingOpsSpec extends SparkSpec {
     // a committed batch's retry is a no-op (the shared txn protocol)
     sink(Seq(served.head).toDF("query_id", "item_id", "rank"), 0L)
     // content equals the batch op over the concatenated stream
-    val log = StreamingOps.loadEvalLog(spark, dir).get
+    val log = StreamingOps.loadIndexLog(spark, dir).get
     assert(log.count() == 6L)
     val batchRows = op.transform(
       served.toDF("query_id", "item_id", "rank")).collect().map(_.toSeq).toSet
@@ -1729,9 +1729,9 @@ class StreamingOpsSpec extends SparkSpec {
       .sparkSession.createDataFrame(Seq.empty[(Long, Long, Int)])
       .toDF("query_id", "item_id", "rank"), 0L)
     // no parquet dir at all — the log stays append-only and gap-free
-    assert(StreamingOps.loadEvalLog(spark, dir).isEmpty)
+    assert(StreamingOps.loadIndexLog(spark, dir).isEmpty)
     sink(Seq((1L, 10L, 1)).toDF("query_id", "item_id", "rank"), 1L)
-    assert(StreamingOps.loadEvalLog(spark, dir).get.count() == 1L)
+    assert(StreamingOps.loadIndexLog(spark, dir).get.count() == 1L)
   }
 
   test("corpusIngestSink: streamed corpus equals the sequential batch ingest loop") {

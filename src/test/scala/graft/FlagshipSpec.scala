@@ -278,6 +278,51 @@ class FlagshipSpec extends SparkSpec {
     assert(ens.transform(requests).count() > 0)
   }
 
+  test("the served graph: op classes, scalar fields and request columns (auto and ivf)") {
+    // every field of every op, in order; fitted state (frames, centroid
+    // lists, the LSH center) by its shape only, so the pin holds for any
+    // fit of sf0.001's catalog
+    def fields(op: Product): String =
+      op.productElementNames.zip(op.productIterator).map {
+        case (n, df: org.apache.spark.sql.DataFrame) =>
+          s"$n.columns=${df.columns.mkString("[", ",", "]")}"
+        case ("centers", cs: Seq[_]) => s"centers.size=${cs.size}"
+        case ("center", c: Option[_]) =>
+          s"center.size=${c.map(_.asInstanceOf[Seq[_]].size)}"
+        case (n, v: Seq[_]) => s"$n=${v.mkString("[", ",", "]")}"
+        case (n, v) => s"$n=$v"
+      }.mkString(s"${op.getClass.getSimpleName}(", ", ", ")")
+    val d = "/root/testdata/sf0.001"
+    val userVecs = "QueryFeatureStore(features.columns=[user_id,user_vec], " +
+      "entityCol=user_id, featureCols=[user_vec], includeId=true, " +
+      "outputPrefix=, broadcastDim=true, resident=None)"
+    val tail = Seq(
+      "QueryFeatureStore(features.columns=[user_id,seen_ids], " +
+        "entityCol=user_id, featureCols=[seen_ids], includeId=true, " +
+        "outputPrefix=, broadcastDim=true, resident=None)",
+      "FilterCandidatesWithScores(idsCol=candidate_ids, " +
+        "scoresCol=candidate_scores, filterCol=seen_ids, " +
+        "outIdsCol=filtered_ids, outScoresCol=filtered_scores)",
+      "SoftmaxSampling(idsCol=filtered_ids, relevanceCol=filtered_scores, " +
+        "temperature=20.0, topk=10, seed=42, seedCol=user_id)")
+    val expected = Map(
+      "auto" -> ("AnnLsh(items.columns=[item_id,embedding], " +
+        "queryIdCol=user_id, queryVecCol=user_vec, itemIdCol=item_id, " +
+        "itemVecCol=embedding, k=50, numBits=4, nprobe=4, metric=dot, " +
+        "center.size=Some(8), resident=None)"),
+      "ivf" -> ("AnnIvf(items.columns=[item_id,embedding], centers.size=4, " +
+        "queryIdCol=user_id, queryVecCol=user_vec, itemIdCol=item_id, " +
+        "itemVecCol=embedding, k=50, nprobe=4, metric=dot, resident=None)"))
+    for ((retriever, retrieval) <- expected) {
+      val (ens, requests) = Flagship.servingEnsemble(spark, d, retrievalK = 50,
+        retriever = retriever)
+      assert(ens.ops.map(o => fields(o.asInstanceOf[Product])) ==
+        (userVecs +: retrieval +: tail), s"retriever=$retriever")
+      assert(requests.columns.toSeq == Seq("user_id", "c_mktsegment", "c_acctbal"))
+      assert(ens.inputSchema == requests.schema)
+    }
+  }
+
   test("forced-IVF recommend serves the full 4-stage graph (the tripped-skew branch)") {
     // the branch chooseRetriever activates when the occupancy monitor
     // trips: same 4-stage contract — ranked, deduplicated, seen-filtered

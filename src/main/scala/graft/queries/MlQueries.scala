@@ -388,7 +388,8 @@ object MlQueries {
     // state (factors + index/probe assignments — the xxhash hyperplanes /
     // k-means centroids are fit parameters, not serving math): probe
     // join, double-fold dot, (score DESC, id ASC) top-k, seen
-    // anti-filter, per-position md5 softmax keys, final (key ASC, id
+    // anti-filter, md5 softmax keys per retrieval-rank position (the
+    // served graph samples in rank order), final (key ASC, id
     // ASC) top-10. Either tier [[graft.Flagship]]'s skew-aware decision
     // picks (LSH buckets or IVF lists) persists the serving op's own
     // probe rows, one (user_id, bucket) row per probe, so the probes CTE
@@ -413,11 +414,11 @@ object MlQueries {
              |  FROM scored),
              |seen AS (SELECT DISTINCT o_custkey AS user_id, l_partkey AS item_id
              |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-             |unseen AS (SELECT t.user_id, t.item_id, t.score FROM topk t
+             |unseen AS (SELECT t.user_id, t.item_id, t.score, t.rk FROM topk t
              |  WHERE t.rk <= ${a.retrievalK} AND NOT EXISTS (SELECT 1 FROM seen s
              |    WHERE s.user_id = t.user_id AND s.item_id = t.item_id)),
              |pos AS (SELECT user_id, item_id, score, row_number() OVER (
-             |    PARTITION BY user_id ORDER BY item_id) - 1 AS i FROM unseen),
+             |    PARTITION BY user_id ORDER BY rk) - 1 AS i FROM unseen),
              |keyed AS (SELECT user_id, item_id, score,
              |    -ln((('0x' || substring(md5(user_id::VARCHAR || ':' || i::VARCHAR
              |      || ':${a.seed}'), 1, 8))::BIGINT + 0.5) / 4294967296.0)

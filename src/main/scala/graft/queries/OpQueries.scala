@@ -1422,7 +1422,7 @@ object OpQueries {
     * (IVF/PQ/SQ8 landed in round 11): the constant-cost variant that
     * still runs at 100 TB for the tier where it matters MOST, since
     * sign-LSH is the skew-prone fit ([[graft.ops.LshSkewReport]]) and
-    * the one [[graft.Flagship.chooseRetriever]] abandons when occupancy
+    * the one [[graft.Flagship.decideRetriever]] abandons when occupancy
     * trips — recall degradation under a drifting catalog mean is this
     * row's signal. Same md5-ranked 25-query sample, same dot-metric
     * brute-force truth as the other tiers (the full-population twin

@@ -1393,7 +1393,7 @@ object StreamingOps {
   }
 
   /** The trigger→action composition for inverted-list skew — the
-    * k-means twin of [[graft.Flagship.chooseRetriever]]'s LSH remedy:
+    * k-means twin of [[graft.Flagship.decideRetriever]]'s LSH remedy:
     * read the LIVE version's stamped occupancy summary (the
     * [[occupancyLog]] line the sinks commit — no index scan), and when
     * its basis-point skew exceeds `boundBp` run [[refitAnnIvfIndex]] —

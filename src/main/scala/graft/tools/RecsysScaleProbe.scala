@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 
 /** Stage-level timing probe for the recsys serving path at rehearsal SFs
   * (`runMain graft.tools.RecsysScaleProbe <dataDir>`): times the fit,
-  * the tier decision, the quantizer, index build, probe join and the
-  * full serving pass separately, plus the fitted tiers' occupancy
-  * reports — the measurement tool behind SCALE.md's recsys
-  * adjudications (in-board bench rows blend these; regressions need the
-  * decomposition). */
+  * the tier decision, the quantizer, index build, each op of the
+  * served graph and the full serving pass separately, plus the fitted
+  * tiers' occupancy reports — the measurement tool behind SCALE.md's
+  * recsys adjudications (in-board bench rows blend these; regressions
+  * need the decomposition). */
 object RecsysScaleProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -30,9 +30,9 @@ object RecsysScaleProbe {
     val numBits = graft.Flagship.lshBits(nItems)
     val center = t("mean vector")(
       graft.functions.VectorFunctions.meanVector(itemVecs, "embedding").toSeq)
-    val (tier, bp) = t("chooseRetriever")(
-      graft.Flagship.chooseRetriever(itemVecs, center, numBits))
-    println(s"[probe] tier=$tier skew_bp=$bp numBits=$numBits")
+    val occ = t("decideRetriever (occupancy)")(
+      graft.Flagship.decideRetriever(itemVecs, center, numBits, retryBits = 0))
+    println(s"[probe] tier=${occ.tier} skew_bp=${occ.bp} numBits=$numBits")
     // the round-13 decision surface: cost_bp on the REAL user workload,
     // with the one-shot resize retry — what recommend() actually runs
     locally {
@@ -96,67 +96,19 @@ object RecsysScaleProbe {
     val nUsers = userFactors.count()
     println(s"[probe] candidates=$cand users=$nUsers uniform=${
       nUsers * op.nprobe * ((nItems + centers.size - 1) / centers.size)}")
-    // recommend's serving stages, timed individually (mirrors
-    // Flagship.recommend's plan; any drift between this decomposition
-    // and the real path shows up as the residual in the full-pass rows)
-    locally {
-      import graft.Tables._
-      val interactions = orders(spark, d)
-        .join(lineitem(spark, d), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_custkey").cast("int").as("user"),
-          col("l_partkey").cast("int").as("item"))
-        .agg(sum("l_quantity").cast("float").as("strength"))
-      t("stage: interactions count")(interactions.count())
-      val seen = interactions.groupBy(col("user").cast("long").as("user_id"))
-        .agg(collect_set(col("item").cast("long")).as("seen_ids"))
-      t("stage: seen-set (noop)")(
-        seen.write.format("noop").mode("overwrite").save())
-      val (uf, _) = graft.Flagship.prefitFactorFrames(spark, d).get
-      val userVecs = uf.select(col("id").as("user_id"),
-        col("features").as("user_vec"))
-      val requests = customer(spark, d)
-        .select(col("c_custkey").cast("long").as("user_id"))
-      val withVec = requests.join(userVecs, Seq("user_id"))
-        .filter(col("user_vec").isNotNull)
-      t("stage: retrieval (noop)")(
-        op.transform(withVec).write.format("noop").mode("overwrite").save())
-      t("stage: retrieval again (noop)")(
-        op.transform(withVec).write.format("noop").mode("overwrite").save())
-      // stages 3-4 over a MATERIALIZED retrieval (isolates post-retrieval
-      // cost from retrieval recomputation)
-      val retrieved = op.transform(withVec)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t("stage: retrieved persist")(retrieved.count())
-      val filtered = graft.ops.QueryFeatureStore(seen, "user_id",
-        Seq("seen_ids"), includeId = true)
-        .transform(retrieved)
-        .select(col("user_id"),
-          posexplode(org.apache.spark.sql.functions.filter(
-            arrays_zip(col("candidate_ids"), col("candidate_scores")),
-            p => coalesce(
-              !array_contains(col("seen_ids"), p.getField("candidate_ids")),
-              lit(true)))).as(Seq("__pos", "__pair")))
-        .select(col("user_id"),
-          col("__pair.candidate_ids").as("item_id"),
-          col("__pair.candidate_scores").as("rank_score"))
-      t("stage: seen-filter explode (noop)")(
-        filtered.write.format("noop").mode("overwrite").save())
-      val requests2 = customer(spark, d)
-        .select(col("c_custkey").cast("long").as("user_id"),
-          col("c_mktsegment"), col("c_acctbal"))
-      val ranked = graft.ops.UnrollFeatures(requests2, Seq("c_mktsegment"),
-        on = "user_id").transform(filtered)
-      val perUser = ranked.groupBy("user_id")
-        .agg(sort_array(collect_list(struct(col("item_id"), col("rank_score")))).as("ps"))
-        .select(col("user_id").as("requestId"),
-          expr("transform(ps, p -> p.item_id)").as("candidate_ids"),
-          expr("transform(ps, p -> p.rank_score)").as("relevance"))
-      t("stage: unroll+collect+softmax (noop)")(
-        graft.ops.SoftmaxSampling("candidate_ids", "relevance",
-          temperature = 20.0, topk = 10).transform(perUser)
-          .write.format("noop").mode("overwrite").save())
-      retrieved.unpersist()
-    }
+    // the served graph, one op at a time: each op runs over its
+    // predecessor's persisted output, so its row times that op alone
+    val (ens, requests, _) = t("graph build")(
+      graft.Flagship.graph(spark, d, retrievalK = 100, finalK = 10, "auto"))
+    ens.ops.zipWithIndex.foldLeft(requests) { case (in, (op, i)) =>
+      val out = op.transform(in)
+      t(s"op $i ${op.name} (noop)")(
+        out.write.format("noop").mode("overwrite").save())
+      out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      println(s"[probe] op $i rows = ${out.count()}")
+      in.unpersist()
+      out
+    }.unpersist()
     t("recommend warm 1 (noop)")(
       graft.Flagship.recommend(spark, d)
         .write.format("noop").mode("overwrite").save())

@@ -83,7 +83,8 @@ class FlagshipSpec extends SparkSpec {
       (i, dir.map(x => (x * s).toFloat))
     }.toDF("item_id", "embedding")
     val muL = graft.functions.VectorFunctions.meanVector(line, "embedding").toSeq
-    val (t1, bp1) = Flagship.chooseRetriever(line, muL, numBits = 5)
+    val Flagship.RetrieverDecision(t1, _, bp1, _) =
+      Flagship.decideRetriever(line, muL, numBits = 5, retryBits = 0)
     assert(bp1 > Flagship.LshSkewBoundBp,
       s"cone geometry must exceed the skew bound: $bp1 bp")
     assert(t1 == "ivf", s"cone geometry must trip the IVF action ($bp1 bp)")
@@ -93,7 +94,8 @@ class FlagshipSpec extends SparkSpec {
     val spread = (1L to 240L).map(i =>
       (i, Seq.fill(8)(rnd.nextGaussian().toFloat))).toDF("item_id", "embedding")
     val muS = graft.functions.VectorFunctions.meanVector(spread, "embedding").toSeq
-    val (t2, bp2) = Flagship.chooseRetriever(spread, muS, numBits = 5)
+    val Flagship.RetrieverDecision(t2, _, bp2, _) =
+      Flagship.decideRetriever(spread, muS, numBits = 5, retryBits = 0)
     assert(t2 == "lsh", s"spread geometry must keep LSH ($bp2 bp)")
     assert(bp2 <= Flagship.LshSkewBoundBp)
   }
@@ -115,7 +117,10 @@ class FlagshipSpec extends SparkSpec {
       (i, Seq.tabulate(8)(j => if (j == 0)
         (s + (if (i % 2 == 0) 0.01 else -0.01)).toFloat else 0.0f))
     }.toDF("user_id", "user_vec")
-    val occOver = Flagship.chooseRetriever(line, muL, numBits = 5)
+    val occOver = {
+      val r = Flagship.decideRetriever(line, muL, numBits = 5, retryBits = 0)
+      (r.tier, r.bp)
+    }
     assert(occOver._1 == "ivf" && occOver._2 > Flagship.LshSkewBoundBp)
     val dOver = Flagship.decideRetriever(line, muL, numBits = 5,
       workload = Some(e0w))
@@ -142,7 +147,10 @@ class FlagshipSpec extends SparkSpec {
     val hot = (1L to 40L).map(i => (i,
       cA.map(c => (c + rnd.nextGaussian() * 0.3).toFloat)))
       .toDF("user_id", "user_vec")
-    val occUnder = Flagship.chooseRetriever(items, mu, numBits = 5)
+    val occUnder = {
+      val r = Flagship.decideRetriever(items, mu, numBits = 5, retryBits = 0)
+      (r.tier, r.bp)
+    }
     assert(occUnder._1 == "lsh" && occUnder._2 <= Flagship.LshSkewBoundBp,
       s"cluster-pair occupancy must sit under the skew bound: $occUnder")
     // retryBits = 0 isolates the monitor comparison (the retry is (c))
@@ -266,6 +274,23 @@ class FlagshipSpec extends SparkSpec {
       "the fresh entry must carry a NEW fit id, not reuse the old key")
   }
 
+  test("an inline-fit IVF build memoizes no centroids") {
+    // inline factors are fresh MLlib state, not a stable artifact: a
+    // later inline build in the same JVM must fit its own centroids, not
+    // reuse ones fit on a previous fit's items. A dir of links to the
+    // sf0.001 tables has the same data and no prewarmed factors.
+    import java.nio.file.{Files, Paths}
+    val d = Files.createTempDirectory("flagship_inline")
+    Files.list(Paths.get("/root/testdata/sf0.001")).forEach(f =>
+      Files.createSymbolicLink(d.resolve(f.getFileName), f))
+    assert(Flagship.prefitFactorFrames(spark, d.toString).isEmpty)
+    val (ens, _) = Flagship.servingEnsemble(spark, d.toString, retrievalK = 50,
+      retriever = "ivf")
+    assert(ens.ops.exists(_.isInstanceOf[graft.ops.AnnIvf]))
+    assert(!Flagship.cachedCenterKeys.exists(_._1.startsWith(d.toString)),
+      s"inline fits must not memoize centroids: ${Flagship.cachedCenterKeys}")
+  }
+
   test("auto retriever keeps LSH on the healthy test catalog (skew below bound)") {
     // the decision the default serving graph now makes: sf0.001's ALS
     // factor fit measures ~25k bp (probe-verified), under the 80k bound,
@@ -324,7 +349,7 @@ class FlagshipSpec extends SparkSpec {
   }
 
   test("forced-IVF recommend serves the full 4-stage graph (the tripped-skew branch)") {
-    // the branch chooseRetriever activates when the occupancy monitor
+    // the branch decideRetriever activates when the occupancy monitor
     // trips: same 4-stage contract — ranked, deduplicated, seen-filtered
     // k-lists — through the k-means tier instead of sign-LSH
     val d = "/root/testdata/sf0.001"

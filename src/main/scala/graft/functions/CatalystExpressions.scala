@@ -1481,4 +1481,13 @@ object FastExpressions {
   def annProbeTopK(vec: Column, table: Broadcast[AnnTable], k: Int,
       keepEmpty: Boolean): Column =
     column(AnnProbeTopK(expression(vec), table, k, keepEmpty))
+  def antiFilter(ids: Column, filter: Column): Column =
+    column(AntiFilter(expression(ids), expression(filter), None))
+  def antiFilter(ids: Column, scores: Column, filter: Column): Column =
+    column(AntiFilter(expression(ids), expression(filter), Some(expression(scores))))
+  def sampleTopK(ids: Column, scores: Column, seed: Column, temperature: Double,
+      topk: Int, salt: Long): Column =
+    column(SampleTopK(expression(ids), expression(scores),
+      expression(scores.cast("array<double>")), expression(seed.cast("string")),
+      temperature, topk, salt))
 }

@@ -2,9 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.functions.{transform => arrayTransform}
 import org.apache.spark.sql.types._
 import graft.core.{EnsembleOp, Tags}
+import graft.functions.{FastExpressions, ServingTail}
 
 /** Column projection at graph roots (`["a"] >> op` in the reference;
   * SURVEY.md §2.2 → `df.select`). */
@@ -70,9 +70,10 @@ case class ConcatColumns(other: DataFrame, on: String = "requestId")
   * `candidate_ids.values[~np.isin(candidate_ids, filter_ids)]`
   * (/root/reference/merlin/systems/dag/ops/session_filter.py:142-162).
   *
-  * A pure per-row higher-order function — no shuffle, fully codegen'd; at
-  * 100 TB this runs map-side wherever the candidates already live. The
-  * relational twin (ids as rows, not arrays) is a `left_anti` join.
+  * One per-row kernel ([[graft.functions.AntiFilter]]) inside whole-stage
+  * codegen — no shuffle; at 100 TB this runs map-side wherever the
+  * candidates already live. The relational twin (ids as rows, not arrays)
+  * is a `left_anti` join.
   */
 case class FilterCandidates(
     inputCol: String = "candidate_ids",
@@ -92,13 +93,10 @@ case class FilterCandidates(
   }
 
   // A NULL filter array means "nothing to filter" (the reference's empty
-  // np.isin set): array_contains(null, x) is NULL and filter() drops
-  // null-predicate elements, so without the coalesce a user missing a
-  // filter entry (e.g. from a left join) would lose ALL candidates.
+  // np.isin set): a user missing a filter entry (e.g. from a left join)
+  // keeps ALL candidates.
   override def transform(df: DataFrame): DataFrame =
-    df.withColumn(outputCol,
-        filter(col(inputCol),
-          x => coalesce(!array_contains(col(filterCol), x), lit(true))))
+    df.withColumn(outputCol, FastExpressions.antiFilter(col(inputCol), col(filterCol)))
       .drop(inputCol, filterCol)
 }
 
@@ -107,8 +105,10 @@ case class FilterCandidates(
   * retrieval→filter hand-off of the reference's 4-stage ensemble where
   * faiss candidate scores must stay aligned with the surviving ids
   * (session_filter.py filtering the paired candidate block). Same
-  * null-filter semantics as [[FilterCandidates]]; per-row HOFs only, so it
-  * runs map-side wherever the candidates live. */
+  * null-filter semantics as [[FilterCandidates]], through the same kernel;
+  * a shorter ids or scores array is padded with nulls, as `arrays_zip`
+  * pads it. Per-row and codegen'd, so it runs map-side wherever the
+  * candidates live. */
 case class FilterCandidatesWithScores(
     idsCol: String = "candidate_ids",
     scoresCol: String = "candidate_scores",
@@ -122,18 +122,25 @@ case class FilterCandidatesWithScores(
     require(in(idsCol).dataType.isInstanceOf[ArrayType] &&
       in(scoresCol).dataType.isInstanceOf[ArrayType],
       s"$name: $idsCol/$scoresCol must be arrays")
+    (in(idsCol).dataType, in(filterCol).dataType) match {
+      case (ArrayType(a, _), ArrayType(b, _)) =>
+        require(a == b || (ServingTail.integral(a) && ServingTail.integral(b)),
+          s"$name: element types differ: $a vs $b")
+      case (_, b) => throw new IllegalArgumentException(s"$name: $filterCol must be an array, got $b")
+    }
     StructType(
       in.filterNot(f => Set(idsCol, scoresCol, filterCol)(f.name)) ++ Seq(
         in.fields(ii).copy(name = outIdsCol),
         in.fields(si).copy(name = outScoresCol)))
   }
 
+  // __kept is a REAL projected column referenced twice below, so the
+  // kernel runs once instead of once per output column
   override def transform(df: DataFrame): DataFrame =
     df.withColumn("__kept",
-        filter(arrays_zip(col(idsCol), col(scoresCol)),
-          p => coalesce(!array_contains(col(filterCol), p.getField(idsCol)), lit(true))))
-      .withColumn(outIdsCol, arrayTransform(col("__kept"), p => p.getField(idsCol)))
-      .withColumn(outScoresCol, arrayTransform(col("__kept"), p => p.getField(scoresCol)))
+        FastExpressions.antiFilter(col(idsCol), col(scoresCol), col(filterCol)))
+      .withColumn(outIdsCol, col("__kept").getField("ids"))
+      .withColumn(outScoresCol, col("__kept").getField("scores"))
       .drop(idsCol, scoresCol, filterCol, "__kept")
 }
 
@@ -144,17 +151,18 @@ case class FilterCandidatesWithScores(
   * -ln(u)/exp(T*score)` — the same keys times the per-request POSITIVE
   * constant `sum(score)`, hence the identical ordering, identical sample
   * and identical distribution (E–S keys are scale-invariant in the
-  * weights). Dropping the constant matters: `sum(score)` inside the
-  * per-element lambda would re-run the O(n) aggregate for every element
-  * (HOF lambda bodies re-evaluate; CSE does not reach into them — the
-  * NormalizeEmbeddings lesson), turning each row O(n²).
+  * weights), and it spares a per-row O(n) pass.
   *
   * The reference draws unseeded uniforms; for reproducibility we derive
   * `u` deterministically from `md5(seedCol ":" position ":" seed)` — an
   * explicit-seed variant of the same distribution (SURVEY.md §7.4). md5
   * (not xxhash64) so the DuckDB oracle mirrors the full key and the
-  * sampled output hash-checks cross-engine. Entirely built-in HOFs:
-  * per-row, shuffle-free, codegen-friendly.
+  * sampled output hash-checks cross-engine. One per-row kernel
+  * ([[graft.functions.SampleTopK]]) inside whole-stage codegen: keys,
+  * then the `topk` smallest (key, id, score) triples, shuffle-free.
+  * Where `exp(T*score)` underflows to 0 the key is +∞ and the candidate
+  * ranks last — numpy's division, where Spark's ANSI `/` would fail the
+  * whole request.
   */
 case class SoftmaxSampling(
     idsCol: String,
@@ -181,27 +189,14 @@ case class SoftmaxSampling(
         StructField("ordered_scores", scT)))
   }
 
-  override def transform(df: DataFrame): DataFrame = {
-    val ids = col(idsCol)
-    val scores = col(relevanceCol)
-    // key_i = -ln(u_i) / exp(T*s_i)  (≡ reference keys × sum(s) > 0);
-    // u from the first 8 md5 hex chars (engine-portable, uniform on
-    // [0, 2^32)); +0.5 keeps u strictly inside (0, 1)
-    val keyed = arrayTransform(ids, (id, i) => {
-      val u = graft.functions.TextFunctions.md5Uniform(concat_ws(":",
-        col(seedCol).cast("string"), i.cast("string"), lit(seed.toString)))
-      val s = element_at(scores, i + 1)
-      val key = -log(u) / exp(lit(temperature) * s.cast("double"))
-      struct(key.as("k"), id.as("id"), s.as("sc"))
-    })
-    // struct sort: ascending by key, ties by id — deterministic. __top is
-    // a REAL projected column referenced twice below, so the sort+slice
-    // runs once instead of once per output column.
-    df.withColumn("__top", slice(array_sort(keyed), 1, topk))
-      .withColumn("ordered_ids", arrayTransform(col("__top"), p => p.getField("id")))
-      .withColumn("ordered_scores", arrayTransform(col("__top"), p => p.getField("sc")))
+  // __top is a REAL projected column referenced twice below, so the
+  // kernel runs once instead of once per output column
+  override def transform(df: DataFrame): DataFrame =
+    df.withColumn("__top", FastExpressions.sampleTopK(col(idsCol), col(relevanceCol),
+        col(seedCol), temperature, topk, seed))
+      .withColumn("ordered_ids", col("__top").getField("ids"))
+      .withColumn("ordered_scores", col("__top").getField("scores"))
       .drop(idsCol, relevanceCol, "__top")
-  }
 }
 
 /** Broadcast user/request features onto candidate item rows with a name

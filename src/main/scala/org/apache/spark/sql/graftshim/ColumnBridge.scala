@@ -12,3 +12,11 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** Spark's own `private[sql]` error builders, for custom expressions that
+  * keep a built-in's error contract. */
+object SqlErrors {
+  def elementAtIndex(index: Int, numElements: Int): Throwable =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .invalidElementAtIndexError(index, numElements, null)
+}

@@ -3,6 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArraySort, ArrayTransform}
 import org.apache.spark.sql.functions._
 import graft.core.{Ensemble, EnsemblePersistence}
 import graft.ops._
@@ -76,6 +77,12 @@ class ServeSpec extends SparkSpec {
     val plan = small.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("Join"),
       s"a resident request must not shuffle or join:\n$plan")
+    // the serving tail runs as two codegen'd kernels: no higher-order
+    // function (all CodegenFallback) is left in the request's plan
+    val hofs = small.queryExecution.executedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: ArrayFilter | _: ArrayTransform | _: ArraySort) => e.prettyName
+    }))
+    assert(hofs.isEmpty, s"higher-order functions left in the served plan: $hofs")
     val (got, jobs, _) = counted(small)
     assert(jobs == 1, s"an 8-user request must run exactly one job, ran $jobs")
     val expected = ens.transform(requests.filter(col("user_id").isin(users.take(8).map(_.get(0)): _*)))

@@ -376,4 +376,149 @@ class CodegenSpec extends SparkSpec {
       .flatMap(w => BpeTokenize.applyWord(w, merges))))
     assert(opOut(2L).nonEmpty)
   }
+
+  test("anti-filter / softmax top-k equal the HOF chain and stay in codegen") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import graft.ops.{FilterCandidates, FilterCandidatesWithScores, SoftmaxSampling}
+    // the chains the two kernels replaced, verbatim, as the reference
+    def hofFilter(df: DataFrame): DataFrame =
+      df.withColumn("filtered_ids", filter(col("candidate_ids"),
+          x => coalesce(!array_contains(col("seen"), x), lit(true))))
+        .drop("candidate_ids", "seen")
+    def hofFilterWithScores(df: DataFrame): DataFrame =
+      df.withColumn("__kept",
+          filter(arrays_zip(col("candidate_ids"), col("candidate_scores")),
+            p => coalesce(!array_contains(col("seen"), p.getField("candidate_ids")), lit(true))))
+        .withColumn("filtered_ids", transform(col("__kept"), p => p.getField("candidate_ids")))
+        .withColumn("filtered_scores",
+          transform(col("__kept"), p => p.getField("candidate_scores")))
+        .drop("candidate_ids", "candidate_scores", "seen", "__kept")
+    def hofSoftmax(df: DataFrame, ids: String, scores: String, t: Double, k: Int,
+        seed: Long, seedCol: String): DataFrame = {
+      val keyed = transform(col(ids), (id, i) => {
+        val u = TextFunctions.md5Uniform(concat_ws(":",
+          col(seedCol).cast("string"), i.cast("string"), lit(seed.toString)))
+        val s = element_at(col(scores), i + 1)
+        val key = -log(u) / exp(lit(t) * s.cast("double"))
+        struct(key.as("k"), id.as("id"), s.as("sc"))
+      })
+      df.withColumn("__top", slice(array_sort(keyed), 1, k))
+        .withColumn("ordered_ids", transform(col("__top"), p => p.getField("id")))
+        .withColumn("ordered_scores", transform(col("__top"), p => p.getField("sc")))
+        .drop(ids, scores, "__top")
+    }
+    // raw bits for floating values, so -0.0 and 0.0 differ
+    def canon(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case f: Float => java.lang.Float.floatToRawIntBits(f)
+      case xs: scala.collection.Seq[_] => xs.map(canon).toList
+      case r: Row => r.toSeq.map(canon).toList
+      case x => x
+    }
+    def assertSame(native: DataFrame, hof: DataFrame, what: String): Unit = {
+      assert(native.schema == hof.schema, s"$what: schema")
+      val got = native.collect().map(canon).sortBy(_.toString).toSeq
+      val want = hof.collect().map(canon).sortBy(_.toString).toSeq
+      assert(got.length == want.length && got.length >= 1, s"$what: row count")
+      got.zip(want).foreach { case (g, w) => assert(g == w, s"$what diverged: $g vs $w") }
+    }
+    def assertCodegen(df: DataFrame, what: String): Unit =
+      assert(generatedCode(df).contains(".compute("), s"$what: expected unboxed compute call")
+
+    val rnd = new scala.util.Random(31)
+    def maybe[T](p: Double)(v: => T): T = if (rnd.nextDouble() < p) null.asInstanceOf[T] else v
+    // NaN, +Inf, huge (exp overflows: key 0, so ties go by id), ±0.0;
+    // -Inf only where a temperature of 0 keeps exp(T*s) off 0
+    val special = Seq(Double.NaN, Double.PositiveInfinity, 1e300, 1e300, 0.0, -0.0)
+    def score(negInf: Boolean): java.lang.Double = maybe(0.05) {
+      val r = rnd.nextInt(10)
+      if (negInf && r == 0) Double.NegativeInfinity
+      else if (r < 3) special(rnd.nextInt(special.size)) else rnd.nextGaussian() * 2
+    }
+    def longs(n: Int, pNull: Double): Seq[java.lang.Long] =
+      Seq.fill(n)(maybe(pNull)(java.lang.Long.valueOf(rnd.nextInt(30).toLong)))
+    val rows = (0 until 600).map { r =>
+      val n = rnd.nextInt(25)
+      val negInf = r % 5 == 0
+      val ids = maybe(0.04)(longs(n, 0.05))
+      // unequal lengths: arrays_zip pads the shorter one with nulls
+      val m = if (rnd.nextDouble() < 0.15) rnd.nextInt(25) else n
+      val scores = maybe(0.04)(Seq.fill(m)(score(negInf)))
+      val seen = rnd.nextInt(10) match {
+        case 0 => null
+        case 1 => Seq.empty[java.lang.Long]
+        case _ => longs(rnd.nextInt(15), 0.05)
+      }
+      Row(r.toLong, maybe(0.1)(s"u$r"), negInf, ids, scores, seen)
+    }
+    val schema = StructType(Seq(
+      StructField("requestId", LongType), StructField("seed_s", StringType),
+      StructField("neg_inf", BooleanType),
+      StructField("candidate_ids", ArrayType(LongType)),
+      StructField("candidate_scores", ArrayType(DoubleType)),
+      StructField("seen", ArrayType(LongType))))
+    // RDD-backed: a literal LocalRelation would fold the projection away
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+
+    val single = FilterCandidates("candidate_ids", "seen").transform(df.drop("candidate_scores"))
+    assertCodegen(single, "FilterCandidates")
+    assertSame(single, hofFilter(df.drop("candidate_scores")), "FilterCandidates")
+    val filtered = FilterCandidatesWithScores("candidate_ids", "candidate_scores", "seen")
+      .transform(df)
+    assertCodegen(filtered, "FilterCandidatesWithScores")
+    assertSame(filtered, hofFilterWithScores(df), "FilterCandidatesWithScores")
+
+    // sampling runs on the filtered (aligned) arrays, as in the flagship;
+    // ANSI `/` fails on exp(T*s) == 0, so -Inf rows meet the chain at T = 0
+    val sampled = filtered.cache()
+    val finite = sampled.filter(!col("neg_inf"))
+    for ((t, in) <- Seq(20.0 -> finite, 0.0 -> sampled); k <- Seq(1, 3, 10, 1000);
+         seedCol <- Seq("seed_s", "requestId")) {
+      val op = SoftmaxSampling("filtered_ids", "filtered_scores", temperature = t,
+        topk = k, seed = 7L, seedCol = seedCol)
+      val native = op.transform(in)
+      if (k == 3) assertCodegen(native, "SoftmaxSampling")
+      assertSame(native,
+        hofSoftmax(in, "filtered_ids", "filtered_scores", t, k, 7L, seedCol),
+        s"SoftmaxSampling(T=$t, topk=$k, seedCol=$seedCol)")
+    }
+    sampled.unpersist()
+
+    // duplicated int ids with float scores, and decimal scores
+    // (op_softmax_sampling's relevance)
+    val typed = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until 200).map { r =>
+        val n = rnd.nextInt(12)
+        val ids = Seq.fill(n)(Integer.valueOf(rnd.nextInt(6)))
+        val fs = Seq.fill(n)(maybe(0.05)(java.lang.Float.valueOf(rnd.nextGaussian().toFloat)))
+        val ds = Seq.fill(n)(maybe(0.05)(
+          new java.math.BigDecimal(rnd.nextInt(2000) - 1000).movePointLeft(3)))
+        Row(r.toLong, ids, fs, ds, ids.take(rnd.nextInt(3)))
+      }, 4),
+      StructType(Seq(StructField("requestId", LongType),
+        StructField("ids", ArrayType(IntegerType)),
+        StructField("fscores", ArrayType(FloatType)),
+        StructField("dscores", ArrayType(DecimalType(12, 4))),
+        StructField("seen", ArrayType(IntegerType)))))
+    val intIds = typed.select(col("requestId"), col("ids").as("candidate_ids"), col("seen"))
+    assertSame(FilterCandidates("candidate_ids", "seen").transform(intIds), hofFilter(intIds),
+      "FilterCandidates over int ids")
+    for (sc <- Seq("fscores", "dscores"); k <- Seq(1, 4, 100)) {
+      val in = typed.select("requestId", "ids", sc)
+      assertSame(
+        SoftmaxSampling("ids", sc, temperature = 20.0, topk = k).transform(in),
+        hofSoftmax(in, "ids", sc, 20.0, k, 42L, "requestId"),
+        s"SoftmaxSampling over int ids / $sc, topk=$k")
+    }
+
+    // scores shorter than ids: both raise element_at's ANSI error
+    val short = Seq((1L, Seq(1L, 2L, 3L), Seq(0.5, 0.25))).toDF("requestId", "ids", "scores")
+    Seq(SoftmaxSampling("ids", "scores").transform(short),
+      hofSoftmax(short, "ids", "scores", 20.0, 10, 42L, "requestId")).foreach { out =>
+      val e = intercept[Exception](out.collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("INVALID_ARRAY_INDEX_IN_ELEMENT_AT")), e.toString)
+    }
+  }
 }

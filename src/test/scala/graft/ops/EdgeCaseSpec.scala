@@ -62,6 +62,33 @@ class EdgeCaseSpec extends SparkSpec {
     assert(out(0).getSeq[Double](out(0).fieldIndex("ordered_scores")).isEmpty)
   }
 
+  // exp(20 * -40) underflows to 0. numpy's division gives a +Inf key, so
+  // the candidate ranks after every finite key, in both ANSI modes (a SQL
+  // `/` fails the whole batch under ANSI and gives a null key, sampled
+  // first, without it).
+  test("SoftmaxSampling: an underflowed weight ranks last and the batch answers") {
+    val df = Seq(
+      (1L, Seq(5L, 6L, 7L, 8L), Seq(0.1, -40.0, 0.2, -0.3)),
+      (2L, Seq(9L, 10L), Seq(0.5, 0.4)))
+      .toDF("requestId", "ids", "scores")
+    val prev = spark.conf.getOption("spark.sql.ansi.enabled")
+    for (ansi <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val out = SoftmaxSampling("ids", "scores", topk = 4).transform(df)
+          .orderBy("requestId").select("ordered_ids", "ordered_scores")
+          .as[(Seq[Long], Seq[Double])].collect()
+        assert(out.length == 2, s"ansi=$ansi: every request answers")
+        assert(out(0)._1.length == 4 && out(0)._1.last == 6L && out(0)._2.last == -40.0,
+          s"ansi=$ansi: the underflowed candidate must rank last: ${out(0)}")
+        assert(out(1)._1.toSet == Set(9L, 10L))
+      } finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+        case None => spark.conf.unset("spark.sql.ansi.enabled")
+      }
+    }
+  }
+
   test("SoftmaxSampling: empty batch yields empty output") {
     val df = Seq.empty[(Long, Seq[Long], Seq[Double])]
       .toDF("requestId", "ids", "scores")

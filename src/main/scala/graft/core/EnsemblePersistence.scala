@@ -123,8 +123,9 @@ object EnsemblePersistence {
     * [[graft.ops.QueryFeatureStore]] view becomes a broadcast key → row
     * table, an [[graft.ops.AnnLsh]] / [[graft.ops.AnnIvf]] catalog a
     * broadcast list → items table built once with the persisted center
-    * or centroids — one collect job each, here. A local request with
-    * distinct ids then runs as one narrow job (no join, no exchange).
+    * or centroids — one collect job each, here. A request (in-memory
+    * or a parquet read) then runs as one narrow job (no join, no
+    * exchange).
     * Each table is bounded by `spark.sql.autoBroadcastJoinThreshold`
     * (the size at which Spark stops broadcasting a join side); a larger
     * one, like every other side artifact, stays a lazy parquet read

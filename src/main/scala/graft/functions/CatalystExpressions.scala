@@ -1339,8 +1339,8 @@ case class KeyedLookup(key: Expression, table: Broadcast[KeyedTable], ordinal: I
   * every item of the probed lists with [[ArrayDotProduct]]'s arithmetic
   * (or cosine over it), and keep the best `k` through
   * [[TopKAggregator]]'s own `reduce` (score desc, id asc, NaN dropped):
-  * the per-row equivalent of the relational probe join + top-k groupBy
-  * for a request whose ids are distinct.
+  * the per-row equivalent of the relational probe join + top-k groupBy,
+  * which also answers each request row for itself.
   *
   * Returns an array of zero or one `(candidate_ids, candidate_scores)`
   * structs, for `inline`: zero for a null vector, and — unless

@@ -25,14 +25,14 @@ import graft.functions.{AnnTable, IvfRouting, VectorFunctions}
   * Resident serving: [[withResidentTable]] (called by
   * [[graft.core.EnsemblePersistence.load]]) assigns the catalog once,
   * through [[AnnIvf.index]] with the persisted centroids, into a
-  * broadcast list → (ids, vectors) [[graft.functions.AnnTable]]. A
-  * request whose query ids are provably distinct and non-null (a local
-  * request, see [[Resident.annProbe]]) is then answered by one
-  * narrow [[graft.functions.AnnProbeTopK]] projection: same probes,
-  * scores and top-k order, empty arrays when the probed lists are empty,
-  * null-vector rows dropped. Any other input, an index above
-  * `spark.sql.autoBroadcastJoinThreshold`, and every in-memory op take
-  * the probe join ([[AnnIndex.transformIndexed]]).
+  * broadcast list → (ids, vectors) [[graft.functions.AnnTable]]. Any
+  * request is then answered by one narrow
+  * [[graft.functions.AnnProbeTopK]] projection ([[Resident.annProbe]]):
+  * per request row, the same probes, scores and top-k order as the probe
+  * join, empty arrays when the probed lists are empty, null-vector rows
+  * dropped. An index above `spark.sql.autoBroadcastJoinThreshold` and
+  * every in-memory op take the probe join
+  * ([[AnnIndex.transformIndexed]]).
   */
 case class AnnIvf(
     items: DataFrame,
@@ -70,7 +70,7 @@ case class AnnIvf(
   protected def queries(df: DataFrame): DataFrame =
     df.filter(col(queryVecCol).isNotNull).select(col(queryIdCol), col(queryVecCol))
 
-  protected def ranked(candidates: DataFrame, df: DataFrame): DataFrame =
+  protected def ranked(candidates: DataFrame): DataFrame =
     Retriever.topK(candidates, queryIdCol, k, coalesce(Retriever.similarity(metric,
       col(queryVecCol), col("__item_vec")), lit(Double.NaN)))
 

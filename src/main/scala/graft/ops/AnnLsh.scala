@@ -24,15 +24,13 @@ import graft.functions.{AnnTable, LshRouting, VectorFunctions}
   * Resident serving: [[withResidentTable]] (called by
   * [[graft.core.EnsemblePersistence.load]]) buckets the catalog once,
   * through [[AnnLsh.index]] with the persisted center, into a broadcast
-  * bucket → (ids, vectors) [[graft.functions.AnnTable]]. A request whose
-  * query ids are provably distinct and non-null (a local request, see
-  * [[Resident.annProbe]]) is then answered by one narrow
-  * [[graft.functions.AnnProbeTopK]] projection: same probes, same
-  * scores, same top-k order, and a query whose probed buckets are empty
-  * still drops out. Any other input, an index above
-  * `spark.sql.autoBroadcastJoinThreshold`, and every in-memory op take
-  * the probe join ([[AnnIndex.transformIndexed]]), which also merges
-  * duplicate query ids.
+  * bucket → (ids, vectors) [[graft.functions.AnnTable]]. Any request is
+  * then answered by one narrow [[graft.functions.AnnProbeTopK]]
+  * projection ([[Resident.annProbe]]): per request row, the same probes,
+  * scores and top-k order as the probe join, and a query whose probed
+  * buckets are empty still drops out. An index above
+  * `spark.sql.autoBroadcastJoinThreshold` and every in-memory op take
+  * the probe join ([[AnnIndex.transformIndexed]]).
   */
 case class AnnLsh(
     items: DataFrame,
@@ -92,7 +90,7 @@ case class AnnLsh(
   protected def queries(df: DataFrame): DataFrame =
     df.select(col(queryIdCol), col(queryVecCol))
 
-  protected def ranked(candidates: DataFrame, df: DataFrame): DataFrame =
+  protected def ranked(candidates: DataFrame): DataFrame =
     Retriever.topK(candidates, queryIdCol, k, coalesce(Retriever.similarity(metric,
       col(queryVecCol), col("__item_vec")), lit(Double.NaN)))
 

@@ -110,14 +110,15 @@ case class AnnIvfPq(
 
   /** Probes: the `nprobe` nearest coarse centroids, each probe row
     * carrying the query's ADC tables (built once per query, before the
-    * explode) instead of its vector. */
+    * explode) instead of its vector — and the vector too with `refine`,
+    * whose exact re-rank needs it. */
   def withProbes(queries: DataFrame): DataFrame = {
     val q = col(queryVecCol)
-    queries
+    val probes = queries
       .withColumn("__tab", lutCol(q))
       .withColumn("__qc", qcCol(q))
       .withColumn(listCol, explode(VectorFunctions.nearestCentroids(q, centers, nprobe)))
-      .drop(queryVecCol)
+    if (refine > 0) probes else probes.drop(queryVecCol)
   }
 
   // a null vector has no nearest centroid, so it probes nothing
@@ -127,8 +128,10 @@ case class AnnIvfPq(
   /** ADC top-k over the probed codes; with `refine`, the exact re-rank.
     * The refine pass fetches full vectors from `items` by id — the raw
     * catalog is the refine store, the code table the probe store,
-    * exactly FAISS's refine-with-stored-vectors split. */
-  protected def ranked(candidates: DataFrame, df: DataFrame): DataFrame = {
+    * exactly FAISS's refine-with-stored-vectors split. The query vector
+    * rides through the coarse top-k (`first` of one request row's
+    * vector), so each request row re-ranks only its own nominees. */
+  protected def ranked(candidates: DataFrame): DataFrame = {
     // ADC: element_at(qc, cid+1) + Σ_j tab[j][codes[j]] — m lookups per
     // candidate, no float-vector math after the per-query table build.
     // The lookup-sum is the fused AdcLookupSum expression: bit-identical
@@ -138,8 +141,7 @@ case class AnnIvfPq(
     val adc = element_at(col("__qc"), col(listCol) + 1) +
       graft.functions.FastExpressions
         .adcLookupSum(col("__codes"), col("__tab"))
-    val coarseTop = Retriever.topK(candidates, queryIdCol, if (refine > 0) refine else k, adc)
-    if (refine == 0) coarseTop
+    if (refine == 0) Retriever.topK(candidates, queryIdCol, k, adc)
     else {
       // FAISS-style refinement (the IVFPQ + refine-with-stored-vectors
       // design): ADC nominates `refine` candidates per query from CODES
@@ -148,10 +150,12 @@ case class AnnIvfPq(
       // index — and re-rank by the EXACT dot. Recall returns to
       // IVF,Flat's probe-limited level; the big index still never
       // shuffles floats.
+      val coarseTop = Retriever.topK(candidates, queryIdCol, refine, adc,
+        first(col(queryVecCol)).as(queryVecCol))
       Retriever.topK(
         coarseTop
-          .select(col(queryIdCol), explode(col("candidate_ids")).as("__item_id"))
-          .join(df.select(col(queryIdCol), col(queryVecCol)), Seq(queryIdCol))
+          .select(col(Retriever.RowKey), col(queryIdCol), col(queryVecCol),
+            explode(col("candidate_ids")).as("__item_id"))
           .join(items.select(col(itemIdCol).cast("long").as("__item_id"),
             col(itemVecCol).as("__item_vec")), Seq("__item_id")),
         queryIdCol, k, dot(col(queryVecCol), col("__item_vec")))

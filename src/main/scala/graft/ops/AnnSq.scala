@@ -96,7 +96,7 @@ case class AnnSq(
   // arithmetic, same null discipline — but allocation-free where the
   // composed form materialized one reconstructed vector PER CANDIDATE
   // (nprobe·|list| rows per query, the SQ8 hot loop)
-  protected def ranked(candidates: DataFrame, df: DataFrame): DataFrame =
+  protected def ranked(candidates: DataFrame): DataFrame =
     Retriever.topK(candidates, queryIdCol, k,
       coalesce(graft.functions.FastExpressions.sqDecodeDot(
         col(queryVecCol), col("__codes"), mins, steps), lit(Double.NaN)))

@@ -5,8 +5,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Repartition, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, inline}
 
@@ -73,48 +72,15 @@ private[graft] object Resident {
     if (local) df.coalesce(df.sparkSession.sparkContext.defaultParallelism) else df
   }
 
-  /** Whether `keyCol` provably holds distinct, non-null values: the
-    * column traces through projections, filters and partition
-    * boundaries to a LocalRelation whose rows (already in memory) are
-    * checked. For such a request the relational top-k `groupBy` on
-    * the query id is the identity, so a per-row plan returns the same
-    * rows; anything else keeps the relational plan. */
-  private def distinctLocalKeys(df: DataFrame, keyCol: String): Boolean = {
-    val plan = df.queryExecution.analyzed
-    plan.output.find(_.name == keyCol).flatMap(a => localColumn(plan, a.exprId)).exists {
-      case (rel, i) =>
-        val dt = rel.output(i).dataType
-        val seen = new java.util.HashSet[AnyRef](rel.data.size * 2)
-        KeyedTable.supportsKey(dt) &&
-          rel.data.forall(r => !r.isNullAt(i) && seen.add(r.get(i, dt).asInstanceOf[AnyRef]))
-    }
-  }
-
-  private def localColumn(p: LogicalPlan, id: ExprId): Option[(LocalRelation, Int)] = p match {
-    case l: LocalRelation => Some(l.output.indexWhere(_.exprId == id)).filter(_ >= 0).map(l -> _)
-    case Project(list, child) => list.find(_.exprId == id).flatMap {
-      case a: Attribute => localColumn(child, a.exprId)
-      case al: Alias => al.child match {
-        case a: Attribute => localColumn(child, a.exprId)
-        case _ => None
-      }
-      case _ => None
-    }
-    case f: Filter => localColumn(f.child, id)
-    case r: Repartition => localColumn(r.child, id)
-    case s: SubqueryAlias => localColumn(s.child, id)
-    case _ => None
-  }
-
   /** The resident ANN answer, `(id, candidate_ids, candidate_scores)`
-    * per request row from one narrow projection — when the table was
-    * built for the op's current routing and metric and the request ids
-    * are provably distinct; None sends the caller to its probe join. */
+    * per request row from one narrow projection — the probe join's answer
+    * for any request, since both answer each request row for itself —
+    * when the table was built for the op's current routing and metric;
+    * None sends the caller to its probe join. */
   def annProbe(df: DataFrame, table: Option[Broadcast[AnnTable]], routing: AnnRouting,
       metric: String, idCol: String, vecCol: String, k: Int,
       keepEmpty: Boolean): Option[DataFrame] =
-    table.filter(t => t.value.routing == routing && t.value.metric == metric &&
-        distinctLocalKeys(df, idCol))
+    table.filter(t => t.value.routing == routing && t.value.metric == metric)
       .map(t => boundary(df).select(col(idCol),
         inline(FastExpressions.annProbeTopK(col(vecCol), t, k, keepEmpty))))
 }

@@ -10,6 +10,8 @@ import graft.functions.{TopKAggregator, VectorFunctions}
   * (merlin/systems/dag/ops/faiss.py:90-112): each
   * request row `(queryIdCol, queryVecCol)` answers with its k best item
   * ids and their scores, `(queryIdCol, candidate_ids, candidate_scores)`.
+  * The answer is per request ROW, not per id: two rows with one id get
+  * two answers, each equal to that row sent alone.
   * [[TopKRetrieval]] scores every item; the [[AnnIndex]] ops score only
   * the lists their index probes. */
 trait Retriever extends EnsembleOp {
@@ -39,27 +41,31 @@ object Retriever {
     case m        => throw new IllegalArgumentException(s"unknown metric $m")
   }
 
-  /** The k best `__item_id`s per query of scored candidate pairs: the
-    * bounded-heap [[TopKAggregator]] (partial top-k map-side, no global
-    * sort), ties broken by the lower id. */
-  def topK(candidates: DataFrame, queryIdCol: String, k: Int, score: Column): DataFrame = {
-    val topk = udaf(new TopKAggregator(k))
-    candidates.groupBy(col(queryIdCol))
-      .agg(topk(col("__item_id"), score).as("__top"))
-      .select(col(queryIdCol),
-        col("__top.ids").as("candidate_ids"),
-        col("__top.scores").as("candidate_scores"))
-  }
+  /** The request-row key column of [[keyed]]. */
+  val RowKey = "__row"
 
-  /** One row per row of `queries` even when every list it probed was
-    * empty (the inner probe join drops such queries): those get empty
-    * candidate arrays. */
-  def keepEmptyQueries(queries: DataFrame, queryIdCol: String, hits: DataFrame): DataFrame =
-    queries.select(col(queryIdCol)).join(hits, Seq(queryIdCol), "left")
-      .select(col(queryIdCol),
-        coalesce(col("candidate_ids"), typedLit(Array.empty[Long])).as("candidate_ids"),
-        coalesce(col("candidate_scores"), typedLit(Array.empty[Double]))
-          .as("candidate_scores"))
+  /** `queries` with each row tagged by its own [[RowKey]], the unit the
+    * top-k groups on. The key is nondeterministic: a plan must read it
+    * from this one evaluation (never from a second scan of the request,
+    * whose row order a recomputed shuffle does not keep). */
+  def keyed(queries: DataFrame): DataFrame =
+    queries.withColumn(RowKey, monotonically_increasing_id())
+
+  /** The k best `__item_id`s per request row ([[RowKey]], `queryIdCol`)
+    * of scored candidate pairs: the bounded-heap [[TopKAggregator]]
+    * (partial top-k map-side, no global sort), ties broken by the lower
+    * id, NaN scores dropped: `(RowKey, queryIdCol, carry…,
+    * candidate_ids, candidate_scores)`. `carry` aggregates ride along (a
+    * per-row value, e.g. `first` of the query vector). */
+  def topK(candidates: DataFrame, queryIdCol: String, k: Int, score: Column,
+      carry: Column*): DataFrame = {
+    val topk = udaf(new TopKAggregator(k))
+    candidates.groupBy(col(RowKey), col(queryIdCol))
+      .agg(topk(col("__item_id"), score).as("__top"), carry: _*)
+      .withColumn("candidate_ids", col("__top.ids"))
+      .withColumn("candidate_scores", col("__top.scores"))
+      .drop("__top")
+  }
 
   /** `(query, rank, item_id, score)` rows of a retriever's output. */
   def rows(out: DataFrame, queryIdCol: String): DataFrame =
@@ -92,19 +98,20 @@ object Retriever {
   * for comparison):
   *
   * {{{
-  *   op             null query vector  all probed lists empty  repeated query id
-  *   TopKRetrieval  no row             (every item is scored)  one row; identical rows count once
-  *   AnnIvf         no row             row, empty arrays       one row per request row; candidates repeat
-  *   AnnSq          no row             row, empty arrays       one row per request row; candidates repeat
-  *   AnnLsh         no row             no row                  one row; candidates repeat
-  *   AnnIvfPq       no row             no row                  one row; candidates repeat
+  *   op             null query vector  all probed lists empty
+  *   TopKRetrieval  no row             (every item is scored)
+  *   AnnIvf         no row             row, empty arrays
+  *   AnnSq          no row             row, empty arrays
+  *   AnnLsh         no row             no row
+  *   AnnIvfPq       no row             no row
   * }}}
   *
-  * A repeated query id merges into one top-k, because the top-k groups
-  * by query id: every request row with that id contributes its probed
-  * candidates, so a row sent twice lists each candidate twice. The
-  * resident path ([[Resident.annProbe]]) serves only provably distinct
-  * ids. */
+  * Each request row with a non-null vector answers for itself alone
+  * (LSH/PQ still drop a row whose probed lists are all empty): the probe
+  * join and the top-k run per row ([[Retriever.keyed]]), so a repeated
+  * query id gets one answer per request row, each equal to that row sent
+  * alone. The resident path ([[Resident.annProbe]]) answers the same way
+  * for any request. */
 trait AnnIndex extends Retriever {
   def items: DataFrame
 
@@ -130,9 +137,11 @@ trait AnnIndex extends Retriever {
   /** The request rows the op probes — its own null handling. */
   protected def queries(df: DataFrame): DataFrame
 
-  /** The top-k of the probed `candidates` (queries joined to the index
-    * rows of their lists); `df` is the request frame. */
-  protected def ranked(candidates: DataFrame, df: DataFrame): DataFrame
+  /** The keyed top-k ([[Retriever.topK]]) of the probed `candidates`:
+    * keyed queries joined to the index rows of their lists (for
+    * [[keepEmpty]] a left join, so an empty probed list reaches the heap
+    * as one null-item, NaN-scored row and the group finishes empty). */
+  protected def ranked(candidates: DataFrame): DataFrame
 
   /** The answer from a resident index, when the op holds one that
     * serves `df`. */
@@ -145,9 +154,12 @@ trait AnnIndex extends Retriever {
     * the live frame of a sink-maintained index log): the same probe
     * plan, with no assignment work for the catalog. */
   def transformIndexed(df: DataFrame, index: DataFrame): DataFrame = {
-    val qs = queries(df)
-    val hits = ranked(withProbes(qs).join(index, Seq(listCol)), df)
-    if (keepEmpty) Retriever.keepEmptyQueries(qs, queryIdCol, hits) else hits
+    val probes = withProbes(Retriever.keyed(queries(df)))
+    val candidates =
+      if (!keepEmpty) probes.join(index, Seq(listCol))
+      else probes.join(index, Seq(listCol), "left")
+        .withColumn("__item_id", coalesce(col("__item_id"), lit(-1L)))
+    ranked(candidates).drop(Retriever.RowKey)
   }
 
   /** Incremental index ingest: `index` plus the rows of `newItems`,

@@ -46,14 +46,12 @@ case class TopKRetrieval(
     // a null query vector has no similarity to anything: drop the row
     // (same contract as AnnLsh, whose null bucket never joins) — without
     // this, the tuple encoder silently coerces the null score to 0.0 and
-    // the user receives arbitrary candidates "scored" 0. distinct():
-    // duplicate request rows would feed every item twice and duplicate
-    // ids inside top-k (PredictImplicit.requestedUsers discipline)
+    // the user receives arbitrary candidates "scored" 0
     Retriever.topK(
-      df.where(col(queryVecCol).isNotNull)
-        .select(col(queryIdCol), col(queryVecCol)).distinct()
+      Retriever.keyed(df.where(col(queryVecCol).isNotNull)
+        .select(col(queryIdCol), col(queryVecCol)))
         .join(it),  // broadcast nested loop: every query scores every item
       queryIdCol, k, coalesce(Retriever.similarity(metric, col(queryVecCol),
-        col("__item_vec")), lit(Double.NaN)))
+        col("__item_vec")), lit(Double.NaN))).drop(Retriever.RowKey)
   }
 }

@@ -97,5 +97,38 @@ class ServeSpec extends SparkSpec {
     val (_, bulkJobs, bulkTasks) = counted(bulk)
     assert(bulkJobs == 1 && bulkTasks > 1,
       s"an 8,192-row request must be one job on several tasks: $bulkJobs jobs, $bulkTasks tasks")
+
+    // a parquet request through Serve.score, every user three times in
+    // three files: served resident, one row per request row, each the
+    // pre-save answer for its user
+    val before = ens.transform(requests).collect().map(r => r.getLong(0) -> r).toMap
+    val once = requests.filter(col("user_id").isin(before.keys.toSeq.sorted.take(6): _*))
+      .collect().toSeq
+    val reqDir = java.nio.file.Files.createTempDirectory("serve_rep_req").toString
+    spark.createDataFrame((once ++ once ++ once).asJava, requests.schema)
+      .repartition(3).write.mode("overwrite").parquet(reqDir)
+    assert(spark.read.parquet(reqDir).rdd.getNumPartitions >= 3)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val outDir = java.nio.file.Files.createTempDirectory("serve_rep_out").toString
+    spark.listenerManager.register(listener)
+    try Serve.score(spark, dir, reqDir, outDir)
+    finally {
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    val written = plans.asScala.filter(_.contains("InsertIntoHadoopFsRelation"))
+    assert(written.size == 1, s"one write: ${plans.asScala.mkString("\n")}")
+    assert(!written.head.contains("Exchange") && !written.head.contains("Join"),
+      s"a parquet request must serve resident, without a shuffle or join:\n${written.head}")
+    val out = spark.read.parquet(outDir).collect()
+    assert(out.length == 3 * once.length, "one row per request row")
+    assert(out.forall(r => r == before(r.getLong(0))),
+      "each row equals the pre-save answer for its user")
   }
 }

@@ -276,7 +276,9 @@ class EdgeCaseSpec extends SparkSpec {
       "AnnIvf" -> Seq(7L -> Seq(1L), 9L -> Seq.empty[Long]),
       "AnnSq" -> Seq(7L -> Seq(1L), 9L -> Seq.empty[Long]),
       "AnnLsh" -> Seq(7L -> Seq(1L)),
-      "AnnIvfPq" -> Seq(7L -> Seq(1L)))
+      "AnnIvfPq" -> Seq(7L -> Seq(1L)),
+      "AnnLsh resident" -> Seq(7L -> Seq(1L)),
+      "AnnIvf resident" -> Seq(7L -> Seq(1L), 9L -> Seq.empty[Long]))
     for ((name, op) <- retrievers(items)) {
       val rows = op.transform(req3).orderBy("user_id").collect()
       assert(rows.map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq == want(name),
@@ -286,21 +288,103 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   /** The five top-k retrievers over `items` for `(user_id, user_vec)`
-    * requests. The quantizers split the plane at x = 0 (IVF/SQ/PQ
-    * centroids (1, 0) and (-1, 0), LSH hyperplanes through the origin)
-    * and probe one list, so a query opposite every item probes only
-    * empty lists. */
+    * requests, plus AnnLsh and AnnIvf serving from their resident index.
+    * The quantizers split the plane at x = 0 (IVF/SQ/PQ centroids (1, 0)
+    * and (-1, 0), LSH hyperplanes through the origin) and probe one
+    * list, so a query opposite every item probes only empty lists. */
   private def retrievers(items: DataFrame): Seq[(String, graft.core.EnsembleOp)] = {
     val centers = Seq(Seq(1.0, 0.0), Seq(-1.0, 0.0))
+    val lsh = AnnLsh(items, "user_id", "user_vec", k = 2, numBits = 4,
+      nprobe = 1, metric = "dot", center = Some(Seq(0.0, 0.0)))
+    val ivf = AnnIvf(items, centers, "user_id", "user_vec", k = 2, nprobe = 1)
+    val residentLsh = lsh.withResidentTable
+    val residentIvf = ivf.withResidentTable
+    assert(residentLsh.resident.isDefined && residentIvf.resident.isDefined)
     Seq(
       "TopKRetrieval" -> TopKRetrieval(items, "user_id", "user_vec", k = 2),
-      "AnnIvf" -> AnnIvf(items, centers, "user_id", "user_vec", k = 2, nprobe = 1),
+      "AnnIvf" -> ivf,
       "AnnSq" -> AnnSq(items, centers, Seq(-1.0, 0.0), Seq(1.0, 1.0),
         "user_id", "user_vec", k = 2, nprobe = 1),
-      "AnnLsh" -> AnnLsh(items, "user_id", "user_vec", k = 2, numBits = 4,
-        nprobe = 1, metric = "dot", center = Some(Seq(0.0, 0.0))),
+      "AnnLsh" -> lsh,
       "AnnIvfPq" -> AnnIvfPq(items, centers, Seq(Seq(Seq(0.0, 0.0))),
-        "user_id", "user_vec", k = 2, nprobe = 1))
+        "user_id", "user_vec", k = 2, nprobe = 1),
+      "AnnLsh resident" -> residentLsh,
+      "AnnIvf resident" -> residentIvf)
+  }
+
+  /** A retriever's output rows `(id, candidate_ids, candidate_scores)`,
+    * sorted: the multiset two answers are compared as. */
+  private def answers(out: DataFrame): Seq[(Long, Seq[Long], Seq[Double])] =
+    sorted(out.collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq, r.getSeq[Double](2).toSeq)))
+
+  private def sorted(a: Seq[(Long, Seq[Long], Seq[Double])]) =
+    a.sortBy(r => (r._1, r._2.mkString(","), r._3.mkString(",")))
+
+  /** What `op` answers when each row of `req` is sent alone. */
+  private def aloneAnswers(op: graft.core.EnsembleOp, req: DataFrame) =
+    answers(req.collect().toSeq.map(r => op.transform(
+      spark.createDataFrame(java.util.Arrays.asList(r), req.schema))).reduce(_ union _))
+
+  test("retrieval ops: each request row answers for itself, as if sent alone") {
+    import spark.implicits._
+    val items = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.5, 0.2)),
+      (3L, Seq(-1.0, 0.0)), (4L, Seq(-0.5, -0.2))).toDF("item_id", "embedding")
+    // a repeated identical row, and one id with two opposite vectors
+    val repeated = Seq((7L, Seq(1.0, 0.0)), (7L, Seq(1.0, 0.0)), (8L, Seq(-1.0, 0.0)))
+      .toDF("user_id", "user_vec")
+    val twoVecs = Seq((7L, Seq(1.0, 0.0)), (7L, Seq(-1.0, 0.0)))
+      .toDF("user_id", "user_vec")
+    for ((name, op) <- retrievers(items); req <- Seq(repeated, twoVecs)) {
+      val got = answers(op.transform(req))
+      assert(got.size == req.count(), s"$name: one row per request row: $got")
+      assert(got == aloneAnswers(op, req), name)
+      assert(got.forall(a => a._2.distinct == a._2), s"$name: a repeated candidate in $got")
+    }
+  }
+
+  test("AnnIvfPq refine: a repeated request row re-ranks only its own nominees") {
+    import spark.implicits._
+    val items = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.5, 0.2)), (3L, Seq(0.9, 0.1)))
+      .toDF("item_id", "embedding")
+    val pq = AnnIvfPq(items, Seq(Seq(1.0, 0.0), Seq(-1.0, 0.0)), Seq(Seq(Seq(0.0, 0.0))),
+      "user_id", "user_vec", k = 2, nprobe = 1, refine = 3)
+    val req = Seq((7L, Seq(1.0, 0.0)), (7L, Seq(1.0, 0.0))).toDF("user_id", "user_vec")
+    val got = answers(pq.transform(req))
+    assert(got == Seq.fill(2)((7L, Seq(1L, 3L), Seq(1.0, 0.9))), s"$got")
+    assert(got == aloneAnswers(pq, req))
+  }
+
+  test("retrieval ops: a shuffled parquet request keys each row once") {
+    import spark.implicits._
+    val items = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.5, 0.2)), (3L, Seq(0.8, -0.3)))
+      .toDF("item_id", "embedding")
+    val centers = Seq(Seq(1.0, 0.0), Seq(-1.0, 0.0))
+    // (-1, 0) probes only the empty list; ids repeat with different vectors
+    val vecs = Seq(Some(Seq(1.0, 0.0)), Some(Seq(0.6, 0.4)), Some(Seq(-1.0, 0.0)), None)
+    val dir = java.nio.file.Files.createTempDirectory("edge_req").toString
+    (0 until 24).map(i => (i % 5L, vecs(i % 4))).toDF("user_id", "user_vec")
+      .repartition(3).write.mode("overwrite").parquet(dir)
+    val req = spark.read.parquet(dir).repartition(4)
+    assert(req.rdd.getNumPartitions >= 3)
+    val ops = Seq(
+      "AnnIvf" -> AnnIvf(items, centers, "user_id", "user_vec", k = 2, nprobe = 1),
+      "AnnSq" -> AnnSq(items, centers, Seq(-1.0, -1.0), Seq(1.0, 1.0),
+        "user_id", "user_vec", k = 2, nprobe = 1),
+      "AnnIvfPq" -> AnnIvfPq(items, centers, Seq(Seq(Seq(0.0, 0.0))),
+        "user_id", "user_vec", k = 2, nprobe = 1, refine = 3))
+    for ((name, op) <- ops) {
+      // each row's answer depends on its vector only: send each vector
+      // alone once and give every request row its vector's answer
+      val alone = vecs.map(v => v -> answers(op.transform(
+        Seq((0L, v)).toDF("user_id", "user_vec"))).map(a => (a._2, a._3))).toMap
+      val rows = req.collect().toSeq.map(r =>
+        (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getSeq[Double](1).toSeq)))
+      val expected = sorted(rows.flatMap { case (id, v) => alone(v).map(a => (id, a._1, a._2)) })
+      assert(answers(op.transform(req)) == expected, name)
+      if (name != "AnnIvfPq")
+        assert(expected.count(_._2.isEmpty) == 6, s"$name: the empty-list rows keep their row")
+    }
   }
 
   test("Bucketize: half-open bin edges, null passes through null") {

@@ -183,12 +183,14 @@ class ModelOpsSpec extends SparkSpec {
     val q = Seq((10L, Seq(1.0, 0.0)), (10L, Seq(1.0, 0.0)))
       .toDF("qid", "qvec")
     val out = TopKRetrieval(items, "qid", "qvec", k = 4).transform(q).collect()
-    assert(out.length == 1, "duplicate query rows collapse to one")
-    val ids = out.head.getAs[scala.collection.Seq[Long]]("candidate_ids")
-    // both real items score negative; a null item would have surfaced as
-    // a phantom 0.0-scored leader — and dup queries would double the ids
-    assert(ids.toSeq == Seq(2L, 1L),
-      s"no phantom null-vector candidate, no duplicated ids: $ids")
+    assert(out.length == 2, "each request row answers for itself")
+    for (row <- out) {
+      val ids = row.getAs[scala.collection.Seq[Long]]("candidate_ids")
+      // both real items score negative; a null item would have surfaced as
+      // a phantom 0.0-scored leader — and merged dup queries would double the ids
+      assert(ids.toSeq == Seq(2L, 1L),
+        s"no phantom null-vector candidate, no duplicated ids: $ids")
+    }
   }
 
   test("PredictClassifier scores null feature rows as NULL instead of NPE-ing") {
